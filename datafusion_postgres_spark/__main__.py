@@ -30,47 +30,26 @@ def main() -> None:
                     help="Spark master (default local[$SPARK_GRAFT_CPUS])")
     args = ap.parse_args()
 
-    from datafusion_postgres_spark.session import SparkPgEngine, build_spark
     from datafusion_postgres_spark.server.pgwire import PgWireServer
+    from datafusion_postgres_spark.session import build_spark
+    from datafusion_postgres_spark.sources.registry import (
+        read_file, register_directory)
 
+    # the files become temp views of the root session, which the server
+    # uses as its template: every connection's clone starts with them
     spark = build_spark(master=args.master)
-    # register into the root session so every connection's newSession
-    # inherits nothing — registration happens via a shared bootstrap engine
-    bootstrap = SparkPgEngine(spark)
     registered = []
     if args.directory:
-        registered += bootstrap.register_directory(args.directory)
+        registered += register_directory(spark, args.directory)
     for fmt in ("csv", "json", "parquet", "arrow", "avro"):
         for spec in getattr(args, fmt):
             name, _, path = spec.partition("=")
             if not path:
                 ap.error(f"--{fmt} expects NAME=PATH, got {spec!r}")
-            bootstrap.register_file(name, path, fmt)
+            read_file(spark, path, fmt).createOrReplaceTempView(name)
             registered.append(name)
 
-    # global temp views are visible across newSession()s; re-register the
-    # tables there so per-connection engines see them
-    for name in registered:
-        spark.table(name).createOrReplaceGlobalTempView(name)
-
-    class _SharedEngineServer(PgWireServer):
-        pass
-
     server = PgWireServer(spark, host=args.host, port=args.port)
-
-    # per-connection engines resolve global temp views through the
-    # global_temp database; also mirror them as session views at connect
-    orig_factory = server._server.engine_factory
-
-    def factory():
-        eng = orig_factory()
-        for name in registered:
-            eng.spark.table(f"global_temp.{name}").createOrReplaceTempView(name)
-        eng._catalog_dirty = True
-        return eng
-
-    server._server.engine_factory = factory
-
     print(f"serving {len(registered)} table(s) "
           f"({', '.join(registered) or 'none'}) "
           f"on postgresql://{server.host}:{server.port}")

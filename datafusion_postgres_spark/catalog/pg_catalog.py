@@ -95,7 +95,8 @@ def spark_type_to_pg_oid(dt: str) -> tuple[int, int]:
 class OidRegistry:
     """Deterministic OID assignment (pg_catalog.rs:196-256 analog):
     fixed OIDs for namespaces, then a counter from 16384 keyed by qualified
-    name, stable within a session."""
+    name, stable within a session. Each engine owns one and passes it to
+    :func:`refresh`."""
 
     def __init__(self):
         self._cache: dict[str, int] = {}
@@ -106,13 +107,6 @@ class OidRegistry:
             self._cache[qualified_name] = self._next
             self._next += 1
         return self._cache[qualified_name]
-
-
-_REGISTRIES: dict[int, OidRegistry] = {}
-
-
-def _registry(spark) -> OidRegistry:
-    return _REGISTRIES.setdefault(id(spark), OidRegistry())
 
 
 def _view(spark, name: str, schema: StructType, rows: list) -> None:
@@ -150,7 +144,7 @@ def _user_tables(spark) -> list:
 def bootstrap(spark: SparkSession) -> None:
     """Create all pg_catalog views (static content + dynamic snapshot)."""
     _static_views(spark)
-    refresh(spark)
+    refresh(spark, OidRegistry())
 
 
 # Real PG relation OIDs for the core catalogs (public knowledge,
@@ -181,17 +175,18 @@ _VIEWISH_CATALOG = {
 _SHARED_CATALOGS = {"pg_database", "pg_authid", "pg_auth_members",
                     "pg_tablespace", "pg_shdescription", "pg_shseclabel"}
 
-_CATALOG_SELF_ROWS: dict[int, tuple[list, list]] = {}
+_CATALOG_SELF_ROWS: tuple[list, list] | None = None
 
 
 def _catalog_self_rows(spark) -> tuple[list, list]:
     """pg_class / pg_attribute rows for the catalog relations themselves
     (real PG lists its own catalogs; ``\\dS``, ``\\d pg_class`` and
-    ``to_regclass('pg_class')`` depend on it). View schemas are static per
-    session, so this is computed once and cached."""
-    key = id(spark)
-    if key in _CATALOG_SELF_ROWS:
-        return _CATALOG_SELF_ROWS[key]
+    ``to_regclass('pg_class')`` depend on it). The catalog views have the
+    same schemas in every session, so this is computed once per process,
+    from the first session's live views."""
+    global _CATALOG_SELF_ROWS
+    if _CATALOG_SELF_ROWS is not None:
+        return _CATALOG_SELF_ROWS
     from datafusion_postgres_spark.catalog.names import (
         INFORMATION_SCHEMA_TABLES, PG_CATALOG_TABLES)
     cls_rows: list = []
@@ -223,13 +218,15 @@ def _catalog_self_rows(spark) -> tuple[list, list]:
                 attr_rows.append((oid, col.name, type_oid, i, typlen,
                                   -1, 0, not col.nullable, False, "", "",
                                   False, True, 0))
-    _CATALOG_SELF_ROWS[key] = (cls_rows, attr_rows)
-    return cls_rows, attr_rows
+    _CATALOG_SELF_ROWS = (cls_rows, attr_rows)
+    return _CATALOG_SELF_ROWS
 
 
-def refresh(spark: SparkSession) -> None:
-    """Rebuild the dynamic tables from the live session catalog."""
-    reg = _registry(spark)
+def refresh(spark: SparkSession, oids: OidRegistry,
+            session_vars: dict | None = None) -> None:
+    """Rebuild the dynamic tables from the live session catalog, with
+    table OIDs from the session's ``oids`` and pg_settings from its GUCs
+    (``None`` = the defaults)."""
     tables = _user_tables(spark)
 
     # ---- pg_namespace (pg_catalog/pg_namespace.rs) ----
@@ -279,7 +276,7 @@ def refresh(spark: SparkSession) -> None:
     cls_rows = []
     attr_rows = []
     for tbl in tables:
-        oid = reg.oid(f"public.{tbl.name}")
+        oid = oids.oid(f"public.{tbl.name}")
         cols = spark.catalog.listColumns(tbl.name)
         cls_rows.append((oid, tbl.name, PUBLIC_NAMESPACE_OID, 0, 0, 10, 2,
                          oid, 0, 0, float(-1), 0, 0, False, False, "p", "r",
@@ -357,7 +354,7 @@ def refresh(spark: SparkSession) -> None:
           [(10, "postgres", True, True, True, True, True, False, -1,
             "********", None, True, None)])
 
-    refresh_settings(spark, None)
+    refresh_settings(spark, session_vars)
 
     # ---- empty view-style tables (pg_views.rs, pg_replication_slot.rs) ----
     _build_view_tables(spark, tables)
@@ -371,23 +368,14 @@ def refresh(spark: SparkSession) -> None:
           attr_rows + cat_attr)
 
 
-_LAST_SESSION_VARS: dict | None = None
-
-
 def refresh_settings(spark: SparkSession, session_vars: dict | None) -> None:
     """(Re)build pg_settings from the LIVE session GUCs, so
     ``SELECT * FROM pg_settings WHERE name = 'x'`` agrees with SET/SHOW
     (pg_settings.rs builds from the reference's session state the same
-    way; here the SET hook triggers the rebuild)."""
+    way; here the SET hook and :func:`refresh` trigger the rebuild)."""
     from pyspark.sql.types import StringType, StructField, StructType
     from datafusion_postgres_spark.server.session_state import (
         DEFAULT_SESSION_VARS)
-
-    global _LAST_SESSION_VARS
-    if session_vars is None:
-        session_vars = _LAST_SESSION_VARS  # DDL-triggered rebuilds keep GUCs
-    else:
-        _LAST_SESSION_VARS = dict(session_vars)
 
     settings_schema = StructType([
         StructField("name", StringType()), StructField("setting", StringType()),

@@ -855,9 +855,6 @@ SQL_UDTFS: list[tuple[str, str, str, str]] = [
      "AS t(fktable, fkcols, pktable, pkcols, is_array, is_opt)"),
 ]
 
-_REGISTERED_SESSIONS: set[int] = set()
-
-
 def _needs_catalog(body: str) -> bool:
     """SQL UDF bodies that query the pg_catalog views (``pg_catalog_pg_*``
     temp-view names) can only be analyzed after ``bootstrap``. String
@@ -865,7 +862,10 @@ def _needs_catalog(body: str) -> bool:
     return "pg_catalog_pg_" in body
 
 
-_FUNC_SESSIONS: set[int] = set()
+# Each step below is done in a session (or a clone of one) when the last
+# function it registers exists there: the state lives in the session.
+_FUNCTIONS_DONE = "st_geomfromewkb"  # register_geo's last registration
+_CATALOG_DONE = [n for n, _a, _r, b in SQL_UDFS if _needs_catalog(b)][-1]
 
 
 def register_functions(spark: SparkSession) -> None:
@@ -876,8 +876,7 @@ def register_functions(spark: SparkSession) -> None:
     Server sessions use :func:`register_all`, which adds the catalog views
     and the catalog-querying UDFs (to_regclass & friends) on top.
     """
-    key = id(spark)
-    if key in _FUNC_SESSIONS:
+    if spark.catalog.functionExists(_FUNCTIONS_DONE):
         return
     # python-backed UDFs first: SQL UDF bodies that wrap them (normalize,
     # pg_sleep_for/until) are analyzed at CREATE time
@@ -890,8 +889,6 @@ def register_functions(spark: SparkSession) -> None:
         spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
                   f"RETURNS {ret} RETURN {body}")
     for name, args, ret, body in SQL_UDTFS:
-        if _needs_catalog(body):
-            continue
         try:
             spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
                       f"RETURNS {ret} RETURN {body}")
@@ -902,7 +899,6 @@ def register_functions(spark: SparkSession) -> None:
     register_formatting(spark)
     from datafusion_postgres_spark.functions.geo import register_geo
     register_geo(spark)
-    _FUNC_SESSIONS.add(key)
 
 
 def register_all(spark: SparkSession) -> None:
@@ -911,33 +907,23 @@ def register_all(spark: SparkSession) -> None:
     Full surface = catalog-free functions + pg_catalog views + the UDFs
     whose bodies query those views (analyzed at CREATE time, so the views
     must exist first)."""
-    key = id(spark)
-    if key in _REGISTERED_SESSIONS:
+    if spark.catalog.functionExists(_CATALOG_DONE):
         return
     from datafusion_postgres_spark.catalog.pg_catalog import bootstrap
     bootstrap(spark)
     register_functions(spark)
     for name, args, ret, body in SQL_UDFS:
-        if not _needs_catalog(body):
-            continue
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-                  f"RETURNS {ret} RETURN {body}")
-    for name, args, ret, body in SQL_UDTFS:
-        if not _needs_catalog(body):
-            continue
-        try:
+        if _needs_catalog(body):
             spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
                       f"RETURNS {ret} RETURN {body}")
-        except Exception:
-            pass
-    _REGISTERED_SESSIONS.add(key)
 
 
 def refresh_current_setting(spark: SparkSession, session_vars: dict) -> None:
     """Re-register ``current_setting`` with the SESSION'S live GUC values
     (SQL UDF bodies are constant-folded at plan time, so a SET must rebuild
-    the CASE chain — each pg-wire connection has its own spark.newSession(),
-    which scopes the temp function to that connection)."""
+    the CASE chain — each pg-wire connection has its own clone of the
+    server's template session, which scopes the temp function to that
+    connection)."""
     extra = {"server_version": "15.0", "server_version_num": "150000",
              "max_index_keys": "32"}
     merged = dict(extra)

@@ -5,9 +5,10 @@ Reference parity: the pgwire serving layer
 ``handlers.rs`` simple/extended query handlers). Implemented from the
 public PostgreSQL Frontend/Backend protocol documentation.
 
-Per connection: its own ``SparkPgEngine`` over ``spark.newSession()`` —
-isolated temp views + conf, shared executors/cache (our improvement over
-the reference's shared-SessionContext TimeZone mutation, SURVEY.md §7).
+Per connection: its own ``SparkPgEngine`` over a clone of the server's
+template session, registered once — isolated SET values, temp views and
+functions, shared executors/cache (our improvement over the reference's
+shared-SessionContext TimeZone mutation, SURVEY.md §7).
 
 Supported: startup (trust auth / cleartext password), SSLRequest refusal,
 simple query protocol (multi-statement), extended protocol
@@ -63,6 +64,13 @@ def _sqlstate_of(exc: Exception) -> str:
     if "cancelled" in str(exc).lower() or "canceled" in str(exc).lower():
         return "57014"
     return "XX000"
+
+
+def _error_text(exc: Exception) -> str:
+    """The first non-empty line of an error, capped: Spark messages such as
+    ParseException start with a newline and go on with the SQL text."""
+    lines = [ln.strip() for ln in str(exc).splitlines() if ln.strip()]
+    return (lines[0] if lines else type(exc).__name__)[:500]
 
 
 def _cstr(s: str) -> bytes:
@@ -240,7 +248,7 @@ class _Conn(socketserver.BaseRequestHandler):
         try:
             server_first = scram.handle_client_first(client_first.decode())
         except ValueError as exc:
-            self._error("28000", str(exc))
+            self._error("28000", _error_text(exc))
             return False
         self._send(_msg(b"R", struct.pack("!I", 11) + server_first.encode()))
         payload = self._recv_password_message()
@@ -325,7 +333,7 @@ class _Conn(socketserver.BaseRequestHandler):
                 self._maybe_parameter_status(sql)
         except Exception as exc:
             self.engine.state.statement_failed()
-            self._error(_sqlstate_of(exc), str(exc).split("\n")[0][:500])
+            self._error(_sqlstate_of(exc), _error_text(exc))
         self._send(self._ready())
 
     def _enter_job_group(self):
@@ -525,7 +533,7 @@ class _Conn(socketserver.BaseRequestHandler):
             self._send(_msg(b"1", b""))
         except Exception as exc:
             self._in_error = True
-            self._error(_sqlstate_of(exc), str(exc)[:300])
+            self._error(_sqlstate_of(exc), _error_text(exc))
 
     def _on_bind(self, payload: bytes):
         try:
@@ -571,7 +579,7 @@ class _Conn(socketserver.BaseRequestHandler):
             self._send(_msg(b"2", b""))
         except Exception as exc:
             self._in_error = True
-            self._error(_sqlstate_of(exc), str(exc)[:300])
+            self._error(_sqlstate_of(exc), _error_text(exc))
 
     def _on_describe(self, payload: bytes):
         kind, name = payload[:1], payload[1:].rstrip(b"\x00").decode()
@@ -631,7 +639,7 @@ class _Conn(socketserver.BaseRequestHandler):
         except Exception as exc:
             self.engine.state.statement_failed()
             self._in_error = True
-            self._error(_sqlstate_of(exc), str(exc)[:500])
+            self._error(_sqlstate_of(exc), _error_text(exc))
 
     def _send_result_no_rowdesc(self, portal_key, res, max_rows: int,
                                 result_formats=None):
@@ -776,7 +784,8 @@ class PgWireServer:
                  ssl_certfile: str | None = None,
                  ssl_keyfile: str | None = None):
         from datafusion_postgres_spark.server.auth import AuthManager
-        from datafusion_postgres_spark.session import SparkPgEngine
+        from datafusion_postgres_spark.session import (
+            SparkPgEngine, clone_session)
 
         self.spark = spark
         self.auth = auth or AuthManager()
@@ -786,8 +795,15 @@ class PgWireServer:
             ssl_context = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
             ssl_context.load_cert_chain(ssl_certfile, ssl_keyfile)
 
+        register_lock = threading.Lock()
+
         def engine_factory():
-            return SparkPgEngine(spark.newSession())
+            # registration is lazy, so the one bootstrap falls inside the
+            # first connection's start-up; later calls find it done
+            from datafusion_postgres_spark.functions import register_all
+            with register_lock:
+                register_all(spark)
+            return SparkPgEngine(clone_session(spark))
 
         sem = threading.BoundedSemaphore(max_connections)
 

@@ -21,11 +21,13 @@ class QueryCanceled(RuntimeError):
 
 def run_with_timeout(spark, fn: Callable[[], R], timeout_secs: float) -> R:
     """Run ``fn`` (a Spark action) under a job group; cancel the group when
-    the deadline passes. timeout_secs <= 0 means no timeout."""
+    the deadline passes. timeout_secs <= 0 means no timeout. A group the
+    thread already has (a connection's CancelRequest group) is kept."""
     if timeout_secs <= 0:
         return fn()
     sc = spark.sparkContext
-    group = f"stmt-timeout-{uuid.uuid4().hex[:12]}"
+    current = sc.getLocalProperty("spark.jobGroup.id")
+    group = current or f"stmt-timeout-{uuid.uuid4().hex[:12]}"
     timed_out = threading.Event()
 
     def cancel():
@@ -36,7 +38,8 @@ def run_with_timeout(spark, fn: Callable[[], R], timeout_secs: float) -> R:
             pass
 
     timer = threading.Timer(timeout_secs, cancel)
-    sc.setJobGroup(group, "statement with timeout", interruptOnCancel=True)
+    if current is None:
+        sc.setJobGroup(group, "statement with timeout", interruptOnCancel=True)
     timer.start()
     try:
         result = fn()
@@ -53,4 +56,5 @@ def run_with_timeout(spark, fn: Callable[[], R], timeout_secs: float) -> R:
         raise
     finally:
         timer.cancel()
-        sc.setJobGroup(None, None)
+        if current is None:
+            sc.setJobGroup(None, None)

@@ -6,9 +6,10 @@ Reference parity: the serving layer of datafusion-postgres —
 ``datafusion-postgres/src/handlers.rs:154-233`` (simple-query lifecycle).
 
 Spark-first design: one shared ``SparkSession`` per process; each client
-connection gets ``spark.newSession()`` (isolated temp views + conf, shared
-cached data / executors) — this improves on the reference, which mutates a
-single shared SessionContext for TimeZone (SURVEY.md §7 "hard parts").
+connection gets a :func:`clone_session` of the server's registered template
+(isolated SET values, temp views + functions; shared cached data /
+executors) — this improves on the reference, which mutates a single shared
+SessionContext for TimeZone (SURVEY.md §7 "hard parts").
 """
 
 from __future__ import annotations
@@ -99,6 +100,14 @@ def build_spark(app_name: str = "datafusion-postgres-spark",
         return builder.getOrCreate()
 
 
+def clone_session(spark: SparkSession) -> SparkSession:
+    """A new session starting with a copy of ``spark``'s SQL conf, temp
+    views and temp functions; later changes stay on their own side.
+    ``cloneSession()`` is ``private[sql]`` in Scala but public in the
+    bytecode, so py4j can call it (verified on the pinned pyspark 4.1.2)."""
+    return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+
+
 @dataclass
 class ExecutionResult:
     """Streamed query result — the Spark analog of the reference's
@@ -152,11 +161,16 @@ class SparkPgEngine:
         from datafusion_postgres_spark.server.auth import AuthManager
         from datafusion_postgres_spark.server.session_state import SessionState
         from datafusion_postgres_spark.server.hooks import HookChain
+        from datafusion_postgres_spark.catalog.pg_catalog import OidRegistry
 
         self.transpiler = PostgresTranspiler()
         self.state = SessionState()
         self.hooks = HookChain(self)
         self.auth = AuthManager()
+        self.oids = OidRegistry()
+        # the session's catalog views may predate its tables (a clone's
+        # were built in the template), so the first catalog read refreshes
+        self._catalog_dirty = True
         from datafusion_postgres_spark.functions import register_all
         register_all(self.spark)
 
@@ -170,7 +184,9 @@ class SparkPgEngine:
 
     def register_directory(self, path: str) -> list[str]:
         from datafusion_postgres_spark.sources.registry import register_directory
-        return register_directory(self, path)
+        names = register_directory(self.spark, path)
+        self._catalog_dirty = True
+        return names
 
     # -- query execution ---------------------------------------------------
     def execute(self, sql: str) -> list[ExecutionResult]:
@@ -447,12 +463,12 @@ class SparkPgEngine:
         happened since the last build AND the statement touches catalog
         tables. (The reference recomputes on every scan, pg_class.rs:84 —
         the dirty flag is our many-tables-scale improvement.)"""
-        if not getattr(self, "_catalog_dirty", False):
+        if not self._catalog_dirty:
             return
         low = stmt.lower()
         if "pg_" in low or "information_schema" in low or "regclass" in low:
             from datafusion_postgres_spark.catalog.pg_catalog import refresh
-            refresh(self.spark)
+            refresh(self.spark, self.oids, self.state.vars)
             self._catalog_dirty = False
 
 

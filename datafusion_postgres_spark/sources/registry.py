@@ -83,14 +83,15 @@ def _read_arrow_ipc(spark: SparkSession, path: str) -> DataFrame:
         return spark.createDataFrame(table.to_pandas())
 
 
-def register_directory(engine, path: str) -> list[str]:
+def register_directory(spark: SparkSession, path: str) -> list[str]:
     """Map every recognized file in a directory to a table named after its
     stem (``main.rs:62-124`` analog)."""
     registered = []
     for fname in sorted(os.listdir(path)):
         stem, ext = os.path.splitext(fname)
         if ext in EXTENSION_FORMATS:
-            engine.register_file(stem, os.path.join(path, fname))
+            df = read_file(spark, os.path.join(path, fname))
+            df.createOrReplaceTempView(stem)
             registered.append(stem)
     return registered
 

@@ -287,6 +287,42 @@ class TestCancelRequest:
             srv.shutdown()
 
 
+    def test_cancel_under_statement_timeout(self, spark):
+        """The statement-timeout path keeps the connection's job group, so
+        a CancelRequest still reaches a statement running under it."""
+        srv = PgWireServer(spark, port=0)
+        srv.start_background()
+        try:
+            c = RawClient(srv.host, srv.port)
+            assert c.drain_startup()
+            pid, secret = c.backend_key
+            assert not c.query("SET statement_timeout = '120s'")["errors"]
+            result = {}
+
+            def run():
+                result.update(c.query(
+                    "SELECT MAX(a.id * b.id) FROM range(300000) a "
+                    "CROSS JOIN range(300000) b"))
+
+            t0 = time.monotonic()
+            t = threading.Thread(target=run)
+            t.start()
+            time.sleep(2.0)  # let the job start
+            cancel = socket.create_connection((srv.host, srv.port),
+                                              timeout=30)
+            cancel.sendall(struct.pack("!III", 16, 80877102, pid) +
+                           struct.pack("!I", secret))
+            cancel.close()
+            t.join(timeout=90)
+            assert not t.is_alive(), "statement was not cancelled"
+            assert time.monotonic() - t0 < 60
+            assert result["errors"][0][b"C"] == "57014"
+            assert c.query("SELECT 1")["tags"] == ["SELECT 1"]
+            c.close()
+        finally:
+            srv.shutdown()
+
+
 class TestExtendedLifecycle:
     @pytest.fixture()
     def restricted_engine(self, spark):
@@ -411,6 +447,22 @@ class TestExtendedWire:
         self._sync(wire)
         msgs = self._drain(wire)
         assert any(t == b"D" for t, _ in msgs)
+
+    def test_parse_error_message_not_empty(self, wire):
+        """Spark parse errors start with a newline; the client must still
+        get the error's first real line, over Q and over Parse/Bind/
+        Execute alike."""
+        res = wire.query("SELEC 1")
+        assert "PARSE_SYNTAX_ERROR" in res["errors"][0][b"M"]
+        self._parse(wire, "typo", "SELEC 1")
+        self._bind(wire, "", "typo")
+        self._execute(wire)
+        self._sync(wire)
+        errors = [{p[:1]: p[1:].decode() for p in payload.split(b"\x00")
+                   if p} for t, payload in self._drain(wire) if t == b"E"]
+        assert len(errors) == 1
+        assert "PARSE_SYNTAX_ERROR" in errors[0][b"M"]
+        assert "\n" not in errors[0][b"M"]
 
     def test_describe_insert_does_not_execute(self, wire):
         assert wire.query(

@@ -9,7 +9,7 @@ import pyarrow.ipc
 import pytest
 
 from datafusion_postgres_spark.sources.registry import (
-    read_file, register_directory,
+    read_file,
 )
 
 
@@ -68,7 +68,7 @@ def test_unknown_format_raises(spark, data_dir):
 
 
 def test_register_directory(engine, data_dir):
-    names = register_directory(engine, data_dir)
+    names = engine.register_directory(data_dir)
     assert names == ["arr", "climate", "events_x", "pq"]
     rows = list(engine.execute("SELECT count(*) FROM climate")[0].rows())
     assert rows[0][0] == 3
@@ -157,7 +157,7 @@ class TestAvroFallback:
                                               tmp_path_factory):
         p = self._write(tmp_path_factory, "null")
         d = os.path.dirname(p)
-        names = register_directory(engine, d)
+        names = engine.register_directory(d)
         assert "rec_null" in names
         rows = list(engine.execute(
             "SELECT count(*) AS n FROM rec_null")[0].rows())
