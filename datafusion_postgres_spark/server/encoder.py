@@ -4,12 +4,15 @@ Reference parity: the ``arrow-pg`` crate — type mapping
 (``arrow-pg/src/datatypes.rs:23-125`` ``into_pg_type``), text-format value
 encoding (``arrow-pg/src/encoder.rs:259-493``), list/struct encoding
 (``list_encoder.rs``, ``struct_encoder.rs``), row encoding
-(``row_encoder.rs:24-40``). Implements the TEXT wire format (what psql
-uses); binary format is a later phase.
+(``row_encoder.rs:24-40``). Implements the text format (what psql uses)
+and the binary format (result columns a Bind asks for in binary, COPY
+binary), plus the binary decoders for Bind parameters and COPY FROM.
 
-Spark-first: encoding happens at the serving edge over
-``toLocalIterator`` rows — the only place row-at-a-time work is
-appropriate (everything upstream stays columnar in the engine).
+Spark-first: encoding happens at the serving edge, one value at a time,
+over the rows the wire writer pulls from a result — ``toLocalIterator``
+rows (or ``collect`` under a statement timeout) for a Spark result, the
+driver-held rows for a hook answer. Everything upstream stays columnar in
+the engine.
 """
 
 from __future__ import annotations
@@ -423,20 +426,6 @@ def encode_row(row, schema: T.StructType,
     """One Spark Row → list of PG text-format values (row_encoder.rs)."""
     return [encode_value(v, f.dataType, extra_float_digits)
             for v, f in zip(row, schema.fields)]
-
-
-def encode_dataframe(df, extra_float_digits: int = 1):
-    """(fields, row-iterator) — the encode_dataframe analog
-    (arrow-pg/src/datatypes/df.rs:24-52): schema mapped once, rows
-    streamed through toLocalIterator, never collect()ed."""
-    fields = schema_to_pg_fields(df.schema)
-    schema = df.schema
-
-    def rows():
-        for row in df.toLocalIterator():
-            yield encode_row(row, schema, extra_float_digits)
-
-    return fields, rows()
 
 
 # ---------------------------------------------------------------------------

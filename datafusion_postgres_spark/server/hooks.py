@@ -11,8 +11,6 @@ import itertools
 import re
 from typing import TYPE_CHECKING
 
-from pyspark.sql.types import StringType, StructField, StructType
-
 if TYPE_CHECKING:
     from datafusion_postgres_spark.session import ExecutionResult, SparkPgEngine
 
@@ -126,7 +124,8 @@ class HookChain:
             pass
 
     def try_handle(self, stmt: str):
-        from datafusion_postgres_spark.session import ExecutionResult
+        from datafusion_postgres_spark.session import (
+            ExecutionResult, text_result)
 
         state = self.engine.state
         spark = self.engine.spark
@@ -183,10 +182,7 @@ class HookChain:
                     spark.conf.set("spark.sql.session.timeZone", value)
                 state.set_var(name, value)
                 self._refresh_current_setting()
-                df = spark.createDataFrame(
-                    [(value,)],
-                    StructType([StructField("set_config", StringType())]))
-                return ExecutionResult(df=df, command_tag="SELECT")
+                return text_result(["set_config"], [(value,)], "SELECT")
 
         # -- COPY TO STDOUT / FROM STDIN (beyond the reference: it has no
         # COPY support, but psql \copy and psycopg copy_expert send it) ----
@@ -285,20 +281,15 @@ class HookChain:
                 return ExecutionResult(df=df, command_tag="SHOW")
             if name == "all":
                 # SHOW ALL: every session var as (name, setting, description)
-                schema = StructType([StructField("name", StringType()),
-                                     StructField("setting", StringType()),
-                                     StructField("description", StringType())])
                 rows = [(k, v, "") for k, v in sorted(state.vars.items())]
-                return ExecutionResult(df=spark.createDataFrame(rows, schema),
-                                       command_tag="SHOW")
+                return text_result(["name", "setting", "description"], rows,
+                                   "SHOW")
             if name == "tables":
                 df = spark.sql("SHOW TABLES")
                 return ExecutionResult(df=df, command_tag="SHOW")
             col = _SHOW_COLUMN_NAMES.get(name, name.replace(" ", "_"))
             value = state.get_var("timezone" if col == "TimeZone" else name)
-            df = spark.createDataFrame(
-                [(value,)], StructType([StructField(col, StringType())]))
-            return ExecutionResult(df=df, command_tag="SHOW")
+            return text_result([col], [(value,)], "SHOW")
 
         # -- cursor hook (hooks/cursor.rs:89-216) --------------------------
         if kind == "DECLARE":
@@ -352,9 +343,8 @@ class HookChain:
             count = 1
         rows = list(cur.iterator if count is None
                     else itertools.islice(cur.iterator, count))
-        df = self.engine.spark.createDataFrame(rows, cur.schema) if rows else \
-            self.engine.spark.createDataFrame([], cur.schema)
-        return ExecutionResult(df=df, command_tag=f"FETCH {len(rows)}")
+        return ExecutionResult(df=None, command_tag=f"FETCH {len(rows)}",
+                               held_rows=rows, held_schema=cur.schema)
 
     def _close(self, name: str):
         from datafusion_postgres_spark.session import ExecutionResult

@@ -15,6 +15,12 @@ simple query protocol (multi-statement), extended protocol
 (Parse/Bind/Describe/Execute/Close/Sync/Flush), ParameterStatus
 broadcast, transaction-status-aware ReadyForQuery, error responses with
 SQLSTATE, connection limit semaphore, Terminate.
+
+Both query protocols share one statement lifecycle
+(``SparkPgEngine._execute_one``) and one result writer (``_send_result``):
+a simple query is the unnamed portal with text formats, no row limit and
+a RowDescription (handlers.rs shares its planning path and
+``arrow-pg/src/datatypes/df.rs`` encoder the same way).
 """
 
 from __future__ import annotations
@@ -24,9 +30,8 @@ import socketserver
 import struct
 import threading
 
-from datafusion_postgres_spark.server.encoder import (
-    encode_row, schema_to_pg_fields,
-)
+from datafusion_postgres_spark.server import encoder
+from datafusion_postgres_spark.server.hooks import CursorError
 from datafusion_postgres_spark.server.prepared import (
     PreparedStatementManager,
 )
@@ -79,6 +84,28 @@ def _cstr(s: str) -> bytes:
 
 class _CopyFailed(RuntimeError):
     sqlstate = "57014"  # QUERY_CANCELED, per pg's COPY-fail handling
+
+
+def _column_formats(schema, codes: list[int]) -> list[int]:
+    """Bind result-format codes -> one code per column (none: all text;
+    one: every column; else per column). Binary only where the encoder
+    supports the type; other columns fall back to text."""
+    fields = schema.fields
+    if len(codes) == 1:
+        codes = codes * len(fields)
+    elif len(codes) != len(fields):
+        codes = [0] * len(fields)
+    return [1 if (c == 1 and encoder.supports_binary(f.dataType)) else 0
+            for c, f in zip(codes, fields)]
+
+
+def _row_description(schema, fmts: list[int]) -> bytes:
+    fields = encoder.schema_to_pg_fields(schema)
+    buf = struct.pack("!H", len(fields))
+    for f, fmt in zip(fields, fmts):
+        buf += (_cstr(f.name) + struct.pack("!IhIhih", 0, 0, f.type_oid,
+                                            f.typlen, f.typmod, fmt))
+    return _msg(b"T", buf)
 
 
 class _Conn(socketserver.BaseRequestHandler):
@@ -327,10 +354,10 @@ class _Conn(socketserver.BaseRequestHandler):
                 self._send(self._ready())
                 return
             self._enter_job_group()
-            results = self.engine.execute(sql)
-            for res in results:
-                self._send_result(res, max_rows=0)
-                self._maybe_parameter_status(sql)
+            # each statement's result goes out as the unnamed portal would:
+            # text format, every row, after a RowDescription
+            for res in self.engine.execute(sql):
+                self._send_result("", res, [], 0, describe=True)
         except Exception as exc:
             self.engine.state.statement_failed()
             self._error(_sqlstate_of(exc), _error_text(exc))
@@ -345,39 +372,71 @@ class _Conn(socketserver.BaseRequestHandler):
         except Exception:
             pass
 
-    def _send_result(self, res, max_rows: int):
+    def _send_result(self, key: str, res, result_formats: list[int],
+                     max_rows: int, describe: bool):
+        """The one result writer of both protocols: a COPY sub-protocol, a
+        command's tag, or rows through :meth:`_stream_portal_rows` (after
+        a RowDescription when ``describe``; Execute relies on Describe)."""
         if res.command_tag == "COPY_OUT":
             self._send_copy_out(res)
-            return
-        if res.command_tag == "COPY_IN":
+        elif res.command_tag == "COPY_IN":
             self._handle_copy_in(res)
-            return
-        if res.df is None:
+        elif res.schema is None:
+            # DML/DDL/utility: the tag already carries kind + rowcount
+            # ("INSERT 0 n" etc.) — clients derive rowcount from it
             self._send(_msg(b"C", _cstr(res.command_tag)))
-            return
-        fields = schema_to_pg_fields(res.df.schema)
-        self._send(self._row_description(fields))
-        schema = res.df.schema
-        timeout = self.engine.state.statement_timeout_secs()
-        n = 0
-        efd = int(self.engine.state.get_var("extra_float_digits") or 1)
-        for row in (res.collect(timeout) if timeout > 0 else res.rows()):
-            values = encode_row(row, schema, efd)
-            buf = struct.pack("!H", len(values))
-            for v in values:
-                if v is None:
-                    buf += struct.pack("!i", -1)
-                else:
-                    b = v.encode()
-                    buf += struct.pack("!I", len(b)) + b
-            self._send(_msg(b"D", buf))
+            self._maybe_parameter_status(res)
+        else:
+            fmts = _column_formats(res.schema, result_formats)
+            if describe:
+                self._send(_row_description(res.schema, fmts))
+            timeout = self.engine.state.statement_timeout_secs()
+            rows = iter(res.collect(timeout) if timeout > 0 else res.rows())
+            self._stream_portal_rows(key, rows, res, fmts, max_rows, 0)
+
+    def _stream_portal_rows(self, portal_key, rows, res, fmts,
+                            max_rows: int, n: int):
+        """The one DataRow loop: send rows from a (possibly resumed) portal
+        iterator; on hitting max_rows, park the iterator for the next
+        Execute."""
+        payload = self._row_payload(res.schema, fmts)
+        sent = 0
+        for row in rows:
+            self._send(_msg(b"D", payload(row)))
             n += 1
-            if max_rows and n >= max_rows:
-                break
+            sent += 1
+            if max_rows and sent >= max_rows:
+                self.portal_iters[portal_key] = (rows, res, fmts, n)
+                self._send(_msg(b"s", b""))  # PortalSuspended
+                return
         tag = res.command_tag
         if tag == "SELECT":
             tag = f"SELECT {n}"
         self._send(_msg(b"C", _cstr(tag)))
+
+    def _row_payload(self, schema, fmts):
+        """row -> DataRow payload: int16 column count, then per column an
+        int32 length (-1 for NULL) and the value in its format. A COPY
+        binary tuple has the same layout. The encoders are looked up here,
+        per result, not bound at import."""
+        from datafusion_postgres_spark.server.encoder import (
+            encode_value, encode_value_binary)
+
+        efd = int(self.engine.state.get_var("extra_float_digits") or 1)
+        cols = [(f.dataType, fmt) for f, fmt in zip(schema.fields, fmts)]
+        head = struct.pack("!H", len(cols))
+
+        def payload(row) -> bytes:
+            buf = head
+            for v, (dt, fmt) in zip(row, cols):
+                if v is None:
+                    buf += struct.pack("!i", -1)
+                    continue
+                b = (encode_value_binary(v, dt) if fmt == 1
+                     else encode_value(v, dt, efd).encode())
+                buf += struct.pack("!I", len(b)) + b
+            return buf
+        return payload
 
     def _recv_message(self) -> tuple[bytes, bytes]:
         tag = self._recv_exact(1)
@@ -424,7 +483,7 @@ class _Conn(socketserver.BaseRequestHandler):
         text format: tab-separated, \\N for NULL; csv: comma-separated,
         empty NULL, optional header; binary: PGCOPY signature +
         length-prefixed tuples in the binary wire encoding."""
-        schema = res.df.schema
+        schema = res.schema
         n_cols = len(schema.fields)
         if getattr(res, "copy_format", "text") == "binary":
             self._send_copy_out_binary(res, schema, n_cols)
@@ -438,7 +497,7 @@ class _Conn(socketserver.BaseRequestHandler):
             self._send(_msg(b"d", header.encode()))
         n = 0
         for row in res.rows():
-            values = encode_row(row, schema, efd)
+            values = encoder.encode_row(row, schema, efd)
             if csv:
                 cells = ["" if v is None else
                          ('"' + v.replace('"', '""') + '"'
@@ -458,11 +517,9 @@ class _Conn(socketserver.BaseRequestHandler):
     def _send_copy_out_binary(self, res, schema, n_cols: int):
         from datafusion_postgres_spark.server.copy_data import (
             COPY_BINARY_SIGNATURE)
-        from datafusion_postgres_spark.server.encoder import (
-            encode_value_binary, supports_binary)
 
         bad = [f.name for f in schema.fields
-               if not supports_binary(f.dataType)]
+               if not encoder.supports_binary(f.dataType)]
         if bad:
             raise RuntimeError(
                 f"COPY binary cannot encode column(s): {', '.join(bad)}")
@@ -471,33 +528,19 @@ class _Conn(socketserver.BaseRequestHandler):
                         struct.pack(f"!{n_cols}H", *([1] * n_cols))))
         self._send(_msg(b"d", COPY_BINARY_SIGNATURE +
                         struct.pack("!ii", 0, 0)))
+        payload = self._row_payload(schema, [1] * n_cols)
         n = 0
         for row in res.rows():
-            buf = struct.pack("!h", n_cols)
-            for v, fld in zip(row, schema.fields):
-                if v is None:
-                    buf += struct.pack("!i", -1)
-                else:
-                    b = encode_value_binary(v, fld.dataType)
-                    buf += struct.pack("!i", len(b)) + b
-            self._send(_msg(b"d", buf))
+            self._send(_msg(b"d", payload(row)))
             n += 1
         self._send(_msg(b"d", struct.pack("!h", -1)))
         self._send(_msg(b"c", b""))
         self._send(_msg(b"C", _cstr(f"COPY {n}")))
 
-    def _row_description(self, fields) -> bytes:
-        buf = struct.pack("!H", len(fields))
-        for f in fields:
-            buf += (_cstr(f.name) + struct.pack("!IhIhih", 0, 0, f.type_oid,
-                                                f.typlen, f.typmod, 0))
-        return _msg(b"T", buf)
-
-    def _maybe_parameter_status(self, sql: str):
+    def _maybe_parameter_status(self, res):
         """After a SET, broadcast ParameterStatus for known vars
         (set_show.rs:139-246)."""
-        kind = self.engine.transpiler.statement_kind(sql)
-        if kind != "SET":
+        if res.command_tag != "SET":
             return
         for var in PARAMETER_STATUS_VARS:
             val = self.engine.state.get_var(var)
@@ -585,22 +628,33 @@ class _Conn(socketserver.BaseRequestHandler):
         kind, name = payload[:1], payload[1:].rstrip(b"\x00").decode()
         try:
             if kind == b"S":
-                stmt = self.prepared.describe(name or "")
+                stmt = self.prepared.describe(name)
                 buf = struct.pack("!H", stmt.num_params)
                 for oid in stmt.param_oids:
                     buf += struct.pack("!I", oid)
                 self._send(_msg(b"t", buf))
-                self._send(self._describe_statement_rowdesc(stmt))
+                # a statement's result formats are not known yet: text
+                self._send(self._describe_rows(stmt, []))
             else:
-                stmt_name = self.portals.get(name or "", ("", [], []))[0]
+                stmt_name, _params, result_formats = self._portal(name)
                 stmt = self.prepared.describe(stmt_name)
-                self._send(self._describe_statement_rowdesc(stmt))
+                self._send(self._describe_rows(stmt, result_formats))
+        except CursorError as exc:
+            self._in_error = True
+            self._error(exc.sqlstate, str(exc))
         except KeyError:
             self._in_error = True
             self._error("26000",
                         f'prepared statement "{name}" does not exist')
 
-    def _describe_statement_rowdesc(self, stmt) -> bytes:
+    def _portal(self, name: str):
+        try:
+            return self.portals[name]
+        except KeyError:
+            raise CursorError(f'portal "{name}" does not exist',
+                              "34000") from None
+
+    def _describe_rows(self, stmt, result_formats: list[int]) -> bytes:
         # Only SELECT-shaped statements get a schema probe: Spark executes
         # commands (INSERT / CTAS / DDL) EAGERLY inside spark.sql(), so
         # probing a DML statement at Describe time would actually run it
@@ -610,98 +664,34 @@ class _Conn(socketserver.BaseRequestHandler):
         if kind not in ("SELECT", "WITH", "VALUES", "EXPLAIN", "TABLE"):
             return _msg(b"n", b"")  # NoData
         try:
-            spark_sql = self.engine.transpiler.transpile(stmt.sql)
-            from datafusion_postgres_spark.server.prepared import to_named_params
-            spark_sql = to_named_params(spark_sql)
             nulls = {f"p{i + 1}": None for i in range(stmt.num_params)}
-            df = self.engine.spark.sql(spark_sql, args=nulls) if nulls else \
-                self.engine.spark.sql(spark_sql)
-            fields = schema_to_pg_fields(df.schema)
-            return self._row_description(fields)
+            schema = self.engine._sql(
+                self.engine.transpiler.transpile(stmt.sql),
+                nulls or None).schema
+            return _row_description(
+                schema, _column_formats(schema, result_formats))
         except Exception:
             return _msg(b"n", b"")  # NoData
 
     def _on_execute(self, payload: bytes):
         i = payload.index(b"\x00")
-        portal = payload[:i].decode()
+        key = payload[:i].decode()
         (max_rows,) = struct.unpack("!I", payload[i + 1:i + 5])
-        key = portal or ""
         try:
             if key in self.portal_iters:
                 # resume the suspended portal — do NOT re-execute
                 rows, res, fmts, n0 = self.portal_iters.pop(key)
                 self._stream_portal_rows(key, rows, res, fmts, max_rows, n0)
                 return
-            stmt_name, params, result_formats = self.portals[key]
+            stmt_name, params, result_formats = self._portal(key)
             self._enter_job_group()
             res = self.prepared.execute(stmt_name, params)
-            self._send_result_no_rowdesc(key, res, max_rows, result_formats)
+            self._send_result(key, res, result_formats, max_rows,
+                              describe=False)
         except Exception as exc:
             self.engine.state.statement_failed()
             self._in_error = True
             self._error(_sqlstate_of(exc), _error_text(exc))
-
-    def _send_result_no_rowdesc(self, portal_key, res, max_rows: int,
-                                result_formats=None):
-        from datafusion_postgres_spark.server.encoder import supports_binary
-
-        if res.command_tag == "COPY_OUT":
-            self._send_copy_out(res)
-            return
-        if res.command_tag == "COPY_IN":
-            self._handle_copy_in(res)
-            return
-        if res.df is None:
-            # DML/DDL/utility: the tag already carries kind + rowcount
-            # ("INSERT 0 n" etc.) — clients derive rowcount from it
-            self._send(_msg(b"C", _cstr(res.command_tag)))
-            return
-        fields = res.df.schema.fields
-        # expand the Bind result-format codes to one per column
-        fmts = result_formats or []
-        if len(fmts) == 1:
-            fmts = fmts * len(fields)
-        elif len(fmts) != len(fields):
-            fmts = [0] * len(fields)
-        # binary only where the type supports it; else text fallback
-        fmts = [1 if (f == 1 and supports_binary(fld.dataType)) else 0
-                for f, fld in zip(fmts, fields)]
-        timeout = self.engine.state.statement_timeout_secs()
-        rows = iter(res.collect(timeout) if timeout > 0 else res.rows())
-        self._stream_portal_rows(portal_key, rows, res, fmts, max_rows, 0)
-
-    def _stream_portal_rows(self, portal_key, rows, res, fmts,
-                            max_rows: int, n: int):
-        """Send DataRows from a (possibly resumed) portal iterator; on
-        hitting max_rows, park the iterator for the next Execute."""
-        from datafusion_postgres_spark.server.encoder import (
-            encode_value, encode_value_binary)
-
-        fields = res.df.schema.fields
-        efd = int(self.engine.state.get_var("extra_float_digits") or 1)
-        sent = 0
-        for row in rows:
-            buf = struct.pack("!H", len(fields))
-            for v, fld, fmt in zip(row, fields, fmts):
-                if v is None:
-                    buf += struct.pack("!i", -1)
-                elif fmt == 1:
-                    b = encode_value_binary(v, fld.dataType)
-                    buf += struct.pack("!I", len(b)) + b
-                else:
-                    b = encode_value(v, fld.dataType, efd).encode()
-                    buf += struct.pack("!I", len(b)) + b
-            self._send(_msg(b"D", buf))
-            n += 1
-            sent += 1
-            if max_rows and sent >= max_rows:
-                self.portal_iters[portal_key] = (rows, res, fmts, n)
-                self._send(_msg(b"s", b""))  # PortalSuspended
-                return
-        tag = res.command_tag
-        if tag == "SELECT":
-            tag = f"SELECT {n}"
-        self._send(_msg(b"C", _cstr(tag)))
 
     def _on_close(self, payload: bytes):
         kind, name = payload[:1], payload[1:].rstrip(b"\x00").decode()

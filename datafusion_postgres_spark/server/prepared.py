@@ -6,10 +6,10 @@ Reference parity:
     ``handlers.rs:428-483``);
   * Bind-time decode of text-format parameter values per inferred type
     (``arrow-pg/src/datatypes/df.rs:282-860``);
-  * Execute = substitute + run (``handlers.rs:291-352``).
-
-Spark-first: execution uses parameterized ``spark.sql(query, args)``
-(named-parameter form), so values never get string-spliced into SQL.
+  * Execute = decode + run (``handlers.rs:291-352``) through the engine's
+    statement lifecycle, which binds the values with parameterized
+    ``spark.sql(query, args)`` (named-parameter form), so values never get
+    string-spliced into SQL.
 """
 
 from __future__ import annotations
@@ -177,48 +177,19 @@ class PreparedStatementManager:
         return self.statements[name]
 
     def execute(self, name: str, params: list[str | None]):
-        """Execute with the SAME lifecycle as the simple protocol — the
-        reference enforces the permission hook and timeout on extended
-        queries too (handlers.rs ExtendedQueryHandler::do_query,
-        hooks/permissions.rs handle_extended_query); running spark.sql
-        directly here would let a restricted user bypass RBAC, the
-        failed-transaction guard, and the hook chain via Parse/Bind/
-        Execute."""
+        """Check the parameter count, decode the values, then run the
+        statement through the engine's one lifecycle, so Execute gets the
+        same guards, RBAC, catalog refresh and command tags as the simple
+        protocol (handlers.rs ExtendedQueryHandler::do_query,
+        hooks/permissions.rs handle_extended_query)."""
         stmt = self.statements[name]
         if len(params) != stmt.num_params:
             raise ValueError(
                 f"bind message supplies {len(params)} parameters, but "
                 f"prepared statement requires {stmt.num_params}")
-        if stmt.num_params == 0:
-            # full simple-protocol path: hook chain (SET/SHOW/txn/cursors),
-            # failed-txn guard, RBAC, command tags, catalog refresh
-            return self.engine._execute_one(stmt.sql)
-        # parameterized path: hooks can't answer parameterized statements,
-        # but every guard still applies before execution
-        from datafusion_postgres_spark.session import (
-            ExecutionResult, FailedTransactionError, _dml_row_count)
-        if self.engine.state.in_failed_transaction():
-            raise FailedTransactionError(
-                "current transaction is aborted, commands ignored until "
-                "end of transaction block")
-        self.engine._check_permissions(stmt.sql)
-        values = {f"p{i + 1}": decode_parameter(p, oid)
-                  for i, (p, oid) in enumerate(zip(params, stmt.param_oids))}
-        spark_sql = self.engine.transpiler.transpile(stmt.sql)
-        spark_sql = to_named_params(spark_sql)
-        kind = self.engine.transpiler.statement_kind(stmt.sql)
-        try:
-            df = self.engine.spark.sql(spark_sql, args=values)
-        except Exception:
-            self.engine.state.statement_failed()
-            raise
-        if kind in ("INSERT", "UPDATE", "DELETE", "MERGE"):
-            n = _dml_row_count(df)
-            tag = f"{kind} {n}" if kind != "INSERT" else f"INSERT 0 {n}"
-            return ExecutionResult(df=None, command_tag=tag, rows_affected=n)
-        if kind in ("CREATE", "DROP", "ALTER", "TRUNCATE"):
-            return ExecutionResult(df=None, command_tag=f"{kind} TABLE")
-        return ExecutionResult(df=df)
+        args = {f"p{i + 1}": decode_parameter(p, oid)
+                for i, (p, oid) in enumerate(zip(params, stmt.param_oids))}
+        return self.engine._execute_one(stmt.sql, args or None)
 
     def close(self, name: str) -> None:
         self.statements.pop(name, None)

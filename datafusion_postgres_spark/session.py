@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 _BUILD_LOCK = threading.Lock()
 
@@ -110,35 +111,46 @@ def clone_session(spark: SparkSession) -> SparkSession:
 
 @dataclass
 class ExecutionResult:
-    """Streamed query result — the Spark analog of the reference's
-    ``encode_dataframe`` RecordBatch stream (arrow-pg/src/datatypes/df.rs:24-52).
+    """One statement's result, as the wire writer consumes it.
 
-    Rows are exposed through ``toLocalIterator`` so a 100 TB result set
-    streams through the driver instead of being collect()ed.
+    A Spark result streams through ``toLocalIterator``, so a 100 TB result
+    set passes through the driver instead of being collect()ed. Answers
+    the driver already holds (SHOW, FETCH, ``set_config``, EXPLAIN
+    ANALYZE) carry their rows and schema directly and run no Spark job.
+    A result with no schema is a command: only its tag goes to the client.
     """
 
     df: DataFrame | None
     command_tag: str = "SELECT"
     rows_affected: int | None = None
+    held_rows: list | None = None
+    held_schema: StructType | None = None
 
     @property
     def schema(self):
-        return self.df.schema if self.df is not None else None
+        return self.df.schema if self.df is not None else self.held_schema
 
     def rows(self) -> Iterator:
         if self.df is None:
-            return iter(())
+            return iter(self.held_rows or ())
         return self.df.toLocalIterator()
 
     def collect(self, timeout_secs: float = 0.0) -> list:
         """Materialize under the statement timeout (57014 on deadline)."""
         if self.df is None:
-            return []
+            return list(self.held_rows or ())
         if timeout_secs > 0:
             from datafusion_postgres_spark.server.timeout import run_with_timeout
             return run_with_timeout(self.df.sparkSession, self.df.collect,
                                     timeout_secs)
         return self.df.collect()
+
+
+def text_result(columns: list[str], rows: list, tag: str) -> ExecutionResult:
+    """A driver-held result of text columns (hook and EXPLAIN answers)."""
+    schema = StructType([StructField(c, StringType()) for c in columns])
+    return ExecutionResult(df=None, command_tag=tag, held_rows=rows,
+                           held_schema=schema)
 
 
 @dataclass
@@ -202,7 +214,7 @@ class SparkPgEngine:
 
     _EXPLAIN_ANALYZE_RE = None
 
-    def _maybe_explain_analyze(self, stmt: str):
+    def _maybe_explain_analyze(self, stmt: str, args: dict | None):
         """Real ``EXPLAIN ANALYZE``: PG executes the statement and reports
         actual rows + timings; Spark's EXPLAIN never executes. For
         row-returning statements we run the inner query (full execution),
@@ -231,7 +243,7 @@ class SparkPgEngine:
                 "SELECT", "WITH", "VALUES", "TABLE"):
             return None
         t0 = time.perf_counter()
-        df = self.spark.sql(self.transpiler.transpile(inner))
+        df = self._sql(self.transpiler.transpile(inner), args)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         t1 = time.perf_counter()
@@ -273,16 +285,26 @@ class SparkPgEngine:
         lines += [f"Planning Time: {(t1 - t0) * 1000:.3f} ms",
                   f"Execution Time: {(t2 - t1) * 1000:.3f} ms",
                   f"Actual Rows: {n}"]
-        from pyspark.sql.types import StringType, StructField, StructType
-        out = self.spark.createDataFrame(
-            [(line,) for line in lines],
-            StructType([StructField("QUERY PLAN", StringType())]))
-        return ExecutionResult(df=out, command_tag="EXPLAIN")
+        return text_result(["QUERY PLAN"], [(line,) for line in lines],
+                           "EXPLAIN")
 
-    def _execute_one(self, stmt: str) -> ExecutionResult:
-        hooked = self.hooks.try_handle(stmt)
-        if hooked is not None:
-            return hooked
+    def _sql(self, spark_sql: str, args: dict | None) -> DataFrame:
+        """``spark.sql``, with ``$n`` bound as named parameters when the
+        statement came through Bind (values never spliced into SQL)."""
+        if args is None:
+            return self.spark.sql(spark_sql)
+        from datafusion_postgres_spark.server.prepared import to_named_params
+        return self.spark.sql(to_named_params(spark_sql), args=args)
+
+    def _execute_one(self, stmt: str,
+                     args: dict | None = None) -> ExecutionResult:
+        """The one statement lifecycle of both wire protocols. ``args``
+        holds the decoded ``$n`` values of a parameterized Execute; the
+        hooks answer only unparameterized statements."""
+        if args is None:
+            hooked = self.hooks.try_handle(stmt)
+            if hooked is not None:
+                return hooked
         if self.state.in_failed_transaction():
             raise FailedTransactionError(
                 "current transaction is aborted, commands ignored until "
@@ -300,13 +322,13 @@ class SparkPgEngine:
             )
             materialize_pipeline_tvfs(self.spark, pending_tvfs)
         self._maybe_refresh_catalog(stmt)
-        analyzed = self._maybe_explain_analyze(stmt)
+        analyzed = self._maybe_explain_analyze(stmt, args)
         if analyzed is not None:
             return analyzed
         spark_sql = self.transpiler.transpile(stmt)
         kind = self.transpiler.statement_kind(stmt)
         try:
-            df = self.spark.sql(spark_sql)
+            df = self._sql(spark_sql, args)
             if kind in ("CREATE", "DROP", "ALTER", "INSERT", "UPDATE",
                         "DELETE", "TRUNCATE", "MERGE"):
                 self._catalog_dirty = True

@@ -107,19 +107,6 @@ class TestValueEncoding:
         assert E.encode_value((None, "z"), dt) == "(,z)"
 
 
-class TestDataFrameEncoding:
-    def test_round_trip(self, spark):
-        df = spark.sql("""
-            SELECT 1 AS i, 'txt' AS s, true AS b,
-                   array(1, 2) AS xs, named_struct('a', 1, 'b', 'v') AS st,
-                   CAST(1.25 AS DOUBLE) AS d, CAST(NULL AS INT) AS n
-        """)
-        fields, rows = E.encode_dataframe(df)
-        assert [f.type_oid for f in fields] == [23, 25, 16, 1007, 2249, 701, 23]
-        row = next(rows)
-        assert row == ["1", "txt", "t", "{1,2}", "(1,v)", "1.25", None]
-
-
 class TestBinaryEncoding:
     def test_scalars(self):
         import struct

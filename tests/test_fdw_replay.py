@@ -23,7 +23,7 @@ def fdw_engine(spark):
 
 def _rows(eng, sql):
     res = eng.execute(sql)[0]
-    return list(res.rows()) if res.df is not None else []
+    return list(res.rows()) if res.schema is not None else []
 
 
 class TestConfigureRemoteSession:

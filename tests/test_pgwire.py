@@ -710,3 +710,156 @@ class TestCopyBinaryBounds:
         body += struct.pack("!h", 1) + struct.pack("!i", -7)
         with pytest.raises(CopyDataError):
             parse_copy_binary(body, [T.IntegerType()])
+
+
+def _frame(client, tag, body):
+    client.sock.sendall(tag + struct.pack("!I", len(body) + 4) + body)
+
+
+def _until_ready(client):
+    msgs = []
+    while True:
+        tag, payload = client.read_message()
+        if tag == b"S":
+            k, v = payload.split(b"\x00")[:2]
+            client.params[k.decode()] = v.decode()
+        msgs.append((tag, payload))
+        if tag == b"Z":
+            return msgs
+
+
+def _extended(client, sql, params=(), result_format=None, describe=False):
+    """Parse/Bind (text params, one optional result-format code)/
+    [Describe portal]/Execute/Sync on the unnamed portal."""
+    _frame(client, b"P", b"\x00" + sql.encode() + b"\x00" + b"\x00\x00")
+    body = b"\x00\x00" + struct.pack("!HH", 0, len(params))
+    for p in params:
+        body += struct.pack("!I", len(p)) + p.encode()
+    body += (struct.pack("!H", 0) if result_format is None
+             else struct.pack("!HH", 1, result_format))
+    _frame(client, b"B", body)
+    if describe:
+        _frame(client, b"D", b"P\x00")
+    _frame(client, b"E", b"\x00" + struct.pack("!I", 0))
+    _frame(client, b"S", b"")
+    return _until_ready(client)
+
+
+def _tags(msgs):
+    return [p.rstrip(b"\x00").decode() for t, p in msgs if t == b"C"]
+
+
+def _text_cells(payload):
+    (n,) = struct.unpack("!H", payload[:2])
+    off, out = 2, []
+    for _ in range(n):
+        (ln,) = struct.unpack("!i", payload[off:off + 4])
+        off += 4
+        out.append(None if ln < 0 else payload[off:off + ln])
+        off += max(ln, 0)
+    return out
+
+
+def _row_desc(payload):
+    """RowDescription -> [(name, type oid, format code)]."""
+    (n,) = struct.unpack("!H", payload[:2])
+    off, out = 2, []
+    for _ in range(n):
+        end = payload.index(b"\x00", off)
+        _tbl, _att, oid, _len, _mod, fmt = struct.unpack(
+            "!IhIhih", payload[end + 1:end + 19])
+        out.append((payload[off:end].decode(), oid, fmt))
+        off = end + 19
+    return out
+
+
+class TestProtocolsAgree:
+    """Q and Parse/Bind/Execute share one statement lifecycle and one
+    result writer, so a statement answers the same over both."""
+
+    def test_parameterized_pg_class_sees_new_view(self, client):
+        client.query("SELECT count(*) FROM pg_catalog.pg_class")  # refreshed
+        client.query("CREATE OR REPLACE TEMP VIEW zz_agree_new AS SELECT 1 AS a")
+        sql = ("SELECT count(*) AS n FROM pg_catalog.pg_class "
+               "WHERE relname = $1")
+        msgs = _extended(client, sql, ["zz_agree_new"])
+        rows = [_text_cells(p) for t, p in msgs if t == b"D"]
+        assert rows == [[b"1"]]
+        simple = client.query(sql.replace("$1", "'zz_agree_new'"))
+        assert simple["rows"] == [["1"]]
+
+    def test_parameterized_create_view_tag(self, client):
+        msgs = _extended(
+            client, "CREATE OR REPLACE TEMP VIEW zz_agree_pv AS "
+                    "SELECT CAST($1 AS INT) AS x", ["5"])
+        assert _tags(msgs) == ["CREATE VIEW"]
+        assert client.query("SELECT x FROM zz_agree_pv")["rows"] == [["5"]]
+
+    def test_set_through_execute_sends_parameter_status(self, client):
+        try:
+            msgs = _extended(client, "SET TIME ZONE 'America/Denver'")
+            assert _tags(msgs) == ["SET"]
+            status = [p.split(b"\x00")[:2] for t, p in msgs if t == b"S"]
+            assert [b"TimeZone", b"America/Denver"] in status
+        finally:
+            client.query("SET TIME ZONE 'UTC'")
+
+    def test_portal_describe_reports_result_formats(self, client):
+        sql = "SELECT 258 AS i, 'x' AS s, map('k', 1) AS m"
+        msgs = _extended(client, sql, result_format=1, describe=True)
+        (desc,) = [_row_desc(p) for t, p in msgs if t == b"T"]
+        # int and text go binary; the map has no binary encoder: text
+        assert [fmt for _, _, fmt in desc] == [1, 1, 0]
+        (row,) = [_text_cells(p) for t, p in msgs if t == b"D"]
+        assert row == [struct.pack("!i", 258), b"x", b'{"k":1}']
+        # a statement Describe knows no result formats yet: all text
+        _frame(client, b"P", b"stfmt\x00" + sql.encode() + b"\x00\x00\x00")
+        _frame(client, b"D", b"Sstfmt\x00")
+        _frame(client, b"S", b"")
+        (desc,) = [_row_desc(p) for t, p in _until_ready(client)
+                   if t == b"T"]
+        assert [fmt for _, _, fmt in desc] == [0, 0, 0]
+
+    def test_describe_unknown_portal(self, client):
+        _frame(client, b"D", b"Pno_such_portal\x00")
+        _frame(client, b"S", b"")
+        msgs = _until_ready(client)
+        (err,) = [{f[:1]: f[1:].decode() for f in p.split(b"\x00") if f}
+                  for t, p in msgs if t == b"E"]
+        assert err[b"C"] == "34000"
+        assert err[b"M"] == 'portal "no_such_portal" does not exist'
+        assert not [t for t, _ in msgs if t in (b"T", b"n")]
+
+
+class TestHeldRows:
+    """SHOW, SHOW ALL, FETCH, set_config and EXPLAIN ANALYZE answer from
+    rows the driver holds: no DataFrame is built for them."""
+
+    STATEMENTS = ["SET application_name = 'shown'; SHOW application_name",
+                  "SHOW ALL",
+                  "SELECT set_config('application_name', 'held', false)",
+                  "BEGIN; DECLARE held_cur CURSOR FOR SELECT id FROM "
+                  "range(5) ORDER BY id; FETCH 2 FROM held_cur; "
+                  "FETCH ALL FROM held_cur; CLOSE held_cur; COMMIT"]
+
+    def test_no_create_dataframe(self, client, monkeypatch):
+        from pyspark.sql import SparkSession
+
+        want = [client.query(sql) for sql in self.STATEMENTS]
+
+        def refuse(*_a, **_k):
+            raise AssertionError("createDataFrame called")
+        monkeypatch.setattr(SparkSession, "createDataFrame", refuse)
+        got = [client.query(sql) for sql in self.STATEMENTS]
+        for w, g in zip(want, got):
+            assert not g["errors"]
+            assert (g["cols"], g["rows"], g["tags"]) == \
+                (w["cols"], w["rows"], w["tags"])
+        assert got[0]["rows"] == [["shown"]]
+        assert ["application_name", "shown", ""] in got[1]["rows"]
+        assert got[2]["rows"] == [["held"]]
+        assert got[3]["rows"] == [["0"], ["1"], ["2"], ["3"], ["4"]]
+        assert got[3]["tags"][2:4] == ["FETCH 2", "FETCH 3"]
+        plan = client.query("EXPLAIN ANALYZE SELECT 1 AS one")
+        assert not plan["errors"] and plan["cols"] == ["QUERY PLAN"]
+        assert plan["rows"][-1] == ["Actual Rows: 1"]

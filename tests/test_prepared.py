@@ -117,3 +117,11 @@ class TestExecute:
         mgr.close("s6")
         with pytest.raises(KeyError):
             mgr.describe("s6")
+
+    def test_parameterized_explain(self, mgr):
+        mgr.parse("s7", "EXPLAIN SELECT n_name FROM nation "
+                        "WHERE n_nationkey = $1::int4")
+        res = mgr.execute("s7", ["3"])
+        assert res.command_tag == "EXPLAIN"
+        assert res.schema.names == ["QUERY PLAN"]
+        assert "Filter" in res.collect()[0][0]

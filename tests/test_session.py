@@ -349,7 +349,7 @@ class TestExplain:
         res = engine.execute(
             "EXPLAIN ANALYZE SELECT count(*) AS n FROM nation "
             "WHERE n_nationkey < 7")[0]
-        assert res.df.columns == ["QUERY PLAN"]
+        assert res.schema.names == ["QUERY PLAN"]
         lines = [r[0] for r in res.rows()]
         assert len(lines) > 3                      # PG row-per-line shape
         assert lines[-1] == "Actual Rows: 1"       # it really executed
