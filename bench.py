@@ -42,11 +42,11 @@ HEADLINE = [
     "join_asof_bucketed",
     "events_sessionize_bucketed",
     "sim_cosine_sq8",
-    # round-6 marquee: vocabulary-reduction BPE trainer + multi-probe
-    # LSH + fully-oracled distributed classifier training (additions
-    # only — prior rows stay comparable with r01..r05)
+    # round-6 marquee: vocabulary-reduction BPE trainer + fully-oracled
+    # distributed classifier training (additions only — prior rows stay
+    # comparable with r01..r05; the multi-probe LSH row was retired with
+    # its dominated ANN tier)
     "text_bpe_merges",
-    "sim_cosine_lsh_multiprobe",
     "text_trained_classifier",
     # round-7 marquee: SCALE-MODE twins of the two exact-mode oracle
     # rows (additions only — prior rows stay comparable with r01..r06):

@@ -64,6 +64,34 @@ _PG_TYPES = [
     ("_numeric", 1231, -1, "A", 1700, 0),
 ]
 
+# format_type() spelling of the _PG_TYPES names PG renders differently;
+# every other base type formats as its typname
+_FORMAT_NAMES = {
+    "bool": "boolean", "char": '"char"', "int8": "bigint",
+    "int2": "smallint", "int4": "integer", "float4": "real",
+    "float8": "double precision", "bpchar": "character",
+    "varchar": "character varying", "time": "time without time zone",
+    "timestamp": "timestamp without time zone",
+    "timestamptz": "timestamp with time zone",
+    "timetz": "time with time zone", "varbit": "bit varying",
+}
+
+
+def format_type_names() -> dict[int, str]:
+    """OID -> PG ``format_type(oid, NULL)`` text for every base type in
+    _PG_TYPES and, through its ``typarray``, its array type
+    (``integer[]``, ``text[]``, ...)."""
+    names = {}
+    for typname, oid, _l, cat, _elem, arr in _PG_TYPES:
+        if cat == "A":
+            continue
+        name = _FORMAT_NAMES.get(typname, typname)
+        names[oid] = name
+        if arr:
+            names[arr] = name + "[]"
+    return names
+
+
 # Spark SQL type -> (pg type oid, typlen)
 SPARK_TO_PG_OID = {
     "boolean": (16, 1), "tinyint": (21, 2), "smallint": (21, 2),

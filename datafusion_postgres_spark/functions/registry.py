@@ -80,6 +80,16 @@ def _jsonpath_fast_sql() -> tuple[str, str]:
 _JP_FAST_FIRST, _JP_FAST_EXISTS = _jsonpath_fast_sql()
 
 
+def _format_type_body() -> str:
+    """``format_type``: one CASE arm per base and array type OID."""
+    from datafusion_postgres_spark.catalog.pg_catalog import (
+        format_type_names,
+    )
+    arms = " ".join(f"WHEN {oid} THEN '{name}'"
+                    for oid, name in format_type_names().items())
+    return f"CASE id {arms} ELSE '???' END"
+
+
 def _ts_headline_body() -> str:
     """ts_headline SQL body: mark matches with StartSel/StopSel; with an
     options string, return one MaxWords fragment anchored at the first
@@ -352,18 +362,7 @@ SQL_UDFS: list[tuple[str, str, str, str]] = [
      "WHEN 'interval day to second' THEN 'interval' "
      "WHEN 'interval year to month' THEN 'interval' ELSE t END END"),
     ("format_type", "id BIGINT, typmod INT DEFAULT NULL", "STRING",
-     "CASE id WHEN 16 THEN 'boolean' WHEN 17 THEN 'bytea' "
-     "WHEN 18 THEN '\"char\"' WHEN 19 THEN 'name' WHEN 20 THEN 'bigint' "
-     "WHEN 21 THEN 'smallint' WHEN 23 THEN 'integer' WHEN 25 THEN 'text' "
-     "WHEN 26 THEN 'oid' WHEN 700 THEN 'real' "
-     "WHEN 701 THEN 'double precision' WHEN 1042 THEN 'character' "
-     "WHEN 1043 THEN 'character varying' WHEN 1082 THEN 'date' "
-     "WHEN 1083 THEN 'time without time zone' "
-     "WHEN 1114 THEN 'timestamp without time zone' "
-     "WHEN 1184 THEN 'timestamp with time zone' WHEN 1186 THEN 'interval' "
-     "WHEN 1700 THEN 'numeric' WHEN 2205 THEN 'regclass' "
-     "WHEN 2206 THEN 'regtype' WHEN 114 THEN 'json' WHEN 3802 THEN 'jsonb' "
-     "WHEN 2950 THEN 'uuid' ELSE '???' END"),
+     _format_type_body()),
     # -- functions.md P1/P2 batch 3 (remaining planned rows) ---------------
     # bytea popcount: per-hex-nibble bit_count, summed JVM-side
     ("pg_bit_count", "b BINARY", "BIGINT",

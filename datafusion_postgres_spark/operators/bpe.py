@@ -182,28 +182,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
     # distributed path starts from the persist it needed anyway. The
     # merge loop is order-insensitive (counts aggregate; ties break on
     # (cnt desc, pair asc)).
-    vocab = vocab_src.persist()
-    n_probe = len(vocab.select(F.lit(1).alias("one"))
-                  .limit(local_vocab_limit + 1).collect())
-    if n_probe <= local_vocab_limit:
-        try:
-            rows = [(list(r["syms"]), r["weight"])
-                    for r in vocab.collect()]
-        finally:
-            vocab.unpersist(blocking=False)
-        return _merge_loop_local(rows, n_merges)
-    # Distributed merge loop. Each round's vocabulary is eagerly
-    # localCheckpoint-ed, NOT persisted: round k's frame derives from
-    # round k-1's, so with persist alone the logical plan deepens by
-    # one _merge_word HOF per round and Catalyst re-analysis of the
-    # growing plan dominates (measured on this 300-doc probe corpus:
-    # 8 merges 7.7s, 16 merges 108.6s — the same iterative-lineage
-    # trap fixed in connected_components, linear-depth flavor). The
-    # checkpoint truncates every round's plan to a LogicalRDD leaf;
-    # the round was already materialized (persist+count), so this
-    # swaps the materializing action, not the work. Each round frees
-    # the replaced round's storage; merges depend only on the data, so
-    # the sequence is unchanged (pinned distributed == local).
     from datafusion_postgres_spark.operators.cachectl import (
         bounded_checkpoint, free_local_checkpoint,
     )
@@ -215,24 +193,49 @@ def bpe_train(docs: DataFrame, n_merges: int = 50,
             pass
         free_local_checkpoint(df)          # later rounds: checkpoint
 
-    # vocab is already persisted (the probe materialized it)
+    vocab = vocab_src.persist()
+    rows = None
     merges: list[tuple[str, str]] = []
     try:
-        for _ in range(n_merges):
-            top = (_pair_counts(vocab)
-                   .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                   .limit(1).collect())
-            if not top or top[0]["cnt"] < 2:
-                break
-            a, b = top[0]["a"], top[0]["b"]
-            merges.append((a, b))
-            nxt = bounded_checkpoint(vocab.select(
-                _merge_word(F.col("syms"), a, b).alias("syms"),
-                "weight"))
-            _release_round(vocab)
-            vocab = nxt
+        n_probe = len(vocab.select(F.lit(1).alias("one"))
+                      .limit(local_vocab_limit + 1).collect())
+        if n_probe <= local_vocab_limit:
+            rows = [(list(r["syms"]), r["weight"])
+                    for r in vocab.collect()]
+        else:
+            # Distributed merge loop. Each round's vocabulary is eagerly
+            # localCheckpoint-ed, NOT persisted: round k's frame derives
+            # from round k-1's, so with persist alone the logical plan
+            # deepens by one _merge_word HOF per round and Catalyst
+            # re-analysis of the growing plan dominates (measured on
+            # this 300-doc probe corpus: 8 merges 7.7s, 16 merges
+            # 108.6s — the same iterative-lineage trap fixed in
+            # connected_components, linear-depth flavor). The
+            # checkpoint truncates every round's plan to a LogicalRDD
+            # leaf; the round was already materialized (persist+count),
+            # so this swaps the materializing action, not the work.
+            # Each round frees the replaced round's storage; merges
+            # depend only on the data, so the sequence is unchanged
+            # (pinned distributed == local). vocab is already persisted
+            # (the probe materialized it).
+            for _ in range(n_merges):
+                top = (_pair_counts(vocab)
+                       .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
+                       .limit(1).collect())
+                if not top or top[0]["cnt"] < 2:
+                    break
+                a, b = top[0]["a"], top[0]["b"]
+                merges.append((a, b))
+                nxt = bounded_checkpoint(vocab.select(
+                    _merge_word(F.col("syms"), a, b).alias("syms"),
+                    "weight"))
+                _release_round(vocab)
+                vocab = nxt
     finally:
+        # covers the probe too: a failed probe must not leak the persist
         _release_round(vocab)
+    if rows is not None:
+        return _merge_loop_local(rows, n_merges)
     return merges
 
 

@@ -31,9 +31,12 @@ swallowed (the JVM may be gone at teardown).
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 # operator key -> (semantic hash, input-file fingerprint, live cached
 # intermediate) of the operator's latest invocation. Lock: pg-wire
@@ -163,8 +166,29 @@ def bounded_checkpoint(df: DataFrame) -> DataFrame:
     except Exception:
         has_dir = False
     if has_dir:
+        _warn_if_checkpoints_kept(df.sparkSession.sparkContext)
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+_CLEAN_CHECKPOINTS = "spark.cleaner.referenceTracking.cleanCheckpoints"
+_checkpoint_growth_warned = False
+
+
+def _warn_if_checkpoints_kept(sc) -> None:
+    """Warn once per process that reliable checkpoints pile up: without
+    ``cleanCheckpoints`` Spark never deletes them, so every round of an
+    iterative operator adds files to the checkpoint directory."""
+    global _checkpoint_growth_warned
+    if _checkpoint_growth_warned:
+        return
+    if sc.getConf().get(_CLEAN_CHECKPOINTS, "false").lower() == "true":
+        return
+    _checkpoint_growth_warned = True
+    _log.warning(
+        "bounded_checkpoint writes reliable checkpoints to %s, which "
+        "grows every round: set %s=true to let Spark delete them",
+        sc.getCheckpointDir(), _CLEAN_CHECKPOINTS)
 
 
 def free_local_checkpoint(df: DataFrame) -> None:

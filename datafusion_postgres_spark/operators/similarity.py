@@ -1,20 +1,17 @@
 """Similarity search over embedding columns (`array<float>`).
 
-TIER ROUTING (measured recall@10 at sf0.1, ANN_RECALL.json):
-  * **sq8 (0.985 recall) and ivf_sq8 (0.89) are the production scale
-    tiers** — 4x-compressed codes, zero corpus shuffle at query time,
-    and the persistent index (sources/ann_index.py) adds STATIC
-    partition pruning. Route 100 TB workloads here.
-  * ivf (0.90) when uncompressed re-ranking matters more than scan
-    width; exact brute force for eval sets (query side broadcasts, the
-    corpus never shuffles).
-  * lsh / pq are HONEST-BUT-WEAK tiers on this corpus, kept as oracle
-    and teaching paths: sign-LSH recall is low when neighbor cosines
-    are moderate (the measured regime here), and pq's 16x compression
-    costs too much recall (0.48). `cosine_topk_lsh(n_probes=8)`
-    multi-probes the lowest-margin buckets (Lv et al. 2007) — the
-    right LSH mechanics, fully DuckDB-oracled — but prefer sq8 tiers
-    unless the corpus has tight (cos >= 0.95) neighbor structure.
+TIER ROUTING (measured recall@10 at sf0.1, ANN_RECALL.json). The ladder
+is exact -> sq8 -> ivf / ivf_sq8 -> persistent index:
+  * exact brute force (recall 1.0, no build) for eval sets: the query
+    side broadcasts, the corpus never shuffles.
+  * **sq8 (0.985 recall) is the first compression rung** — 4x-compressed
+    codes, no codebook training, zero corpus shuffle at query time.
+  * ivf (0.90) / ivf_sq8 (0.89) when a query must scan only a few
+    cells; the persistent index (sources/ann_index.py) adds STATIC
+    partition pruning on top of ivf_sq8. Route 100 TB workloads here.
+The sign-LSH signature (`lsh_bucket_expr`) stays as the blocking key of
+the embedding near-dup operators (dedup.embedding_cosine_pairs_lsh), not
+as a top-k tier.
 
 Scale design:
   * `cosine_topk_bruteforce` — the exact baseline. The query side is
@@ -23,10 +20,6 @@ Scale design:
     broadcast-nested-loop with a codegen'd dot product, then a skew-immune
     two-stage per-query top-k (`_topk_per_query`: partition-local rank
     first, so no task ever holds a corpus-sized candidate group).
-  * `cosine_topk_lsh` — random-hyperplane LSH buckets both sides;
-    candidates only meet within a probed bucket (shuffle keyed on the
-    plane-bucket), turning O(N·Q) into O(collisions). Recall tunable
-    via n_planes/n_probes.
   * Dot products use `F.zip_with` + `F.aggregate` — JVM-side, no Python.
     Deterministic left-to-right summation (stable across engines for the
     DuckDB oracle).
@@ -56,17 +49,6 @@ def _norm_sql(a: str) -> str:
     the seed folds away identically in both forms)."""
     return (f"SQRT(aggregate({a}, CAST(0.0D AS DOUBLE), "
             "(acc, v) -> acc + v * v))")
-
-
-def _dot_sql(a: str, b: str) -> str:
-    """SQL text of ``_dot`` — same zip_with/aggregate tree."""
-    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
-            "CAST(0.0D AS DOUBLE), (acc, v) -> acc + v)")
-
-
-def _cosine_sql(a: str, b: str) -> str:
-    """SQL text of ``cosine_similarity`` — same Divide/Multiply tree."""
-    return f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})"
 
 
 def _usable_norm(a):
@@ -182,10 +164,6 @@ def _plane_sign_value(p: int, d: int) -> float:
     import hashlib
     h = hashlib.sha256(f"lsh-plane:{p}:{d}".encode()).digest()
     return 1.0 if h[0] % 2 == 0 else -1.0
-
-
-def _plane_sign(p, d):
-    return F.lit(_plane_sign_value(p, d))
 
 
 def _proj_sql(vec_sql: str, p: int, dims: int, plane_offset: int = 0) -> str:
@@ -410,212 +388,6 @@ def cosine_topk_ivf(emb: DataFrame, queries: DataFrame, k: int = 10,
             .select("qid", "vec_id", "cos_sim", "rnk"))
 
 
-# Multi-probe perturbation order (Lv et al., VLDB 2007 — "Multi-Probe
-# LSH"): probe the query's own bucket first, then buckets reached by
-# flipping the lowest-|projection|-margin planes (those are the planes
-# the query most nearly straddles, so their flips hold the likeliest
-# missed neighbors). Subsets index into the margin-ASC-sorted plane
-# list; order approximates increasing perturbation cost.
-_PROBE_SUBSETS: tuple[tuple[int, ...], ...] = (
-    (), (0,), (1,), (0, 1), (2,), (0, 2), (3,), (1, 2), (0, 3), (4,),
-    (1, 3), (0, 1, 2), (2, 3), (5,), (0, 4), (1, 4), (6,), (0, 1, 3), (7,),
-    (2, 4),
-)
-
-
-def cosine_topk_lsh(emb: DataFrame, queries: DataFrame, k: int = 10,
-                    n_planes: int = 8, dims: int = 64,
-                    vec_col: str = "embedding",
-                    id_col: str = "vec_id",
-                    exclude_self: bool = True,
-                    n_probes: int = 8) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's LSH
-    bucket plus ``n_probes - 1`` MULTI-PROBE neighbor buckets (flip the
-    lowest-margin hyperplane bits of the query signature — Lv et al.
-    2007). Measured at sf0.1 (ANN_RECALL.json): recall@10 0.025
-    single-bucket / 0.13 at n_probes=8 — honest numbers for a corpus
-    whose top-10 neighbor cosines are moderate; sign-LSH only shines on
-    tight (cos >= 0.95) neighbor structure. ROUTE SCALE WORKLOADS TO
-    sq8 (0.985) / ivf_sq8 (0.89); this tier stays as the fully-oracled
-    LSH mechanics reference.
-
-    At 100 TB the bucket column is computed once at ingest and the
-    corpus is bucketBy()-written on it, making this a bucket-pruned
-    scan + local top-k; here it is an equi-join on the signature. Only
-    the tiny broadcast QUERY side fans out (n_probes rows per query) —
-    the corpus is never recomputed or duplicated."""
-    corpus = emb.selectExpr(
-        f"`{id_col}` AS vec_id",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE)) AS vec")
-    corpus = corpus.withColumn("bucket",
-                               lsh_bucket_expr("vec", n_planes, dims))
-    q = queries.selectExpr(
-        "qid", "transform(qvec, x -> CAST(x AS DOUBLE)) AS qvec")
-    if n_probes <= 1:
-        q = q.withColumn("bucket",
-                         lsh_bucket_expr("qvec", n_planes, dims))
-    else:
-        # per-plane signed projections (the same sums lsh_bucket_expr
-        # folds into sign bits, kept raw here for the margins) — built
-        # as ONE F.expr parse (see _proj_sql): the Column-composed form
-        # cost ~2.4 s of driver py4j chatter per build on the bench
-        # host, the parse ~5 ms, identical folds
-        projs = F.expr("array(" + ",".join(
-            _proj_sql("qvec", p, dims) for p in range(n_planes)) + ")")
-        # materialize the projections: the query side is tiny by
-        # contract (it broadcasts), and without the cut Catalyst
-        # inlines the n_planes x dims literal fold into EVERY probe's
-        # XOR chain — measured 4x whole-query slowdown purely from
-        # codegen size at n_probes=8
-        q = q.select("qid", "qvec",
-                     projs.alias("__projs")).localCheckpoint(eager=False)
-        base_sql = ("aggregate(array(" + ",".join(
-            f"CASE WHEN element_at(__projs, {p + 1}) >= 0 "
-            f"THEN {1 << p} ELSE 0 END"
-            for p in range(n_planes)) +
-            "), CAST(0 AS BIGINT), (acc, x) -> acc + x)")
-        # planes sorted by |projection| ascending = flip-first order
-        margins_sql = ("array_sort(array(" + ",".join(
-            f"named_struct('m', abs(element_at(__projs, {p + 1})), "
-            f"'p', {p})"
-            for p in range(n_planes)) + "))")
-        subsets = [s for s in _PROBE_SUBSETS
-                   if all(j < n_planes for j in s)][:n_probes]
-        probe_buckets = []
-        for subset in subsets:
-            b = base_sql
-            for j in subset:
-                fp = f"element_at({margins_sql}, {j + 1}).p"
-                b = (f"({b} ^ CAST(power(2.0D, CAST({fp} AS DOUBLE)) "
-                     "AS BIGINT))")
-            probe_buckets.append(b)
-        q = (q.select("qid", "qvec",
-                      F.expr("explode(array_distinct(array(" +
-                             ",".join(probe_buckets) + ")))")
-                      .alias("bucket")))
-    scored = (corpus.join(F.broadcast(q), "bucket")
-              .where(_self_pred(exclude_self))
-              .selectExpr("qid", "vec_id",
-                          f"round({_cosine_sql('vec', 'qvec')}, 6) "
-                          "AS cos_sim")
-              .dropDuplicates(["qid", "vec_id"]))
-    return (_topk_per_query(scored, k, "cos_sim")
-            .select("qid", "vec_id", "cos_sim", "rnk"))
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ): the 100 TB storage-side path for ANN.
-# A 64-dim float corpus (256 B/vec) compresses to m uint8 codes (m bytes,
-# 16x at the m=16 default) so the candidate scan reads codes, not vectors; queries
-# score candidates with an asymmetric-distance lookup table (ADC).
-# Public technique: Jegou/Douze/Schmid, "Product Quantization for
-# Nearest Neighbor Search", TPAMI 2011.
-
-def pq_train(emb: DataFrame, m: int = 16, ksub: int = 32, iters: int = 3,
-             vec_col: str = "embedding",
-             id_col: str = "vec_id",
-             parsed: bool = True) -> list[list[list[float]]]:
-    """Train per-subspace codebooks with the same deterministic Lloyd's
-    update as :func:`kmeans_centroids`, ALL SUBSPACES FUSED: one seed
-    collect, then exactly ONE corpus pass per iteration — each vector
-    explodes into its m (subspace, nearest-centroid, subvector) structs
-    and a single partial-aggregated groupBy on (subspace, centroid)
-    updates every codebook at once. Round-5 shape ran m separate Lloyd's
-    loops (m seeds + m*iters jobs = 64 corpus passes at the m=16
-    default); at 100 TB that is the difference between ``iters`` scans
-    and ``m*iters`` scans. Shuffle volume per iteration stays the
-    partial-agg running sums (m*ksub x subdim), independent of corpus
-    size; only centroid rows reach the driver.
-
-    Returns ``codebooks[j][c] = centroid c of subspace j`` (plain Python
-    lists — m*ksub*subdim floats, e.g. 8*16*8 = 1 KiB)."""
-    unit = _unit_vectors(emb, vec_col, id_col)
-    dims = len(unit.select("vec").head()["vec"])
-    if dims % m:
-        raise ValueError(f"dims {dims} not divisible by m {m}")
-    sub = dims // m
-    # one seed job for all subspaces: the first ksub vectors by id,
-    # sliced per subspace driver-side (identical subvectors to the
-    # previous per-subspace seeding)
-    seed = unit.orderBy("vec_id").limit(ksub).collect()
-    if len(seed) < ksub:
-        raise ValueError(
-            f"corpus has {len(seed)} rows, fewer than ksub={ksub}; "
-            "reduce ksub or use brute-force top-k")
-    books: list[list[list[float]]] = [
-        [list(r["vec"][j * sub:(j + 1) * sub]) for r in seed]
-        for j in range(m)]
-    for _ in range(iters):
-        if parsed:
-            # the m (subspace, argmin, subvector) structs as ONE
-            # F.expr parse per iteration (round-10 batch 7) — same
-            # folds as _argmin_code, same int literals; parsed=False
-            # keeps the Column-composed form, pinned codebook-equal.
-            structs = F.expr("array(" + ",".join(
-                f"struct({j} AS j, "
-                + _argmin_code_sql(f"slice(vec, {j * sub + 1}, {sub})",
-                                   _codebook_sql(books[j]))
-                + f" AS cid, slice(vec, {j * sub + 1}, {sub}) AS sv)"
-                for j in range(m)) + ")")
-        else:
-            structs = F.array(*[
-                F.struct(
-                    F.lit(j).alias("j"),
-                    _argmin_code(F.slice("vec", j * sub + 1, sub),
-                                 _codebook_lit(books[j])).alias("cid"),
-                    F.slice("vec", j * sub + 1, sub).alias("sv"))
-                for j in range(m)])
-        means = (unit.select(F.explode(structs).alias("s"))
-                 .select("s.j", "s.cid", "s.sv")
-                 .groupBy("j", "cid")
-                 .agg(*[F.avg(F.col("sv")[d]).alias(f"d{d}")
-                        for d in range(sub)])
-                 .collect())
-        new = {(r["j"], r["cid"]): [r[f"d{d}"] for d in range(sub)]
-               for r in means}
-        books = [[new.get((j, c), books[j][c]) for c in range(ksub)]
-                 for j in range(m)]
-    return books
-
-
-def _codebook_sql(codebook_j: list[list[float]]) -> str:
-    """SQL text of one subspace codebook as a constant
-    ARRAY<ARRAY<DOUBLE>> — the single spelling shared by the parsed and
-    Column-composed PQ paths, so literals parse to identical doubles."""
-    return "array(" + ",".join(
-        "array(" + ",".join(repr(float(x)) for x in c) + ")"
-        for c in codebook_j) + ")"
-
-
-def _codebook_lit(codebook_j: list[list[float]]):
-    """One subspace codebook as a constant ARRAY<ARRAY<DOUBLE>> literal —
-    Catalyst constant-folds the nested array(...) into a single Literal,
-    so HOF loops read a constant instead of unrolling ksub x subdim
-    arithmetic into >64 KB of generated code."""
-    return F.expr(_codebook_sql(codebook_j))
-
-
-def _argmin_code(sv, cb):
-    """Index (0-based) of the L2-nearest codebook row to subvector sv."""
-    dists = F.transform(cb, lambda c: F.aggregate(
-        F.zip_with(sv, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0), lambda acc, x: acc + x))
-    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-
-
-def _argmin_code_sql(sv_sql: str, cb_sql: str) -> str:
-    """SQL text of :func:`_argmin_code` — same transform/zip_with/
-    aggregate folds, same array_position(dists, array_min(dists)) - 1
-    (the dists subtree appears twice in BOTH forms), emitted as text so
-    an m-subspace encode costs ONE ``F.expr`` parse instead of
-    ~m x 8 py4j round-trips (round-10 batch 7; value-pinned equal)."""
-    dists = (f"transform({cb_sql}, c -> aggregate("
-             f"zip_with({sv_sql}, c, (a, b) -> (a - b) * (a - b)), "
-             "0.0D, (acc, x) -> acc + x))")
-    return (f"CAST(array_position({dists}, array_min({dists})) - 1 "
-            "AS INT)")
-
-
 def _unit_vectors(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     # the norm rides an array_repeat so its fold runs ONCE per row: a
     # `transform(raw, x -> x / _norm(raw))` body re-evaluates the whole
@@ -634,108 +406,12 @@ def _unit_vectors(emb: DataFrame, vec_col: str, id_col: str) -> DataFrame:
         "(x, n) -> x / n) AS vec")
 
 
-def pq_encode(emb: DataFrame, codebooks: list[list[list[float]]],
-              vec_col: str = "embedding",
-              id_col: str = "vec_id", parsed: bool = True) -> DataFrame:
-    """(vec_id, codes ARRAY<INT>) — nearest-centroid code per subspace,
-    one zero-shuffle codegen projection (the codebooks inline as
-    literals: m*ksub squared-distance expressions).
-
-    ``parsed=True`` (default) emits the m argmin expressions as ONE
-    ``F.expr`` parse (round-10 batch 7 — the Column-composed build cost
-    ~m x 8 py4j round-trips per call); ``parsed=False`` keeps the
-    composed form, pinned value-equal in tests."""
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    sub = len(codebooks[0][0])
-    unit = _unit_vectors(emb, vec_col, id_col)
-    if parsed:
-        codes_sql = "array(" + ",".join(
-            _argmin_code_sql(f"slice(vec, {j * sub + 1}, {sub})",
-                             _codebook_sql(codebooks[j]))
-            for j in range(m)) + ")"
-        return unit.select("vec_id", F.expr(codes_sql).alias("codes"))
-    codes = [
-        _argmin_code(F.slice("vec", j * sub + 1, sub),
-                     _codebook_lit(codebooks[j]))
-        for j in range(m)]
-    return unit.select("vec_id", F.array(*codes).alias("codes"))
-
-
-def cosine_topk_pq(emb: DataFrame, queries: DataFrame, k: int = 10,
-                   m: int = 16, ksub: int = 32,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   codebooks: list[list[list[float]]] | None = None,
-                   codes: DataFrame | None = None,
-                   train_iters: int = 3,
-                   exclude_self: bool = True,
-                   parsed: bool = True) -> DataFrame:
-    """Approximate per-query top-k by asymmetric distance: each query
-    precomputes its m x ksub dot-product lookup table ON THE BROADCAST
-    QUERY SIDE (one projection over a handful of rows), then the scored
-    scan is `sum_j lut[j][code_j]` over the CODES table — the corpus'
-    float vectors are never read at query time, never shuffled.
-
-    Pass precomputed ``codebooks``/``codes`` for the real at-scale flow
-    (train + encode offline, many queries later); omitted, they are
-    derived here for convenience."""
-    if codebooks is None:
-        # train_iters=0 -> first-ksub seed codebooks (deterministic and
-        # external-oracle-replicable, the dedup_semantic trick)
-        codebooks = pq_train(emb, m=m, ksub=ksub, iters=train_iters,
-                             vec_col=vec_col, id_col=id_col)
-    if codes is None:
-        codes = pq_encode(emb, codebooks, vec_col=vec_col, id_col=id_col,
-                          parsed=parsed)
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    qunit = (_unit_vectors(queries.select(F.col("qid").alias("vec_id"),
-                                          F.col("qvec").alias("embedding")),
-                           "embedding", "vec_id")
-             .select(F.col("vec_id").alias("qid"), F.col("vec").alias("qv")))
-    if parsed:
-        # the m per-subspace LUT transforms and the m-term ADC score as
-        # ONE F.expr parse each (round-10 batch 7): same folds, same
-        # leading integer-0 term in the score sum (0.0 + x normalizes a
-        # would-be -0.0 total exactly like the composed Python sum());
-        # parsed=False keeps the composed form, pinned value-equal.
-        luts_sql = "array(" + ",".join(
-            f"transform({_codebook_sql(codebooks[j])}, c -> aggregate("
-            f"zip_with(slice(qv, {j * sub + 1}, {sub}), c, "
-            "(a, b) -> a * b), 0.0D, (acc, x) -> acc + x))"
-            for j in range(m)) + ")"
-        qlut = qunit.select("qid", F.expr(luts_sql).alias("lut"))
-        score = F.expr("0 + " + " + ".join(
-            f"lut[{j}][codes[{j}]]" for j in range(m)))
-    else:
-        def _lut_for(j: int):
-            # NOTE: must stay a ONE-arg lambda — PySpark treats a
-            # two-arg HOF lambda as (element, index), so a default-arg
-            # capture of j would be silently overwritten by the element
-            # index
-            qs = F.slice("qv", j * sub + 1, sub)
-            return F.transform(_codebook_lit(codebooks[j]),
-                               lambda c: F.aggregate(
-                                   F.zip_with(qs, c, lambda a, b: a * b),
-                                   F.lit(0.0), lambda acc, x: acc + x))
-
-        luts = F.array(*[_lut_for(j) for j in range(m)])
-        qlut = qunit.select("qid", luts.alias("lut"))
-        score = sum(F.col("lut")[j][F.col("codes")[j]] for j in range(m))
-    scored = (codes.crossJoin(F.broadcast(qlut))
-              .where(_self_pred(exclude_self))
-              .select("qid", "vec_id", score.alias("score")))
-    return (_topk_per_query(scored, k, "score")
-            .select("qid", "vec_id", F.round("score", 6).alias("score"),
-                    "rnk"))
-
-
 # ---------------------------------------------------------------------------
 # Scalar quantization (SQ8): the simplest storage-side ANN compression —
 # per-dimension min/max over the (unit) corpus, each component rounded to
-# an 8-bit level. 4x smaller than float32 (vs PQ's 16x) but with NO
-# codebook training and near-exact recall; the standard first rung of the
-# compression ladder (public technique: FAISS ScalarQuantizer).
+# an 8-bit level. 4x smaller than float32, with NO codebook training
+# and near-exact recall; the standard first rung of the compression
+# ladder (public technique: FAISS ScalarQuantizer).
 
 def sq8_train(emb: DataFrame, vec_col: str = "embedding",
               id_col: str = "vec_id") -> tuple[list[float], list[float]]:
@@ -924,11 +600,9 @@ def cosine_threshold_profile(emb: DataFrame,
 
 
 # ---------------------------------------------------------------------------
-# PCA over the embedding corpus: the public dimensionality-reduction
-# ladder rung below quantization (project to k dims, THEN quantize/scan —
-# FAISS's PCAMatrix pre-transform). The corpus-sized pass produces only a
-# d x d fixed-point Gram matrix; the eigendecomposition is a driver-side
-# numpy call on that bounded matrix; projection is zero-shuffle codegen.
+# Second-moment (Gram) matrix of the embedding corpus: the corpus-sized
+# pass produces only a d x d fixed-point matrix, small enough for a local
+# eigendecomposition (PCA) or spectrum read.
 
 def gram_matrix(emb: DataFrame, vec_col: str = "embedding",
                 id_col: str = "vec_id",
@@ -954,83 +628,3 @@ def gram_matrix(emb: DataFrame, vec_col: str = "embedding",
     step2 = step1.select("i", F.posexplode(prods).alias("j", "p"))
     return (step2.groupBy("i", "j")
             .agg(F.sum("p").cast("long").alias("s")))
-
-
-def pca_spectrum(emb: DataFrame, vec_col: str = "embedding",
-                 id_col: str = "vec_id",
-                 scale: int = 1_000_000) -> list[float]:
-    """Eigenvalues of the unit corpus's second moment, DESCENDING — the
-    read-this-first diagnostic for choosing the PCA k: pick the k where
-    the cumulative spectrum crosses your energy target. A flat spectrum
-    (as on this repo's isotropic synthetic embeddings — measured: top
-    16/64 hold ~38% of the energy, recall@10 drops to 0.13) means PCA
-    cannot help and the quantization tiers (sq8/ivf_sq8) are the right
-    compression; real text-embedding corpora are strongly anisotropic
-    and typically keep >90% in a fraction of the dims."""
-    import numpy as np
-
-    rows = gram_matrix(emb, vec_col, id_col, scale).collect()
-    if not rows:
-        raise ValueError("pca_spectrum: empty corpus")
-    d = max(r["i"] for r in rows) + 1
-    n = emb.count()
-    m = np.zeros((d, d))
-    for r in rows:
-        m[r["i"], r["j"]] = r["s"] / scale / n
-    vals = np.linalg.eigvalsh(m)
-    return [float(v) for v in vals[::-1]]
-
-
-def pca_components(emb: DataFrame, k: int = 16,
-                   vec_col: str = "embedding", id_col: str = "vec_id",
-                   scale: int = 1_000_000) -> list[list[float]]:
-    """Top-k principal directions (k x d floats) of the unit corpus's
-    second moment. The distributed part is :func:`gram_matrix` (exact
-    integers); the eigendecomposition runs on the driver over the
-    bounded d x d matrix (the kmeans/bpe driver-loop division of labor).
-    Deterministic end-to-end: integer Gram + a fixed sign convention
-    (each component's largest-|coordinate| entry is made positive).
-    Note: second-moment PCA (uncentered) — the right flavor for
-    cosine/ANN pipelines where vectors live on the unit sphere.
-    Read :func:`pca_spectrum` FIRST to choose k: on a flat-spectrum
-    (isotropic) corpus no k short of d preserves neighbors and the
-    quantization tiers are the right compression instead."""
-    import numpy as np
-
-    rows = gram_matrix(emb, vec_col, id_col, scale).collect()  # d^2 rows
-    if not rows:
-        raise ValueError("pca_components: empty corpus")
-    d = max(r["i"] for r in rows) + 1
-    n = emb.count()
-    m = np.zeros((d, d))
-    for r in rows:
-        m[r["i"], r["j"]] = r["s"] / scale / n
-    if not 0 < k <= d:
-        raise ValueError(f"k must be in (0, {d}], got {k}")
-    vals, vecs = np.linalg.eigh(m)          # ascending eigenvalues
-    comps = []
-    for c in range(d - 1, d - 1 - k, -1):
-        v = vecs[:, c]
-        peak = int(np.argmax(np.abs(v)))
-        if v[peak] < 0:
-            v = -v
-        comps.append([float(x) for x in v])
-    return comps
-
-
-def pca_project(emb: DataFrame, components: list[list[float]],
-                vec_col: str = "embedding",
-                id_col: str = "vec_id") -> DataFrame:
-    """(vec_id, pvec ARRAY<DOUBLE> length k): project the unit corpus
-    onto the principal directions — one zero-shuffle codegen projection;
-    the k x d component matrix ships as a flat parsed literal sliced
-    inside a transform (the ivf_assign constant-tree shape). Compose
-    with any cosine_topk tier for reduced-dimension ANN."""
-    k = len(components)
-    d = len(components[0])
-    unit = _unit_vectors(emb, vec_col, id_col)
-    mat = dlit(x for c in components for x in c)
-    pvec = F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: _dot(F.col("vec"), F.slice(mat, i * d + 1, F.lit(d))))
-    return unit.select("vec_id", pvec.alias("pvec"))

@@ -166,8 +166,7 @@ PRIORITY = [
     "dedup_ngram_jaccard_capped", "dedup_decontaminate",
     "text_chunk_documents", "text_entropy",
     "multimodal_frame_sample", "q12_shipmode_buckets",
-    "sim_cosine_ivf_sq8", "sim_cosine_lsh_multiprobe",
-    "text_trained_classifier",
+    "sim_cosine_ivf_sq8", "text_trained_classifier",
     # round-7..10 marquee rows
     "multimodal_image_neardups", "text_url_dedup",
     "text_url_then_content_dedup", "text_trained_gate_scale",

@@ -995,10 +995,10 @@ def sim_topk(spark, sf_dir):
     (~45 py4j round-trips through cosine_topk_bruteforce +
     _topk_per_query) cost ~0.35s per bench run on this host. Same
     folds (zip_with dot, left-to-right norm aggregates), same rounded
-    score, same two-stage spark_partition_id local-rank — value-pinned
-    == _sim_cosine_topk_composed and the oracle is unchanged. The
-    5-row query side keeps its forced broadcast: the hint rides in ON
-    the bound parameter DataFrame (F.broadcast → ResolvedHint)."""
+    score, same two-stage spark_partition_id local-rank; the oracle is
+    unchanged. The 5-row query side keeps its forced broadcast: the
+    hint rides in ON the bound parameter DataFrame (F.broadcast →
+    ResolvedHint)."""
     emb = t(spark, sf_dir, "embeddings")
     q = F.broadcast(emb.where(F.col("vec_id") < 5)
                     .select(F.col("vec_id").alias("qid"),
@@ -1037,17 +1037,6 @@ def sim_topk(spark, sf_dir):
           FROM local_rank WHERE _lrn <= 10
         ) WHERE rnk <= 10""", emb=emb, q=q)
     return cosine_sorted(df)
-
-
-def _sim_cosine_topk_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build, kept as the equivalence-pin
-    twin for the single-parse sim_cosine_topk above
-    (tests/test_sql_twin_queries)."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = (emb.where(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qvec")))
-    return cosine_sorted(similarity.cosine_topk_bruteforce(emb, queries, k=10))
 
 
 def cosine_sorted(df):
@@ -1247,9 +1236,9 @@ ORDER BY id_a, id_b
 @register("dedup_embedding_lsh", oracle=EMB_LSH_PAIRS_ORACLE)
 def dedup_embedding_lsh(spark, sf_dir):
     """Multi-table hyperplane-LSH near-dup — FULLY oracled (round-4
-    session 3, same determinism argument as sim_cosine_lsh): DuckDB
-    replays all four signature tables, the (table, bucket) collision
-    join, and the exact-cosine verify. Was rows-only in r01-r03."""
+    session 3): the hyperplane signs are literals and every float fold
+    is left-to-right, so DuckDB replays all four signature tables, the
+    (table, bucket) collision join, and the exact-cosine verify. Was rows-only in r01-r03."""
     emb = t(spark, sf_dir, "embeddings")
     return sorted_small(
         dedup.embedding_cosine_pairs_lsh(emb, threshold=0.38),
@@ -1385,113 +1374,6 @@ def dedup_semantic(spark, sf_dir):
                              kmeans_iters=0),
         "vec_id")
 
-
-
-@register("sim_cosine_lsh", oracle=f"""
-WITH corpus AS (
-  SELECT vec_id, embedding AS vec,
-         {_lsh_bucket_sql('embedding')} AS bucket
-  FROM embeddings),
-q AS (SELECT vec_id AS qid, vec AS qvec, bucket FROM corpus
-      WHERE vec_id < 5),
-scored AS (
-  SELECT q.qid, c.vec_id,
-         ROUND({_cos_sql('c.vec', 'q.qvec')}, 6) AS cos_sim
-  FROM corpus c JOIN q ON c.bucket = q.bucket AND c.vec_id <> q.qid)
-SELECT qid, vec_id, cos_sim, CAST(rn AS BIGINT) AS rnk FROM (
-  SELECT qid, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, vec_id ASC) AS rn
-  FROM scored) WHERE rn <= 10
-ORDER BY qid, rnk
-""")
-def sim_lsh(spark, sf_dir):
-    """LSH-bucketed approximate neighbors — FULLY oracled (round-4
-    session 3): the hyperplane signs are LCG literals and every float
-    fold is left-to-right, so DuckDB reproduces bucket assignment,
-    candidate set, and ranking bit-for-bit. Was rows-only in r01-r03.
-    n_probes=1 pins the single-bucket tier this oracle replays; the
-    multi-probe scale path is oracled separately
-    (sim_cosine_lsh_multiprobe)."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = (emb.where(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qvec")))
-    return sorted_small(similarity.cosine_topk_lsh(emb, queries, k=10,
-                                                   n_probes=1),
-                        "qid", "rnk")
-
-
-def _lsh_multiprobe_oracle(n_planes: int = 8, dims: int = 64,
-                           n_probes: int = 8) -> str:
-    """DuckDB replica of the MULTI-PROBE query side: per-plane raw
-    projections, base bucket from the sign bits, planes sorted by
-    |projection| ascending, probe buckets = base XOR the flip masks of
-    similarity._PROBE_SUBSETS — every step the same arithmetic Spark
-    runs, so candidates and ranking replay bit-for-bit."""
-    from datafusion_postgres_spark.operators.similarity import (
-        _PROBE_SUBSETS,
-    )
-    projs = ", ".join(_lsh_proj_sql("embedding", p, dims)
-                      for p in range(n_planes))
-    base = " + ".join(
-        f"(CASE WHEN projs[{p + 1}] >= 0 THEN {1 << p} ELSE 0 END)"
-        for p in range(n_planes))
-    subsets = [s for s in _PROBE_SUBSETS
-               if all(j < n_planes for j in s)][:n_probes]
-    probe_exprs = []
-    for subset in subsets:
-        e = "base"
-        for j in subset:
-            e = f"xor({e}, CAST(pow(2.0, sp[{j + 1}]) AS BIGINT))"
-        probe_exprs.append(e)
-    probes = ", ".join(probe_exprs)
-    return f"""
-WITH corpus AS (
-  SELECT vec_id, embedding AS vec,
-         {_lsh_bucket_sql('embedding', n_planes, dims)} AS bucket
-  FROM embeddings),
-q0 AS (
-  SELECT vec_id AS qid, embedding AS qvec, [{projs}] AS projs
-  FROM embeddings WHERE vec_id < 5),
-q1 AS (
-  SELECT qid, qvec, CAST({base} AS BIGINT) AS base,
-         list_transform(list_sort(list_transform(
-             generate_series(1, {n_planes}),
-             p -> {{'m': abs(projs[p]), 'p': p - 1}})),
-           s -> s.p) AS sp
-  FROM q0),
-qp AS (SELECT qid, qvec, unnest(list_distinct([{probes}])) AS bucket
-       FROM q1),
-scored AS (
-  SELECT DISTINCT q.qid, c.vec_id,
-         ROUND({_cos_sql('c.vec', 'q.qvec')}, 6) AS cos_sim
-  FROM corpus c JOIN qp q ON c.bucket = q.bucket AND c.vec_id <> q.qid)
-SELECT qid, vec_id, cos_sim, CAST(rn AS BIGINT) AS rnk FROM (
-  SELECT qid, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, vec_id ASC) AS rn
-  FROM scored) WHERE rn <= 10
-ORDER BY qid, rnk
-"""
-
-
-@register("sim_cosine_lsh_multiprobe", oracle=_lsh_multiprobe_oracle())
-def sim_lsh_multiprobe(spark, sf_dir):
-    """Multi-probe LSH neighbors (Lv et al. 2007): the query probes its
-    own bucket plus the 7 lowest-margin bit-flip buckets — 5.2x the
-    single-bucket recall at sf0.1 (0.025 → 0.13, ANN_RECALL.json) with
-    the corpus still bucket-pruned; sq8/ivf_sq8 remain the routed scale
-    tiers on this corpus (see similarity.py tier ladder). FULLY
-    oracled: projections, margin sort, XOR probe masks, candidate set,
-    and ranking all replay in DuckDB bit-for-bit."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = (emb.where(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qvec")))
-    return sorted_small(similarity.cosine_topk_lsh(emb, queries, k=10,
-                                                   n_probes=8),
-                        "qid", "rnk")
 
 
 # ---------------------------------------------------------------------------
@@ -2010,75 +1892,16 @@ def text_sample_mixture(spark, sf_dir):
             .select("doc_id", "lang").orderBy("doc_id"))
 
 
-_PQ_NORM = (
+_UNIT_NORM = (
     "sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
     "list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), "
     "(acc, v) -> acc + v))")
 
 
-@register("sim_cosine_pq", oracle=f"""
-WITH unit AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE) / {_PQ_NORM})
-           AS vec
-  FROM embeddings),
-seeds AS (SELECT vec_id, vec FROM unit ORDER BY vec_id LIMIT 32),
-cbs AS (
-  SELECT j, list(sub_v ORDER BY vec_id) AS cents
-  FROM (SELECT s.vec_id, gs.j, s.vec[gs.j*4+1 : gs.j*4+4] AS sub_v
-        FROM seeds s, (SELECT unnest(generate_series(0, 15)) AS j) gs)
-  GROUP BY j),
-codes AS (
-  SELECT vec_id, j, list_position(dists, list_min(dists)) AS code1 FROM (
-    SELECT u.vec_id, c.j,
-      list_transform(c.cents, ce ->
-        list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-          list_transform(generate_series(1, 4),
-            i -> (u.vec[c.j*4+i] - ce[i]) * (u.vec[c.j*4+i] - ce[i]))),
-          (acc, x) -> acc + x)) AS dists
-    FROM unit u CROSS JOIN cbs c)),
-qs AS (SELECT vec_id AS qid, vec AS qv FROM unit WHERE vec_id < 5),
-dots AS (
-  SELECT cd.vec_id, q.qid, cd.j,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-      list_transform(generate_series(1, 4),
-        i -> q.qv[cd.j*4+i] * cb.cents[cd.code1][i])),
-      (acc, x) -> acc + x) AS d
-  FROM codes cd JOIN cbs cb ON cb.j = cd.j CROSS JOIN qs q
-  WHERE cd.vec_id <> q.qid),
-scores AS (
-  SELECT vec_id, qid,
-    list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list(d ORDER BY j)),
-                (acc, x) -> acc + x) AS score
-  FROM dots GROUP BY vec_id, qid)
-SELECT qid, vec_id, ROUND(score, 6) AS score, CAST(rn AS BIGINT) AS rnk
-FROM (SELECT qid, vec_id, score,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY score DESC, vec_id ASC) AS rn
-      FROM scores) WHERE rn <= 10
-ORDER BY qid, rnk
-""")
-def sim_cosine_pq(spark, sf_dir):
-    """Product-quantized ANN top-k (Jegou et al. 2011) — FULLY oracled
-    (round-4 session 3): train_iters=0 seeds each subspace codebook with
-    the first-32-by-id unit subvectors, so DuckDB replays normalization,
-    codebook choice, per-subspace argmin encoding, the query LUT dot
-    products, and the ordered ADC fold exactly. Production callers keep
-    train_iters>0 (Lloyd-refined codebooks; pytest-pinned recall). The
-    corpus' float vectors are never read at query time — only codes."""
-    emb = t(spark, sf_dir, "embeddings")
-    queries = (emb.where(F.col("vec_id") < 5)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qvec")))
-    return sorted_small(similarity.cosine_topk_pq(emb, queries, k=10,
-                                                  train_iters=0),
-                        "qid", "rnk")
-
-
 @register("sim_cosine_sq8", oracle=f"""
 WITH unit AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE) / {_PQ_NORM})
+         list_transform(embedding, x -> CAST(x AS DOUBLE) / {_UNIT_NORM})
            AS vec
   FROM embeddings),
 stats AS (
@@ -2127,7 +1950,7 @@ def sim_cosine_sq8(spark, sf_dir):
 @register("sim_cosine_ivf_sq8", oracle=f"""
 WITH unit AS (
   SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE) / {_PQ_NORM})
+         list_transform(embedding, x -> CAST(x AS DOUBLE) / {_UNIT_NORM})
            AS vec
   FROM embeddings),
 stats AS (

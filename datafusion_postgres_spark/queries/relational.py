@@ -90,7 +90,7 @@ def q3(spark, sf_dir):
     # the optimizer exactly as the pre-filtered DataFrames were).
     # No forced broadcast: the filtered customer is SF-proportional (~1/5
     # of customer) — AQE broadcasts it by measurement when small, shuffles
-    # at scale (round-3 verdict item #2). Value-pinned == _q3_composed.
+    # at scale (round-3 verdict item #2).
     return spark.sql("""
         SELECT l_orderkey, revenue, orderdate FROM (
           SELECT l_orderkey,
@@ -109,26 +109,6 @@ def q3(spark, sf_dir):
         LIMIT 10""",
         li=t(spark, sf_dir, "lineitem"), o=t(spark, sf_dir, "orders"),
         c=t(spark, sf_dir, "customer"))
-
-
-def _q3_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build, kept as the equivalence-pin
-    twin for the single-parse q3 above (tests/test_sql_twin_queries)."""
-    cust = t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    orders = t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") < F.lit("1995-03-15").cast("timestamp_ntz"))
-    li = t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") > F.lit("1995-03-15").cast("timestamp_ntz"))
-    revenue_expr = (F.col("l_extendedprice").cast("decimal(12,2)") *
-                    (1 - F.col("l_discount").cast("decimal(4,2)")))
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(cust, orders.o_custkey == cust.c_custkey)
-            .groupBy("l_orderkey", "o_orderdate")
-            .agg(F.sum(revenue_expr).cast("double").alias("revenue"))
-            .select("l_orderkey", "revenue",
-                    F.col("o_orderdate").cast("date").alias("orderdate"))
-            .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-            .limit(10))
 
 
 # ---------------------------------------------------------------------------
@@ -150,11 +130,11 @@ GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """)
 def q5(spark, sf_dir):
-    # ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    # _q5_composed). The bounded-dim broadcast hints ride in ON the
-    # parameter DataFrames (F.broadcast → ResolvedHint in the bound
-    # plan), so the join strategy contract is unchanged: nation/region
-    # forced (SF-invariant), every SF-proportional side AQE-decided.
+    # ONE spark.sql parse (round-10 batch 5). The bounded-dim broadcast
+    # hints ride in ON the parameter DataFrames (F.broadcast →
+    # ResolvedHint in the bound plan), so the join strategy contract is
+    # unchanged: nation/region forced (SF-invariant), every
+    # SF-proportional side AQE-decided.
     return spark.sql("""
         SELECT n_name,
                CAST(SUM(CAST(l_extendedprice AS DECIMAL(12,2)) *
@@ -174,29 +154,6 @@ def q5(spark, sf_dir):
         li=t(spark, sf_dir, "lineitem"), s=t(spark, sf_dir, "supplier"),
         n=F.broadcast(t(spark, sf_dir, "nation")),
         r=F.broadcast(t(spark, sf_dir, "region")))
-
-
-def _q5_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    cust = t(spark, sf_dir, "customer")
-    orders = t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1994-01-01").cast("timestamp_ntz")) &
-        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz")))
-    li = t(spark, sf_dir, "lineitem")
-    supp = t(spark, sf_dir, "supplier")
-    nation = t(spark, sf_dir, "nation")
-    region = t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    return (cust.join(orders, cust.c_custkey == orders.o_custkey)
-            .join(li, orders.o_orderkey == li.l_orderkey)
-            .join(supp, (li.l_suppkey == supp.s_suppkey) &
-                        (cust.c_nationkey == supp.s_nationkey))
-            .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-            .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-            .groupBy("n_name")
-            .agg(F.sum(F.col("l_extendedprice").cast("decimal(12,2)") *
-                       (1 - F.col("l_discount").cast("decimal(4,2)")))
-                 .cast("double").alias("revenue"))
-            .orderBy(F.desc("revenue"), F.asc("n_name")))
 
 
 # ---------------------------------------------------------------------------
@@ -308,9 +265,8 @@ WHERE o_totalprice > 300000
 ORDER BY orderkey
 """)
 def join_using(spark, sf_dir):
-    # ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    # _join_using_composed): USING-join semantics identical to the
-    # DataFrame string-key join.
+    # ONE spark.sql parse (round-10 batch 5): USING-join semantics
+    # identical to the DataFrame string-key join.
     return spark.sql("""
         SELECT orderkey, o_totalprice, n_items FROM
           (SELECT o_orderkey AS orderkey, o_totalprice FROM {o}) o
@@ -319,17 +275,6 @@ def join_using(spark, sf_dir):
         WHERE o_totalprice > 300000
         ORDER BY orderkey""",
         o=t(spark, sf_dir, "orders"), li=t(spark, sf_dir, "lineitem"))
-
-
-def _join_using_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    o = (t(spark, sf_dir, "orders")
-         .select(F.col("o_orderkey").alias("orderkey"), "o_totalprice"))
-    l = (t(spark, sf_dir, "lineitem")
-         .groupBy(F.col("l_orderkey").alias("orderkey"))
-         .agg(F.count("*").alias("n_items")))
-    return (o.join(l, "orderkey").where(F.col("o_totalprice") > 300000)
-            .select("orderkey", "o_totalprice", "n_items").orderBy("orderkey"))
 
 
 # ---------------------------------------------------------------------------
@@ -375,8 +320,8 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 def agg_distinct(spark, sf_dir):
     # min/max of a double involve no arithmetic — emit the raw double
     # (a Decimal output would hit the driver's trailing-zero hash issue).
-    # ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    # _agg_distinct_composed): count_if == the Column form exactly.
+    # ONE spark.sql parse (round-10 batch 5): count_if == the Column
+    # form exactly.
     return spark.sql("""
         SELECT o_orderstatus,
                COUNT(*) AS n_orders,
@@ -386,18 +331,6 @@ def agg_distinct(spark, sf_dir):
                MAX(o_totalprice) AS max_price
         FROM {o} GROUP BY o_orderstatus ORDER BY o_orderstatus""",
         o=t(spark, sf_dir, "orders"))
-
-
-def _agg_distinct_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    o = t(spark, sf_dir, "orders")
-    return (o.groupBy("o_orderstatus")
-            .agg(F.count("*").alias("n_orders"),
-                 F.countDistinct("o_custkey").alias("n_customers"),
-                 F.count_if(F.col("o_totalprice") > 100000).alias("n_big"),
-                 F.min("o_totalprice").alias("min_price"),
-                 F.max("o_totalprice").alias("max_price"))
-            .orderBy("o_orderstatus"))
 
 
 @register("agg_string_agg", oracle="""
@@ -493,9 +426,8 @@ SELECT * FROM (
 WHERE rn <= 3 ORDER BY c_nationkey, rn
 """)
 def window_rank(spark, sf_dir):
-    # ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    # _window_rank_composed): shared WINDOW clause == the shared Window
-    # spec — one sort, three ranking functions.
+    # ONE spark.sql parse (round-10 batch 5): the shared WINDOW clause
+    # means one sort for the three ranking functions.
     return spark.sql("""
         SELECT c_nationkey, c_custkey, c_acctbal, rn, rnk, drnk FROM (
           SELECT c_nationkey, c_custkey, c_acctbal,
@@ -507,19 +439,6 @@ def window_rank(spark, sf_dir):
                        ORDER BY c_acctbal DESC, c_custkey)
         ) WHERE rn <= 3 ORDER BY c_nationkey, rn""",
         c=t(spark, sf_dir, "customer"))
-
-
-def _window_rank_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    c = t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"),
-                                                  F.asc("c_custkey"))
-    return (c.select("c_nationkey", "c_custkey", "c_acctbal",
-                     F.row_number().over(w).cast("bigint").alias("rn"),
-                     F.rank().over(w).cast("bigint").alias("rnk"),
-                     F.dense_rank().over(w).cast("bigint").alias("drnk"))
-            .where(F.col("rn") <= 3)
-            .orderBy("c_nationkey", "rn"))
 
 
 @register("window_lag_lead", oracle="""

@@ -156,8 +156,7 @@ def q8(spark, sf_dir):
     different roles (customer side filters the region, supplier side feeds
     the CASE numerator). Exact decimal sums; ONE double division.
 
-    ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    _q8_composed). Broadcast hints ONLY on bounded tables (nation=25,
+    ONE spark.sql parse (round-10 batch 5). Broadcast hints ONLY on bounded tables (nation=25,
     region=5 rows), riding in on the parameter DataFrames
     (F.broadcast → ResolvedHint); customer/supplier grow linearly with
     SF — AQE broadcasts them by MEASUREMENT when small (round-3 verdict
@@ -184,34 +183,6 @@ def q8(spark, sf_dir):
         r=F.broadcast(t(spark, sf_dir, "region")))
 
 
-def _q8_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    li = t(spark, sf_dir, "lineitem")
-    o = t(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp_ntz")) &
-        (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp_ntz")))
-    c = t(spark, sf_dir, "customer")
-    s = t(spark, sf_dir, "supplier")
-    n = t(spark, sf_dir, "nation")
-    r = t(spark, sf_dir, "region")
-
-    n1 = n.alias("n1")
-    n2 = n.alias("n2")
-    nation_share = F.when(F.col("n2.n_name") == "NATION_3", _rev()) \
-        .otherwise(F.lit(0).cast("decimal(16,4)"))
-    return (li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(c, o.o_custkey == c.c_custkey)
-            .join(F.broadcast(n1), F.col("c_nationkey") == F.col("n1.n_nationkey"))
-            .join(F.broadcast(r.where(F.col("r_name") == "AMERICA")),
-                  F.col("n1.n_regionkey") == F.col("r_regionkey"))
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2.n_nationkey"))
-            .groupBy(F.year("o_orderdate").alias("o_year"))
-            .agg((F.sum(nation_share).cast("double") /
-                  F.sum(_rev()).cast("double")).alias("mkt_share"))
-            .orderBy("o_year"))
-
-
 @register("q9_product_profit", oracle=f"""
 SELECT n_name AS nation,
        CAST(extract(year FROM o_orderdate) AS INTEGER) AS o_year,
@@ -231,8 +202,7 @@ def q9(spark, sf_dir):
     proxied by 10% of retail price × quantity (no partsupp table). The
     LIKE filter prunes part before the fact join.
 
-    ONE spark.sql parse (round-10 batch 5; value-pinned ==
-    _q9_composed). nation is the only forced broadcast (25 rows,
+    ONE spark.sql parse (round-10 batch 5). nation is the only forced broadcast (25 rows,
     SF-invariant, hint on the parameter DataFrame); the LIKE-filtered
     part and supplier are SF-proportional — AQE decides (scale-safe)."""
     return spark.sql(f"""
@@ -252,26 +222,6 @@ def q9(spark, sf_dir):
         s=t(spark, sf_dir, "supplier"),
         n=F.broadcast(t(spark, sf_dir, "nation")),
         o=t(spark, sf_dir, "orders"))
-
-
-def _q9_composed(spark, sf_dir):
-    """Pre-round-10 Column-composed build (equivalence-pin twin)."""
-    li = t(spark, sf_dir, "lineitem")
-    p = t(spark, sf_dir, "part").where(F.col("p_name").like("%gear%"))
-    s = t(spark, sf_dir, "supplier")
-    n = t(spark, sf_dir, "nation")
-    o = t(spark, sf_dir, "orders")
-    amount = (_rev() - F.col("p_retailprice").cast("decimal(12,2)") *
-              F.col("l_quantity").cast("decimal(9,2)") *
-              F.lit(0.1).cast("decimal(3,1)"))
-    return (li.join(p, li.l_partkey == p.p_partkey)
-            .join(s, li.l_suppkey == s.s_suppkey)
-            .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-            .join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy(F.col("n_name").alias("nation"),
-                     F.year("o_orderdate").alias("o_year"))
-            .agg(F.sum(amount).cast("double").alias("profit"))
-            .orderBy("nation", F.desc("o_year")))
 
 
 @register("q13_order_distribution", oracle="""

@@ -661,7 +661,15 @@ class _Conn(socketserver.BaseRequestHandler):
         # (with NULL parameters), then again at Execute. Clients that
         # Describe before Execute (psycopg, JDBC) hit this on every write.
         kind = self.engine.transpiler.statement_kind(stmt.sql)
-        if kind not in ("SELECT", "WITH", "VALUES", "EXPLAIN", "TABLE"):
+        if kind == "EXPLAIN":
+            # no probe: both EXPLAIN paths of _execute_one answer one
+            # text column named QUERY PLAN, while a raw spark.sql names
+            # it `plan` and never sees the EXPLAIN ANALYZE rewrite
+            from datafusion_postgres_spark.session import text_schema
+            schema = text_schema(["QUERY PLAN"])
+            return _row_description(
+                schema, _column_formats(schema, result_formats))
+        if kind not in ("SELECT", "WITH", "VALUES", "TABLE"):
             return _msg(b"n", b"")  # NoData
         try:
             nulls = {f"p{i + 1}": None for i in range(stmt.num_params)}

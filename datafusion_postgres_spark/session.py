@@ -146,11 +146,15 @@ class ExecutionResult:
         return self.df.collect()
 
 
+def text_schema(columns: list[str]) -> StructType:
+    """The schema of a result made only of text columns."""
+    return StructType([StructField(c, StringType()) for c in columns])
+
+
 def text_result(columns: list[str], rows: list, tag: str) -> ExecutionResult:
     """A driver-held result of text columns (hook and EXPLAIN answers)."""
-    schema = StructType([StructField(c, StringType()) for c in columns])
     return ExecutionResult(df=None, command_tag=tag, held_rows=rows,
-                           held_schema=schema)
+                           held_schema=text_schema(columns))
 
 
 @dataclass

@@ -133,3 +133,32 @@ class TestBpe:
             assert "syms" not in cols, (
                 "distributed path collected full vocabulary rows: "
                 f"{cols}")
+
+    def test_failed_probe_releases_vocab_persist(self, spark, monkeypatch):
+        """The vocabulary persist is released even when the size probe
+        that follows it raises — the session's cache manager keeps no
+        entry for it."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        persisted = []
+        orig_persist, orig_collect = DataFrame.persist, DataFrame.collect
+
+        def spy_persist(df, *args, **kwargs):
+            out = orig_persist(df, *args, **kwargs)
+            persisted.append(out)
+            return out
+
+        def failing_probe(df):
+            if df.columns == ["one"]:
+                raise RuntimeError("probe failed")
+            return orig_collect(df)
+
+        monkeypatch.setattr(DataFrame, "persist", spy_persist)
+        monkeypatch.setattr(DataFrame, "collect", failing_probe)
+        docs = spark.createDataFrame(
+            list(enumerate(TEXTS)), "doc_id long, text string")
+        with pytest.raises(RuntimeError, match="probe failed"):
+            bpe_train(docs, n_merges=3)
+        (vocab,) = persisted
+        level = vocab.storageLevel  # looked up in the cache manager
+        assert not (level.useMemory or level.useDisk)

@@ -270,3 +270,47 @@ def test_local_relation_leaf_still_fingerprints_files(spark, tmp_path):
     local = spark.createDataFrame([(1,), (2,)], "id long")
     joined = spark.read.parquet(p).join(local, "id")
     assert _input_fingerprint(joined) is not None
+
+
+class TestCheckpointGrowthWarning:
+    """Reliable checkpoints are never deleted unless
+    spark.cleaner.referenceTracking.cleanCheckpoints is true, so the
+    checkpoint dir grows every round: bounded_checkpoint warns once."""
+
+    def _warnings(self, spark, tmp_path, caplog, monkeypatch):
+        from datafusion_postgres_spark.operators import cachectl
+
+        monkeypatch.setattr(cachectl, "_checkpoint_growth_warned", False)
+        df = spark.range(3)
+        sc = spark.sparkContext
+        assert sc.getCheckpointDir() is None
+        sc.setCheckpointDir(str(tmp_path / "ckpt"))
+        try:
+            with caplog.at_level("WARNING", logger=cachectl.__name__):
+                for _ in range(2):
+                    assert cachectl.bounded_checkpoint(df).count() == 3
+        finally:
+            sc.setCheckpointDir(None)
+            assert sc.getCheckpointDir() is None
+        return [r for r in caplog.records
+                if r.name == cachectl.__name__ and "grows" in r.message]
+
+    def test_warns_once_without_clean_checkpoints(
+            self, spark, tmp_path, caplog, monkeypatch):
+        assert len(self._warnings(spark, tmp_path, caplog,
+                                  monkeypatch)) == 1
+
+    def test_silent_when_clean_checkpoints_true(
+            self, spark, tmp_path, caplog, monkeypatch):
+        from pyspark import SparkContext
+
+        orig = SparkContext.getConf
+
+        def conf_with_clean(sc):
+            conf = orig(sc)
+            conf.set("spark.cleaner.referenceTracking.cleanCheckpoints",
+                     "true")
+            return conf
+
+        monkeypatch.setattr(SparkContext, "getConf", conf_with_clean)
+        assert self._warnings(spark, tmp_path, caplog, monkeypatch) == []

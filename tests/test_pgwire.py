@@ -820,6 +820,22 @@ class TestProtocolsAgree:
                    if t == b"T"]
         assert [fmt for _, _, fmt in desc] == [0, 0, 0]
 
+    @pytest.mark.parametrize("sql", ["EXPLAIN SELECT 1",
+                                     "EXPLAIN ANALYZE SELECT 1"])
+    def test_explain_describe_matches_execute(self, client, sql):
+        _frame(client, b"P", b"\x00" + sql.encode() + b"\x00\x00\x00")
+        _frame(client, b"D", b"S\x00")
+        _frame(client, b"B", b"\x00\x00" + struct.pack("!HHH", 0, 0, 0))
+        _frame(client, b"E", b"\x00" + struct.pack("!I", 0))
+        _frame(client, b"S", b"")
+        msgs = _until_ready(client)
+        assert not [t for t, _ in msgs if t in (b"E", b"n")]
+        (desc,) = [_row_desc(p) for t, p in msgs if t == b"T"]
+        assert desc == [("QUERY PLAN", 25, 0)]
+        rows = [_text_cells(p) for t, p in msgs if t == b"D"]
+        assert rows and all(len(r) == 1 for r in rows)
+        assert _tags(msgs) == ["EXPLAIN"]
+
     def test_describe_unknown_portal(self, client):
         _frame(client, b"D", b"Pno_such_portal\x00")
         _frame(client, b"S", b"")

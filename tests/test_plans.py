@@ -130,14 +130,6 @@ def test_sample_mixture_zero_shuffle(spark):
     assert P.count_shuffles(core) == 0
 
 
-def test_pq_encode_zero_shuffle(spark):
-    from datafusion_postgres_spark.operators import similarity as S
-    from datafusion_postgres_spark.sources.registry import read_table
-    emb = read_table(spark, SF_DIR, "embeddings")
-    cb = S.pq_train(emb, m=8, ksub=8, iters=1)
-    assert P.count_shuffles(S.pq_encode(emb, cb)) == 0
-
-
 def test_funnel_shuffles_bounded(spark):
     # 3-stage funnel: per stage one groupBy (+ stage joins reuse the
     # user_id layout); final tiny unions. Bound the pre-AQE count.

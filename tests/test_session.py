@@ -142,6 +142,31 @@ class TestCatalog:
             "ORDER BY typname"))
         assert [r[0] for r in rows] == ["bool", "date", "float8", "int4", "text"]
 
+    def test_format_type_names_every_array_type(self, engine):
+        from datafusion_postgres_spark.catalog.pg_catalog import _PG_TYPES
+        pairs = [(oid, arr) for _n, oid, _l, cat, _e, arr in _PG_TYPES
+                 if cat != "A" and arr]
+        (row,) = one_row(engine.execute("SELECT " + ", ".join(
+            f"format_type({oid}, NULL), format_type({arr}, NULL)"
+            for oid, arr in pairs)))
+        for i in range(0, len(row), 2):
+            assert row[i] != "???"
+            assert row[i + 1] == row[i] + "[]"
+
+    def test_format_type_of_array_columns(self, engine):
+        # psql \d of a table with array columns
+        engine.execute("CREATE OR REPLACE TEMP VIEW zz_arr_cols AS "
+                       "SELECT ARRAY[1, 2] AS ints, ARRAY['a'] AS strs")
+        rows = one_row(engine.execute("""
+            SELECT a.attname,
+                   pg_catalog.format_type(a.atttypid, a.atttypmod)
+            FROM pg_catalog.pg_attribute a
+            WHERE a.attrelid = 'zz_arr_cols'::regclass AND a.attnum > 0
+              AND NOT a.attisdropped
+            ORDER BY a.attnum"""))
+        assert [tuple(r) for r in rows] == [("ints", "integer[]"),
+                                            ("strs", "text[]")]
+
     def test_pg_get_keywords(self, engine):
         rows = one_row(engine.execute("SELECT count(*) FROM pg_get_keywords()"))
         assert rows[0][0] > 50

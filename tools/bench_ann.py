@@ -39,70 +39,22 @@ def main() -> None:
     cents.cache().count()
     builds["ivf"] = time.perf_counter() - t0
     t0 = time.perf_counter()
-    codebooks = S.pq_train(emb, m=16, ksub=32, iters=3)
-    pq_codes = S.pq_encode(emb, codebooks).cache()
-    pq_codes.count()
-    builds["pq"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
     bounds = S.sq8_train(emb)
     sq_codes = S.sq8_encode(emb, *bounds).cache()
     sq_codes.count()
     builds["sq8"] = time.perf_counter() - t0
-    t0 = time.perf_counter()
-    comps16 = S.pca_components(emb, k=16)
-    pca_emb = (S.pca_project(emb, comps16)
-               .select("vec_id", F.col("pvec").alias("embedding")).cache())
-    pca_emb.count()
-    builds["pca16"] = time.perf_counter() - t0
-
-    def pca_q():
-        return (S.pca_project(
-            q.select(F.col("qid").alias("vec_id"),
-                     F.col("qvec").alias("embedding")), comps16)
-            .select(F.col("vec_id").alias("qid"),
-                    F.col("pvec").alias("qvec")))
-
-    t0 = time.perf_counter()
-    comps32 = S.pca_components(emb, k=32)
-    pca32_emb = (S.pca_project(emb, comps32)
-                 .select("vec_id", F.col("pvec").alias("embedding")).cache())
-    pca32_emb.count()
-    builds["pca32"] = time.perf_counter() - t0
-
-    def pca32_q():
-        return (S.pca_project(
-            q.select(F.col("qid").alias("vec_id"),
-                     F.col("qvec").alias("embedding")), comps32)
-            .select(F.col("vec_id").alias("qid"),
-                    F.col("pvec").alias("qvec")))
 
     methods = {
         "exact_bruteforce": (0.0,
                              lambda: S.cosine_topk_bruteforce(emb, q, k=k)),
-        "lsh": (0.0, lambda: S.cosine_topk_lsh(emb, q, k=k, n_planes=8,
-                                               dims=64, n_probes=1)),
-        "lsh_multiprobe": (0.0, lambda: S.cosine_topk_lsh(
-            emb, q, k=k, n_planes=8, dims=64, n_probes=8)),
         "ivf_trained": (builds["ivf"], lambda: S.cosine_topk_ivf(
             emb, q, k=k, n_centroids=16, n_probe=4, centroids=cents)),
-        "pq_trained": (builds["pq"], lambda: S.cosine_topk_pq(
-            emb, q, k=k, codebooks=codebooks, codes=pq_codes)),
         "sq8": (builds["sq8"], lambda: S.cosine_topk_sq8(
             emb, q, k=k, bounds=bounds, codes=sq_codes)),
         "ivf_sq8": (builds["ivf"] + builds["sq8"],
                     lambda: S.cosine_topk_ivf_sq8(
                         emb, q, k=k, n_centroids=16, n_probe=4,
                         centroids=cents, bounds=bounds, codes=sq_codes)),
-        # 4x/2x dimension reduction BEFORE the scan (FAISS PCAMatrix
-        # shape). NOTE: this synthetic corpus is ISOTROPIC (pca_spectrum
-        # is flat), the worst case for PCA — the rows exist to measure
-        # that honestly; real embedding corpora are anisotropic.
-        "pca16_bruteforce": (builds["pca16"],
-                             lambda: S.cosine_topk_bruteforce(
-                                 pca_emb, pca_q(), k=k)),
-        "pca32_bruteforce": (builds["pca32"],
-                             lambda: S.cosine_topk_bruteforce(
-                                 pca32_emb, pca32_q(), k=k)),
     }
 
     def top_set(fn):

@@ -71,9 +71,45 @@ def normalize(rows):
     return sorted(tuple(norm_val(v) for v in row) for row in rows)
 
 
-def main():
-    from pyspark.sql import SparkSession
+def compare_to_oracle(sdf, srows, con, oracle_sql: str) -> str | None:
+    """Compare a query's Spark result with its DuckDB oracle: column
+    names, compatible column types, row count and repr-strict values
+    (order-insensitive). ``srows`` is ``sdf`` collected as tuples.
+    Returns None when they agree, else a one-line failure message."""
+    try:
+        dres = con.execute(oracle_sql)
+        dcols = [d[0] for d in dres.description]
+        drows = dres.fetchall()
+    except Exception as e:
+        return f"DUCK ERROR: {e}"
+    scols = sdf.columns
+    if sorted(scols) != sorted(dcols):
+        return f"COLS: spark={scols} duck={dcols}"
+    # schema check: compare arrow type classes
+    try:
+        duck_types = {f.name: f.type for f in
+                      con.execute(oracle_sql).arrow().schema}
+    except Exception:
+        duck_types = {}
+    spark_types = {f.name: f.dataType.simpleString()
+                   for f in sdf.schema.fields}
+    for cname, dtype in duck_types.items():
+        stype = spark_types.get(cname, "?")
+        if not _types_compatible(stype, dtype):
+            return f"TYPE {cname}: spark={stype} duck={dtype}"
+    # reorder duck columns to spark order
+    order = [dcols.index(c) for c in scols]
+    drows = [tuple(r[i] for i in order) for r in drows]
+    if len(srows) != len(drows):
+        return f"ROWCOUNT: spark={len(srows)} duck={len(drows)}"
+    sn, dn = normalize(srows), normalize(drows)
+    if sn != dn:
+        diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
+        return f"VALUES differ, first diffs: {diff}"
+    return None
 
+
+def main():
     from datafusion_postgres_spark.session import build_spark
     from datafusion_postgres_spark.queries import PRIORITY, load_all
     from datafusion_postgres_spark.functions import register_functions
@@ -93,7 +129,6 @@ def main():
         try:
             sdf = spec.fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
         except Exception as e:
             failed.append((name, f"SPARK ERROR: {e}"))
             traceback.print_exc()
@@ -113,46 +148,9 @@ def main():
         if spec.oracle is None:
             rows_only.append((name, len(srows)))
             continue
-        try:
-            dres = con.execute(spec.oracle)
-            dcols = [d[0] for d in dres.description]
-            drows = dres.fetchall()
-        except Exception as e:
-            failed.append((name, f"DUCK ERROR: {e}"))
-            continue
-        if sorted(scols) != sorted(dcols):
-            failed.append((name, f"COLS: spark={scols} duck={dcols}"))
-            continue
-        # approximate the driver's schema check: compare arrow type classes
-        try:
-            duck_arrow = {f.name: f.type for f in
-                          con.execute(spec.oracle).arrow().schema}
-            import pyarrow as pa
-            spark_arrow = {}
-            for f in sdf.schema.fields:
-                spark_arrow[f.name] = f.dataType.simpleString()
-            for cname, dtype in duck_arrow.items():
-                stype = spark_arrow.get(cname, "?")
-                if not _types_compatible(stype, dtype):
-                    failed.append(
-                        (name, f"TYPE {cname}: spark={stype} duck={dtype}"))
-                    break
-            else:
-                pass
-        except Exception:
-            pass
-        if failed and failed[-1][0] == name:
-            continue
-        # reorder duck columns to spark order
-        order = [dcols.index(c) for c in scols]
-        drows = [tuple(r[i] for i in order) for r in drows]
-        if len(srows) != len(drows):
-            failed.append((name, f"ROWCOUNT: spark={len(srows)} duck={len(drows)}"))
-            continue
-        sn, dn = normalize(srows), normalize(drows)
-        if sn != dn:
-            diff = [(a, b) for a, b in zip(sn, dn) if a != b][:3]
-            failed.append((name, f"VALUES differ, first diffs: {diff}"))
+        err = compare_to_oracle(sdf, srows, con, spec.oracle)
+        if err:
+            failed.append((name, err))
             continue
         passed.append((name, len(srows)))
 

@@ -199,12 +199,6 @@ COMMENTARY = {
         "local_vocab_limit the merge loop runs driver-side "
         "(kmeans-centroid shape), so the plan shown is just the "
         "vocabulary reduction.",
-    "sim_cosine_lsh_multiprobe":
-        "Round 6: corpus buckets once (zero-shuffle projection); the "
-        "TINY query side explodes into 8 margin-sorted probe buckets "
-        "behind a localCheckpoint (caps codegen size) and broadcasts; "
-        "candidates only meet inside probed buckets. sq8/ivf_sq8 stay "
-        "the routed scale tiers (ANN_RECALL.json).",
     "text_trained_classifier":
         "Round-6 marquee: TRAINED logistic classifier. The plan shown is "
         "the SCORING pass — one zero-shuffle codegen projection against "
