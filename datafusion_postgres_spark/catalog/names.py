@@ -9,16 +9,15 @@ Spark temp views are a flat namespace, so the dialect layer maps
 ``pg_catalog.pg_class`` → view ``pg_catalog_pg_class``.
 """
 
-# Dynamically synthesized from the live session catalog on access
-DYNAMIC_PG_TABLES = {
-    "pg_class", "pg_attribute", "pg_namespace", "pg_database", "pg_tables",
-    "pg_settings", "pg_roles", "pg_views", "pg_matviews",
-    "pg_stat_user_tables", "pg_replication_slots", "pg_stat_gssapi",
-}
+# Rebuilt from the live session catalog / GUCs by pg_catalog.refresh
+DYNAMIC_PG_TABLES = {"pg_class", "pg_attribute", "pg_tables", "pg_settings"}
 
-# Static snapshots (exported from a real PostgreSQL by the reference's
-# export_pg_catalog_arrow.sh; we regenerate equivalent content ourselves)
+# Built once per server (the reference exports these from a real
+# PostgreSQL with export_pg_catalog_arrow.sh; we regenerate equivalent
+# content ourselves)
 STATIC_PG_TABLES = {
+    "pg_namespace", "pg_database", "pg_roles", "pg_views", "pg_matviews",
+    "pg_stat_user_tables", "pg_replication_slots", "pg_stat_gssapi",
     "pg_type", "pg_proc", "pg_am", "pg_operator", "pg_collation",
     "pg_constraint", "pg_index", "pg_inherits", "pg_description",
     "pg_depend", "pg_enum", "pg_extension", "pg_language", "pg_rewrite",

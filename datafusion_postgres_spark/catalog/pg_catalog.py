@@ -5,13 +5,28 @@ tables (exported from a real PostgreSQL) + 8 dynamic tables synthesized
 from the live session catalog, with stable fake OIDs (pg_catalog namespace
 = 11, dynamic OIDs counted from 16384, ``pg_catalog.rs:196-256``).
 
-Spark design: each table is a temp view named ``pg_catalog_<name>``
-(Spark temp views are a flat namespace; the dialect layer rewrites
-``pg_catalog.pg_class`` references). Dynamic tables are rebuilt from
-``spark.catalog`` by ``refresh()`` — the engine calls it lazily when a
-statement touches pg_catalog and DDL has happened since the last build
-(the reference recomputes on *every* scan, ``pg_class.rs:84``; caching is
-our 100 TB-scale improvement flagged in SURVEY.md §7).
+Spark design: each table is a temp view named ``pg_catalog_<name>`` or
+``information_schema_<name>`` (Spark temp views are a flat namespace; the
+dialect layer rewrites ``pg_catalog.pg_class`` references).
+
+* **Arrow-backed local relations.** Like the reference's in-memory Arrow
+  ``RecordBatch``es, every view is built by :func:`_view` on the driver:
+  rows + ``StructType`` -> ``pyarrow.Table`` -> ``createDataFrame``, which
+  Spark plans as a ``LocalTableScan``. A catalog read therefore starts no
+  Python worker and scans no RDD.
+* **Static vs dynamic.** :func:`_static_views` builds, once per server
+  (the template session; connections inherit the views through
+  ``cloneSession``), every table that depends on neither the relations
+  nor the GUCs. :func:`refresh` rebuilds only the relation-dependent ones
+  — ``pg_class``, ``pg_attribute``, ``pg_tables``,
+  ``information_schema.tables`` / ``.columns`` — plus ``pg_settings``
+  (:func:`refresh_settings`). The engine calls it lazily when a statement
+  touches the catalog and DDL has happened since the last build (the
+  reference recomputes on *every* scan, ``pg_class.rs:84``).
+* **The self-row record.** :func:`_view` records each view's final column
+  list (hand-written columns, then the ``schema_ref.py`` NULL pad) in
+  :data:`CATALOG_COLUMNS`; ``pg_class`` / ``pg_attribute`` list the
+  catalog relations themselves from that record, without asking Spark.
 
 Static-table content is regenerated from public PostgreSQL documentation
 values (type OIDs etc.), not copied from the reference's feather exports.
@@ -19,11 +34,16 @@ values (type OIDs etc.), not copied from the reference's feather exports.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    ArrayType, BooleanType, FloatType, IntegerType, LongType, ShortType,
-    StringType, StructField, StructType,
+    ArrayType, BinaryType, BooleanType, FloatType, IntegerType, LongType,
+    ShortType, StringType, StructField, StructType, TimestampType,
 )
+
+from datafusion_postgres_spark.catalog.schema_ref import (
+    PG_CATALOG_REF_SCHEMAS)
 
 PG_CATALOG_NAMESPACE_OID = 11
 PUBLIC_NAMESPACE_OID = 2200
@@ -137,24 +157,46 @@ class OidRegistry:
         return self._cache[qualified_name]
 
 
-def _view(spark, name: str, schema: StructType, rows: list) -> None:
-    """Create a catalog view, padded to the reference's full column set.
+# view name -> its final columns as (name, Spark simpleString type,
+# nullable), in view order; written by _padded_schema for every view
+CATALOG_COLUMNS: dict[str, list[tuple[str, str, bool]]] = {}
+
+# the Spark types schema_ref.py uses, keyed by their type strings
+_REF_TYPES = {t.simpleString(): t for t in (
+    IntegerType(), LongType(), ShortType(), FloatType(), BooleanType(),
+    StringType(), BinaryType(), TimestampType(), ArrayType(ShortType()))}
+
+
+def _padded_schema(name: str, schema: StructType) -> StructType:
+    """``schema`` padded to the reference's full column set, recorded in
+    :data:`CATALOG_COLUMNS`.
 
     Our hand-modeled tables carry the columns clients actually read;
     anything else in the stock PostgreSQL catalog schema (schema_ref.py,
-    from the reference's pg_catalog exports) is appended as a typed NULL
-    so deep-introspection queries (pgadmin/DBeaver column lists) resolve."""
-    from datafusion_postgres_spark.catalog.schema_ref import (
-        PG_CATALOG_REF_SCHEMAS)
-    df = spark.createDataFrame(rows, schema)
-    ref = PG_CATALOG_REF_SCHEMAS.get(name.removeprefix("pg_catalog_"))
-    if ref:
-        have = {c.lower() for c in df.columns}
-        pad = [f"CAST(NULL AS {t}) AS {c}" for c, t in ref
-               if c.lower() not in have]
-        if pad:
-            df = df.selectExpr("*", *pad)
-    df.createOrReplaceTempView(name)
+    from the reference's pg_catalog exports) is appended as a nullable
+    column so deep-introspection queries (pgadmin/DBeaver column lists)
+    resolve."""
+    have = {f.name.lower() for f in schema}
+    pad = [StructField(c, _REF_TYPES[t]) for c, t in
+           PG_CATALOG_REF_SCHEMAS.get(name.removeprefix("pg_catalog_"), ())
+           if c.lower() not in have]
+    full = StructType(schema.fields + pad)
+    CATALOG_COLUMNS[name] = [(f.name, f.dataType.simpleString(), f.nullable)
+                             for f in full]
+    return full
+
+
+def _view(spark, name: str, schema: StructType, rows: list) -> None:
+    """Create a catalog view as an Arrow-backed local relation: ``rows``
+    fill the columns of ``schema``, the pad columns are NULL."""
+    width = len(schema)
+    schema = _padded_schema(name, schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], f.type) if i < width
+         else pa.nulls(len(rows), f.type) for i, f in enumerate(arrow)],
+        schema=arrow)
+    spark.createDataFrame(table, schema).createOrReplaceTempView(name)
 
 
 def _user_tables(spark) -> list:
@@ -203,18 +245,12 @@ _VIEWISH_CATALOG = {
 _SHARED_CATALOGS = {"pg_database", "pg_authid", "pg_auth_members",
                     "pg_tablespace", "pg_shdescription", "pg_shseclabel"}
 
-_CATALOG_SELF_ROWS: tuple[list, list] | None = None
 
-
-def _catalog_self_rows(spark) -> tuple[list, list]:
+def _catalog_self_rows() -> tuple[list, list]:
     """pg_class / pg_attribute rows for the catalog relations themselves
     (real PG lists its own catalogs; ``\\dS``, ``\\d pg_class`` and
-    ``to_regclass('pg_class')`` depend on it). The catalog views have the
-    same schemas in every session, so this is computed once per process,
-    from the first session's live views."""
-    global _CATALOG_SELF_ROWS
-    if _CATALOG_SELF_ROWS is not None:
-        return _CATALOG_SELF_ROWS
+    ``to_regclass('pg_class')`` depend on it), read from the columns
+    :func:`_view` recorded."""
     from datafusion_postgres_spark.catalog.names import (
         INFORMATION_SCHEMA_TABLES, PG_CATALOG_TABLES)
     cls_rows: list = []
@@ -229,10 +265,7 @@ def _catalog_self_rows(spark) -> tuple[list, list]:
             oid = _KNOWN_CATALOG_OIDS.get(name)
             if oid is None:
                 oid, next_oid = next_oid, next_oid + 1
-            try:
-                cols = spark.catalog.listColumns(prefix + name)
-            except Exception:
-                cols = []
+            cols = CATALOG_COLUMNS.get(prefix + name, [])
             relkind = ("v" if prefix == "information_schema_" or
                        name in _VIEWISH_CATALOG else "r")
             cls_rows.append((oid, name, ns, 0, 0, 10, 2, oid, 0, 0,
@@ -241,102 +274,100 @@ def _catalog_self_rows(spark) -> tuple[list, list]:
                              len(cols), 0, False, False, False, False,
                              False, True, "n", False, 0, 1, 1, None,
                              None, None))
-            for i, col in enumerate(cols, start=1):
-                type_oid, typlen = spark_type_to_pg_oid(col.dataType)
-                attr_rows.append((oid, col.name, type_oid, i, typlen,
-                                  -1, 0, not col.nullable, False, "", "",
-                                  False, True, 0))
-    _CATALOG_SELF_ROWS = (cls_rows, attr_rows)
-    return _CATALOG_SELF_ROWS
+            attr_rows += _attribute_rows(oid, cols)
+    return cls_rows, attr_rows
+
+
+def _attribute_rows(oid: int, cols: list) -> list:
+    """pg_attribute rows of relation ``oid`` from its (name, Spark type
+    string, nullable) columns."""
+    rows = []
+    for i, (name, dtype, nullable) in enumerate(cols, start=1):
+        type_oid, typlen = spark_type_to_pg_oid(dtype)
+        rows.append((oid, name, type_oid, i, typlen, -1, 0, not nullable,
+                     False, "", "", False, True, 0))
+    return rows
+
+
+# ---- pg_class (pg_catalog/pg_class.rs:31-79) ----
+_CLASS_SCHEMA = StructType([
+    StructField("oid", IntegerType()), StructField("relname", StringType()),
+    StructField("relnamespace", IntegerType()),
+    StructField("reltype", IntegerType()),
+    StructField("reloftype", IntegerType()),
+    StructField("relowner", IntegerType()),
+    StructField("relam", IntegerType()),
+    StructField("relfilenode", IntegerType()),
+    StructField("reltablespace", IntegerType()),
+    StructField("relpages", IntegerType()),
+    StructField("reltuples", FloatType()),
+    StructField("relallvisible", IntegerType()),
+    StructField("reltoastrelid", IntegerType()),
+    StructField("relhasindex", BooleanType()),
+    StructField("relisshared", BooleanType()),
+    StructField("relpersistence", StringType()),
+    StructField("relkind", StringType()),
+    StructField("relnatts", ShortType()),
+    StructField("relchecks", ShortType()),
+    StructField("relhasrules", BooleanType()),
+    StructField("relhastriggers", BooleanType()),
+    StructField("relhassubclass", BooleanType()),
+    StructField("relrowsecurity", BooleanType()),
+    StructField("relforcerowsecurity", BooleanType()),
+    StructField("relispopulated", BooleanType()),
+    StructField("relreplident", StringType()),
+    StructField("relispartition", BooleanType()),
+    StructField("relrewrite", IntegerType()),
+    StructField("relfrozenxid", IntegerType()),
+    StructField("relminmxid", IntegerType()),
+    StructField("relacl", StringType()),
+    StructField("reloptions", StringType()),
+    StructField("relpartbound", StringType())])
+
+# ---- pg_attribute (pg_catalog/pg_attribute.rs) ----
+_ATTRIBUTE_SCHEMA = StructType([
+    StructField("attrelid", IntegerType()),
+    StructField("attname", StringType()),
+    StructField("atttypid", IntegerType()),
+    StructField("attnum", ShortType()),
+    StructField("attlen", ShortType()),
+    StructField("atttypmod", IntegerType()),
+    StructField("attndims", ShortType()),
+    StructField("attnotnull", BooleanType()),
+    StructField("atthasdef", BooleanType()),
+    StructField("attidentity", StringType()),
+    StructField("attgenerated", StringType()),
+    StructField("attisdropped", BooleanType()),
+    StructField("attislocal", BooleanType()),
+    StructField("attinhcount", ShortType())])
 
 
 def refresh(spark: SparkSession, oids: OidRegistry,
             session_vars: dict | None = None) -> None:
-    """Rebuild the dynamic tables from the live session catalog, with
-    table OIDs from the session's ``oids`` and pg_settings from its GUCs
-    (``None`` = the defaults)."""
-    tables = _user_tables(spark)
-
-    # ---- pg_namespace (pg_catalog/pg_namespace.rs) ----
-    ns_schema = StructType([
-        StructField("oid", IntegerType()), StructField("nspname", StringType()),
-        StructField("nspowner", IntegerType()),
-        StructField("nspacl", StringType())])
-    _view(spark, "pg_catalog_pg_namespace", ns_schema, [
-        (PG_CATALOG_NAMESPACE_OID, "pg_catalog", 10, None),
-        (PUBLIC_NAMESPACE_OID, "public", 10, None),
-        (13000, "information_schema", 10, None)])
-
-    # ---- pg_class (pg_catalog/pg_class.rs:31-79) ----
-    cls_schema = StructType([
-        StructField("oid", IntegerType()), StructField("relname", StringType()),
-        StructField("relnamespace", IntegerType()),
-        StructField("reltype", IntegerType()),
-        StructField("reloftype", IntegerType()),
-        StructField("relowner", IntegerType()),
-        StructField("relam", IntegerType()),
-        StructField("relfilenode", IntegerType()),
-        StructField("reltablespace", IntegerType()),
-        StructField("relpages", IntegerType()),
-        StructField("reltuples", FloatType()),
-        StructField("relallvisible", IntegerType()),
-        StructField("reltoastrelid", IntegerType()),
-        StructField("relhasindex", BooleanType()),
-        StructField("relisshared", BooleanType()),
-        StructField("relpersistence", StringType()),
-        StructField("relkind", StringType()),
-        StructField("relnatts", ShortType()),
-        StructField("relchecks", ShortType()),
-        StructField("relhasrules", BooleanType()),
-        StructField("relhastriggers", BooleanType()),
-        StructField("relhassubclass", BooleanType()),
-        StructField("relrowsecurity", BooleanType()),
-        StructField("relforcerowsecurity", BooleanType()),
-        StructField("relispopulated", BooleanType()),
-        StructField("relreplident", StringType()),
-        StructField("relispartition", BooleanType()),
-        StructField("relrewrite", IntegerType()),
-        StructField("relfrozenxid", IntegerType()),
-        StructField("relminmxid", IntegerType()),
-        StructField("relacl", StringType()),
-        StructField("reloptions", StringType()),
-        StructField("relpartbound", StringType())])
-    cls_rows = []
-    attr_rows = []
-    for tbl in tables:
+    """Rebuild the relation-dependent tables from the live session
+    catalog, with table OIDs from the session's ``oids``, and pg_settings
+    from its GUCs (``None`` = the defaults)."""
+    cls_rows, attr_rows, tbl_rows, info_tbl_rows, info_col_rows = \
+        [], [], [], [], []
+    for tbl in _user_tables(spark):
         oid = oids.oid(f"public.{tbl.name}")
-        cols = spark.catalog.listColumns(tbl.name)
+        cols = [(f.name, f.dataType.simpleString(), f.nullable)
+                for f in spark.table(tbl.name).schema]
         cls_rows.append((oid, tbl.name, PUBLIC_NAMESPACE_OID, 0, 0, 10, 2,
                          oid, 0, 0, float(-1), 0, 0, False, False, "p", "r",
                          len(cols), 0, False, False, False, False, False,
                          True, "d", False, 0, 1, 1, None, None, None))
-        for i, col in enumerate(cols, start=1):
-            type_oid, typlen = spark_type_to_pg_oid(col.dataType)
-            attr_rows.append((oid, col.name, type_oid, i, typlen,
-                              -1, 0, not col.nullable, False, "", "", False,
-                              True, 0))
-    _view(spark, "pg_catalog_pg_class", cls_schema, cls_rows)
-
-    # ---- pg_attribute (pg_catalog/pg_attribute.rs) ----
-    attr_schema = StructType([
-        StructField("attrelid", IntegerType()),
-        StructField("attname", StringType()),
-        StructField("atttypid", IntegerType()),
-        StructField("attnum", ShortType()),
-        StructField("attlen", ShortType()),
-        StructField("atttypmod", IntegerType()),
-        StructField("attndims", ShortType()),
-        StructField("attnotnull", BooleanType()),
-        StructField("atthasdef", BooleanType()),
-        StructField("attidentity", StringType()),
-        StructField("attgenerated", StringType()),
-        StructField("attisdropped", BooleanType()),
-        StructField("attislocal", BooleanType()),
-        StructField("attinhcount", ShortType())])
-    _view(spark, "pg_catalog_pg_attribute", attr_schema, attr_rows)
+        attr_rows += _attribute_rows(oid, cols)
+        tbl_rows.append(("public", tbl.name, "postgres", None, False, False,
+                         False, False))
+        info_tbl_rows.append(("postgres", "public", tbl.name, "BASE TABLE"))
+        info_col_rows += [("postgres", "public", tbl.name, name, i, None,
+                           "YES" if nullable else "NO", dtype)
+                          for i, (name, dtype, nullable) in
+                          enumerate(cols, start=1)]
 
     # ---- pg_tables (pg_catalog/pg_tables.rs) ----
-    tbl_schema = StructType([
+    _view(spark, "pg_catalog_pg_tables", StructType([
         StructField("schemaname", StringType()),
         StructField("tablename", StringType()),
         StructField("tableowner", StringType()),
@@ -344,55 +375,33 @@ def refresh(spark: SparkSession, oids: OidRegistry,
         StructField("hasindexes", BooleanType()),
         StructField("hasrules", BooleanType()),
         StructField("hastriggers", BooleanType()),
-        StructField("rowsecurity", BooleanType())])
-    _view(spark, "pg_catalog_pg_tables", tbl_schema,
-          [("public", t.name, "postgres", None, False, False, False, False)
-           for t in tables])
+        StructField("rowsecurity", BooleanType())]), tbl_rows)
 
-    # ---- pg_database (pg_catalog/pg_database.rs) ----
-    db_schema = StructType([
-        StructField("oid", IntegerType()), StructField("datname", StringType()),
-        StructField("datdba", IntegerType()),
-        StructField("encoding", IntegerType()),
-        StructField("datlocprovider", StringType()),
-        StructField("datistemplate", BooleanType()),
-        StructField("datallowconn", BooleanType()),
-        StructField("datconnlimit", IntegerType()),
-        StructField("datcollate", StringType()),
-        StructField("datctype", StringType()),
-        StructField("datacl", StringType())])
-    _view(spark, "pg_catalog_pg_database", db_schema,
-          [(1, "postgres", 10, 6, "c", False, True, -1, "C", "C", None)])
-
-    # ---- pg_roles / pg_settings (pg_roles.rs, pg_settings.rs) ----
-    roles_schema = StructType([
-        StructField("oid", IntegerType()), StructField("rolname", StringType()),
-        StructField("rolsuper", BooleanType()),
-        StructField("rolinherit", BooleanType()),
-        StructField("rolcreaterole", BooleanType()),
-        StructField("rolcreatedb", BooleanType()),
-        StructField("rolcanlogin", BooleanType()),
-        StructField("rolreplication", BooleanType()),
-        StructField("rolconnlimit", IntegerType()),
-        StructField("rolpassword", StringType()),
-        StructField("rolvaliduntil", StringType()),
-        StructField("rolbypassrls", BooleanType()),
-        StructField("rolconfig", StringType())])
-    _view(spark, "pg_catalog_pg_roles", roles_schema,
-          [(10, "postgres", True, True, True, True, True, False, -1,
-            "********", None, True, None)])
+    # ---- information_schema (reference gets it from DataFusion) ----
+    _view(spark, "information_schema_tables", StructType([
+        StructField("table_catalog", StringType()),
+        StructField("table_schema", StringType()),
+        StructField("table_name", StringType()),
+        StructField("table_type", StringType())]), info_tbl_rows)
+    _view(spark, "information_schema_columns", StructType([
+        StructField("table_catalog", StringType()),
+        StructField("table_schema", StringType()),
+        StructField("table_name", StringType()),
+        StructField("column_name", StringType()),
+        StructField("ordinal_position", IntegerType()),
+        StructField("column_default", StringType()),
+        StructField("is_nullable", StringType()),
+        StructField("data_type", StringType())]), info_col_rows)
 
     refresh_settings(spark, session_vars)
 
-    # ---- empty view-style tables (pg_views.rs, pg_replication_slot.rs) ----
-    _build_view_tables(spark, tables)
-
-    # ---- catalog self-rows: recreate pg_class/pg_attribute with the
-    # catalog relations appended, now that every catalog view exists (the
-    # early creation above keeps first-bootstrap ordering sound) ----------
-    cat_cls, cat_attr = _catalog_self_rows(spark)
-    _view(spark, "pg_catalog_pg_class", cls_schema, cls_rows + cat_cls)
-    _view(spark, "pg_catalog_pg_attribute", attr_schema,
+    # pg_class and pg_attribute list themselves: record their columns
+    # before the self-rows are read
+    _padded_schema("pg_catalog_pg_class", _CLASS_SCHEMA)
+    _padded_schema("pg_catalog_pg_attribute", _ATTRIBUTE_SCHEMA)
+    cat_cls, cat_attr = _catalog_self_rows()
+    _view(spark, "pg_catalog_pg_class", _CLASS_SCHEMA, cls_rows + cat_cls)
+    _view(spark, "pg_catalog_pg_attribute", _ATTRIBUTE_SCHEMA,
           attr_rows + cat_attr)
 
 
@@ -427,90 +436,6 @@ def refresh_settings(spark: SparkSession, session_vars: dict | None) -> None:
         rows.append((display, str(value), None, "Client Connection Defaults",
                      name.replace("_", " "), "user", vartype, source))
     _view(spark, "pg_catalog_pg_settings", settings_schema, rows)
-
-
-def _build_view_tables(spark: SparkSession, tables) -> None:
-    views_schema = StructType([
-        StructField("schemaname", StringType()),
-        StructField("viewname", StringType()),
-        StructField("viewowner", StringType()),
-        StructField("definition", StringType())])
-    _view(spark, "pg_catalog_pg_views", views_schema, [])
-    matviews_schema = StructType([
-        StructField("schemaname", StringType()),
-        StructField("matviewname", StringType()),
-        StructField("matviewowner", StringType()),
-        StructField("tablespace", StringType()),
-        StructField("hasindexes", BooleanType()),
-        StructField("ispopulated", BooleanType()),
-        StructField("definition", StringType())])
-    _view(spark, "pg_catalog_pg_matviews", matviews_schema, [])
-
-    # ---- information_schema (reference gets it from DataFusion) ----
-    info_tables = StructType([
-        StructField("table_catalog", StringType()),
-        StructField("table_schema", StringType()),
-        StructField("table_name", StringType()),
-        StructField("table_type", StringType())])
-    _view(spark, "information_schema_tables", info_tables,
-          [("postgres", "public", t.name, "BASE TABLE") for t in tables])
-    info_cols = StructType([
-        StructField("table_catalog", StringType()),
-        StructField("table_schema", StringType()),
-        StructField("table_name", StringType()),
-        StructField("column_name", StringType()),
-        StructField("ordinal_position", IntegerType()),
-        StructField("column_default", StringType()),
-        StructField("is_nullable", StringType()),
-        StructField("data_type", StringType())])
-    col_rows = []
-    for tbl in tables:
-        for i, col in enumerate(spark.catalog.listColumns(tbl.name), 1):
-            col_rows.append(("postgres", "public", tbl.name, col.name, i,
-                             None, "YES" if col.nullable else "NO",
-                             col.dataType))
-    _view(spark, "information_schema_columns", info_cols, col_rows)
-
-    # remaining advertised information_schema names (catalog/names.py):
-    # all must RESOLVE — schemata populated, routines derived from
-    # pg_proc, the constraint family truthfully empty (parquet views
-    # have no constraints)
-    _view(spark, "information_schema_schemata", StructType([
-        StructField("catalog_name", StringType()),
-        StructField("schema_name", StringType()),
-        StructField("schema_owner", StringType())]), [
-        ("postgres", "public", "postgres"),
-        ("postgres", "pg_catalog", "postgres"),
-        ("postgres", "information_schema", "postgres")])
-    _view(spark, "information_schema_views", StructType([
-        StructField("table_catalog", StringType()),
-        StructField("table_schema", StringType()),
-        StructField("table_name", StringType()),
-        StructField("view_definition", StringType())]), [])
-    _view(spark, "information_schema_table_constraints", StructType([
-        StructField("constraint_catalog", StringType()),
-        StructField("constraint_schema", StringType()),
-        StructField("constraint_name", StringType()),
-        StructField("table_schema", StringType()),
-        StructField("table_name", StringType()),
-        StructField("constraint_type", StringType())]), [])
-    _view(spark, "information_schema_key_column_usage", StructType([
-        StructField("constraint_name", StringType()),
-        StructField("table_schema", StringType()),
-        StructField("table_name", StringType()),
-        StructField("column_name", StringType()),
-        StructField("ordinal_position", IntegerType())]), [])
-    _view(spark, "information_schema_referential_constraints", StructType([
-        StructField("constraint_name", StringType()),
-        StructField("unique_constraint_name", StringType()),
-        StructField("update_rule", StringType()),
-        StructField("delete_rule", StringType())]), [])
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY VIEW information_schema_routines AS "
-        "SELECT 'postgres' AS routine_catalog, "
-        "'pg_catalog' AS routine_schema, proname AS routine_name, "
-        "'FUNCTION' AS routine_type, proresult_text AS data_type "
-        "FROM pg_catalog_pg_proc")
 
 
 # Spark SQL type string -> (pg type oid, pg type name) for pg_proc rows
@@ -678,7 +603,8 @@ def _static_views(spark: SparkSession) -> None:
         StructField("proargs_text", StringType()),  # pg_get_function_arguments
         StructField("proresult_text", StringType()),
         StructField("prosrc", StringType())])
-    _view(spark, "pg_catalog_pg_proc", proc_schema, _proc_rows())
+    proc_rows = _proc_rows()
+    _view(spark, "pg_catalog_pg_proc", proc_schema, proc_rows)
 
     # ---- pg_am ----
     am_schema = StructType([
@@ -740,6 +666,104 @@ def _static_views(spark: SparkSession) -> None:
         StructField("oprcom", IntegerType()),
         StructField("oprnegate", IntegerType()),
         StructField("oprcode", StringType())]), OCR.operator_rows())
+
+    # ---- pg_namespace (pg_catalog/pg_namespace.rs) ----
+    _view(spark, "pg_catalog_pg_namespace", StructType([
+        StructField("oid", IntegerType()), StructField("nspname", StringType()),
+        StructField("nspowner", IntegerType()),
+        StructField("nspacl", StringType())]), [
+        (PG_CATALOG_NAMESPACE_OID, "pg_catalog", 10, None),
+        (PUBLIC_NAMESPACE_OID, "public", 10, None),
+        (13000, "information_schema", 10, None)])
+
+    # ---- pg_database (pg_catalog/pg_database.rs) ----
+    _view(spark, "pg_catalog_pg_database", StructType([
+        StructField("oid", IntegerType()), StructField("datname", StringType()),
+        StructField("datdba", IntegerType()),
+        StructField("encoding", IntegerType()),
+        StructField("datlocprovider", StringType()),
+        StructField("datistemplate", BooleanType()),
+        StructField("datallowconn", BooleanType()),
+        StructField("datconnlimit", IntegerType()),
+        StructField("datcollate", StringType()),
+        StructField("datctype", StringType()),
+        StructField("datacl", StringType())]),
+        [(1, "postgres", 10, 6, "c", False, True, -1, "C", "C", None)])
+
+    # ---- pg_roles (pg_roles.rs) ----
+    _view(spark, "pg_catalog_pg_roles", StructType([
+        StructField("oid", IntegerType()), StructField("rolname", StringType()),
+        StructField("rolsuper", BooleanType()),
+        StructField("rolinherit", BooleanType()),
+        StructField("rolcreaterole", BooleanType()),
+        StructField("rolcreatedb", BooleanType()),
+        StructField("rolcanlogin", BooleanType()),
+        StructField("rolreplication", BooleanType()),
+        StructField("rolconnlimit", IntegerType()),
+        StructField("rolpassword", StringType()),
+        StructField("rolvaliduntil", StringType()),
+        StructField("rolbypassrls", BooleanType()),
+        StructField("rolconfig", StringType())]),
+        [(10, "postgres", True, True, True, True, True, False, -1,
+          "********", None, True, None)])
+
+    # ---- empty view-style tables (pg_views.rs, pg_replication_slot.rs) ----
+    _view(spark, "pg_catalog_pg_views", StructType([
+        StructField("schemaname", StringType()),
+        StructField("viewname", StringType()),
+        StructField("viewowner", StringType()),
+        StructField("definition", StringType())]), [])
+    _view(spark, "pg_catalog_pg_matviews", StructType([
+        StructField("schemaname", StringType()),
+        StructField("matviewname", StringType()),
+        StructField("matviewowner", StringType()),
+        StructField("tablespace", StringType()),
+        StructField("hasindexes", BooleanType()),
+        StructField("ispopulated", BooleanType()),
+        StructField("definition", StringType())]), [])
+
+    # ---- constant information_schema names (catalog/names.py): all must
+    # RESOLVE — schemata populated, routines derived from pg_proc, the
+    # constraint family truthfully empty (parquet views have no
+    # constraints) ----
+    _view(spark, "information_schema_schemata", StructType([
+        StructField("catalog_name", StringType()),
+        StructField("schema_name", StringType()),
+        StructField("schema_owner", StringType())]), [
+        ("postgres", "public", "postgres"),
+        ("postgres", "pg_catalog", "postgres"),
+        ("postgres", "information_schema", "postgres")])
+    _view(spark, "information_schema_views", StructType([
+        StructField("table_catalog", StringType()),
+        StructField("table_schema", StringType()),
+        StructField("table_name", StringType()),
+        StructField("view_definition", StringType())]), [])
+    _view(spark, "information_schema_table_constraints", StructType([
+        StructField("constraint_catalog", StringType()),
+        StructField("constraint_schema", StringType()),
+        StructField("constraint_name", StringType()),
+        StructField("table_schema", StringType()),
+        StructField("table_name", StringType()),
+        StructField("constraint_type", StringType())]), [])
+    _view(spark, "information_schema_key_column_usage", StructType([
+        StructField("constraint_name", StringType()),
+        StructField("table_schema", StringType()),
+        StructField("table_name", StringType()),
+        StructField("column_name", StringType()),
+        StructField("ordinal_position", IntegerType())]), [])
+    _view(spark, "information_schema_referential_constraints", StructType([
+        StructField("constraint_name", StringType()),
+        StructField("unique_constraint_name", StringType()),
+        StructField("update_rule", StringType()),
+        StructField("delete_rule", StringType())]), [])
+    _view(spark, "information_schema_routines", StructType([
+        StructField("routine_catalog", StringType(), False),
+        StructField("routine_schema", StringType(), False),
+        StructField("routine_name", StringType()),
+        StructField("routine_type", StringType(), False),
+        StructField("data_type", StringType())]),
+        [("postgres", "pg_catalog", r[1], "FUNCTION", r[11])
+         for r in proc_rows])
 
     # ---- misc empties clients probe ----
     for name, fields in [
@@ -970,11 +994,7 @@ def _static_views(spark: SparkSession) -> None:
     # Long-tail catalogs no client ever writes (pg_amop, pg_shdepend, ...)
     # still need to RESOLVE with the stock column set for deep
     # introspection; an empty result is the truthful content.
-    from datafusion_postgres_spark.catalog.schema_ref import (
-        PG_CATALOG_REF_SCHEMAS)
-    for tbl, cols in PG_CATALOG_REF_SCHEMAS.items():
+    for tbl in PG_CATALOG_REF_SCHEMAS:
         view = f"pg_catalog_{tbl}"
         if not spark.catalog.tableExists(view):
-            spark.createDataFrame(
-                [], ", ".join(f"{c} {t}" for c, t in cols)
-            ).createOrReplaceTempView(view)
+            _view(spark, view, StructType([]), [])

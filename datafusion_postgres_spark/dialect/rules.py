@@ -850,6 +850,100 @@ def map_cast_types(tokens: list[Token]) -> list[Token]:
     return tokens
 
 
+# ---------------------------------------------------------------------------
+# Rule: PG type names in CREATE TABLE column lists, through the map the
+# casts use: (k int8, v varchar(10), x double precision) ->
+# (k BIGINT, v STRING, x DOUBLE)
+
+_TABLE_CONSTRAINTS = ("CONSTRAINT", "PRIMARY", "UNIQUE", "CHECK", "FOREIGN",
+                      "EXCLUDE", "LIKE")
+
+
+def map_ddl_types(tokens: list[Token]) -> list[Token]:
+    first = significant(tokens, -1)
+    if first < 0 or not tokens[first].is_kw("CREATE"):
+        return tokens
+    i = first
+    while True:  # CREATE [OR REPLACE] [GLOBAL|LOCAL] [TEMP|UNLOGGED] TABLE
+        i = significant(tokens, i)
+        if i < 0 or tokens[i].is_kw("TABLE"):
+            break
+        if not tokens[i].is_kw("OR", "REPLACE", "GLOBAL", "LOCAL", "TEMP",
+                               "TEMPORARY", "UNLOGGED"):
+            return tokens
+    j = significant(tokens, i) if i >= 0 else -1
+    if j >= 0 and tokens[j].is_kw("IF"):  # IF NOT EXISTS
+        for _ in range(3):
+            j = significant(tokens, j) if j >= 0 else -1
+    while j >= 0 and tokens[j].kind in (IDENT, QIDENT):  # [schema.]name
+        k = significant(tokens, j)
+        if k < 0 or tokens[k].text != ".":
+            j = k
+            break
+        j = significant(tokens, k)
+    if j < 0 or tokens[j].text != "(":
+        return tokens
+    tokens = list(tokens)
+    close = _match_fwd(tokens, j)
+    while 0 <= j < close:  # j: the "(" or "," before a column definition
+        col = significant(tokens, j)
+        ty = significant(tokens, col)
+        if 0 <= col < ty < close and \
+                not tokens[col].is_kw(*_TABLE_CONSTRAINTS):
+            mapped = _spark_column_type(tokens, ty)
+            if mapped is not None:
+                spark_type, end = mapped
+                tokens[ty:end + 1] = [Token(IDENT, spark_type)]
+                close -= end - ty
+        j = ty
+        while 0 <= j < close and not (tokens[j].kind == PUNCT and
+                                      tokens[j].text == ","):
+            if tokens[j].kind == PUNCT and tokens[j].text == "(":
+                j = _match_fwd(tokens, j)
+            j += 1
+    return tokens
+
+
+def _spark_column_type(tokens: list[Token], ty: int) -> tuple[str, int] | None:
+    """(Spark type, index of its last token) for the PG column type that
+    starts at ``ty``, or None when it is not a PG type name. Length
+    modifiers drop (``STRING(10)`` does not parse); numeric keeps (p,s)."""
+    if tokens[ty].kind != IDENT:
+        return None
+    low, end = tokens[ty].text.lower(), ty
+    nxt = significant(tokens, ty)
+    if low == "double" and nxt >= 0 and tokens[nxt].is_kw("PRECISION"):
+        return "DOUBLE", nxt
+    if low == "character":
+        if nxt >= 0 and tokens[nxt].is_kw("VARYING"):
+            end = nxt
+        low = "varchar"
+    if low not in PG_TO_SPARK_TYPES:
+        return None
+    spark_type = PG_TO_SPARK_TYPES[low]
+    k = significant(tokens, end)
+    if k >= 0 and tokens[k].text == "(":
+        end = _match_fwd(tokens, k)
+        if low in ("numeric", "decimal"):
+            spark_type = "DECIMAL" + "".join(
+                t.text for t in tokens[k:end + 1] if t.kind != WS)
+        k = significant(tokens, end)
+    if low == "timestamp" and k >= 0 and tokens[k].is_kw("WITH", "WITHOUT"):
+        if tokens[k].is_kw("WITH"):
+            spark_type = "TIMESTAMP"
+        end = k
+        for _ in range(2):  # TIME ZONE
+            e = significant(tokens, end)
+            if e >= 0:
+                end = e
+        k = significant(tokens, end)
+    if k >= 0 and tokens[k].text == "[":
+        kb = significant(tokens, k)
+        if kb >= 0 and tokens[kb].text == "]":
+            spark_type, end = f"ARRAY<{spark_type}>", kb
+    return spark_type, end
+
+
 def _inside_cast(tokens: list[Token], as_idx: int) -> bool:
     depth = 0
     for i in range(as_idx - 1, -1, -1):
@@ -2209,6 +2303,7 @@ ALL_RULES = [
     rewrite_regex_ops,
     rewrite_reg_casts,
     map_cast_types,
+    map_ddl_types,
     rewrite_version,
     rewrite_to_char,
     rewrite_extract_fields,

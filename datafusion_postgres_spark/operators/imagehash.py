@@ -559,6 +559,21 @@ def chunked_hamming_pairs(sig: DataFrame, cols: list[str],
                                             "hamming")
 
 
+def _check_chunks(sig: DataFrame, cols: list[str]) -> None:
+    """Raise ValueError naming the first chunk column that holds a value
+    outside [0, 65535]: the packed carry in :func:`_rep_structures`
+    gives each chunk a disjoint 16-bit field, so a wider or negative
+    chunk would corrupt its neighbours' bits silently."""
+    bounds = sig.selectExpr(*[f"min({q})" for q in map(_bq, cols)],
+                            *[f"max({q})" for q in map(_bq, cols)]).first()
+    for c, lo, hi in zip(cols, bounds[:len(cols)], bounds[len(cols):]):
+        if lo is not None and (lo < 0 or hi > 0xFFFF):
+            raise ValueError(
+                f"chunk column {c!r} holds values in [{lo}, {hi}]; chunked "
+                "hamming pairing needs non-negative chunks of at most "
+                "16 bits")
+
+
 def _rep_structures(sig: DataFrame, cols: list[str], max_hamming: int,
                     cache_key: str, max_df: int | None, bc: list[str],
                     pre_cached: bool, need_members: bool = True,
@@ -588,6 +603,7 @@ def _rep_structures(sig: DataFrame, cols: list[str], max_hamming: int,
     # generation would unpersist data the other still believes live
     if not pre_cached:
         sig = cache_generation(cache_key, sig)
+    _check_chunks(sig, cols)
     group_key = bc + list(cols)
     bcq = [_bq(c) for c in bc]
     colsq = [_bq(c) for c in cols]

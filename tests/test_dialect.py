@@ -193,6 +193,31 @@ def test_plain_distinct_untouched(tp):
         norm("SELECT DISTINCT a FROM t")
 
 
+# psql-style column lists run end to end in
+# test_session.py::TestDdlSurface::test_pg_type_names_in_create_table
+DDL_CASES = [
+    ("CREATE TABLE IF NOT EXISTS pgbench_accounts (aid int4 not null, "
+     "bid int4, abalance int4, filler char(84))",
+     "CREATE TABLE IF NOT EXISTS pgbench_accounts (aid INT not null, "
+     "bid INT, abalance INT, filler STRING)"),
+    ("CREATE TEMP TABLE t (a timestamp with time zone, "
+     "b timestamp(3) without time zone, c character varying(20), "
+     "d bpchar(2), e int4[], f numeric, PRIMARY KEY (a, b))",
+     "CREATE TEMP TABLE t (a TIMESTAMP, b TIMESTAMP_NTZ, c STRING, "
+     "d STRING, e ARRAY<INT>, f DECIMAL(38,18), PRIMARY KEY (a, b))"),
+    # Spark type names and CTAS pass through
+    ("CREATE TABLE t (k BIGINT, v STRING, x DOUBLE)",
+     "CREATE TABLE t (k BIGINT, v STRING, x DOUBLE)"),
+    ("CREATE TABLE t AS SELECT count(*) AS c FROM x",
+     "CREATE TABLE t AS SELECT count(*) AS c FROM x"),
+]
+
+
+@pytest.mark.parametrize("pg,expected", DDL_CASES)
+def test_create_table_pg_types(tp, pg, expected):
+    assert norm(tp.transpile(pg)) == norm(expected)
+
+
 def test_array_type_cast(tp):
     out = tp.transpile("SELECT col::text[] FROM t")
     assert "ARRAY<STRING>" in out

@@ -359,6 +359,19 @@ class TestNearDupPairs:
         assert any(h == 0 for *_, h in want)
         assert any(h > 0 for *_, h in want)
 
+    @pytest.mark.parametrize("bad", [1 << 16, -1])
+    def test_chunk_wider_than_16_bits_rejected(self, spark, bad):
+        """The packed 64-bit carry gives each chunk 16 bits: a wider or
+        negative chunk fails loudly, naming its column."""
+        from datafusion_postgres_spark.operators.imagehash import (
+            chunked_hamming_pairs)
+        sig = spark.createDataFrame(
+            [(1, 5, 6, 7, 8), (2, 5, bad, 7, 8)],
+            "id long, c0 long, c1 long, c2 long, c3 long")
+        with pytest.raises(ValueError, match="'c1'"):
+            chunked_hamming_pairs(sig, ["c0", "c1", "c2", "c3"],
+                                  cache_key="test_wide_chunk", max_df=None)
+
 
 class TestImageIncrementalDedup:
     """Ingest-loop state for the image tier (write -> dedup -> merge),

@@ -322,12 +322,81 @@ class TestDdlSurface:
         assert engine.execute("DROP SCHEMA ddl_s")[0].command_tag == \
             "DROP SCHEMA"
 
+    @pytest.mark.parametrize("ddl,want", [
+        ("(k BIGINT, v TEXT, x DOUBLE PRECISION)",
+         [("k", "bigint", False), ("v", "text", False),
+          ("x", "double precision", False)]),
+        ("(k int8, v varchar(10), x float8)",
+         [("k", "bigint", False), ("v", "text", False),
+          ("x", "double precision", False)]),
+        ("(a int4, b text, c bool, d timestamptz, e int2, f float4, "
+         "g numeric(10,2), h bytea)",
+         [("a", "integer", False), ("b", "text", False),
+          ("c", "boolean", False), ("d", "timestamp with time zone", False),
+          ("e", "smallint", False), ("f", "real", False),
+          ("g", "numeric", False), ("h", "bytea", False)]),
+        # pgbench -i (Spark's file-source tables drop NOT NULL)
+        ("(aid int4 not null, bid int4, abalance int4, filler char(84))",
+         [("aid", "integer", False), ("bid", "integer", False),
+          ("abalance", "integer", False), ("filler", "text", False)]),
+    ])
+    def test_pg_type_names_in_create_table(self, engine, ddl, want):
+        engine.execute(f"CREATE TABLE ddl_pgtypes {ddl}")
+        try:
+            rows = one_row(engine.execute("""
+                SELECT a.attname,
+                       pg_catalog.format_type(a.atttypid, a.atttypmod),
+                       a.attnotnull
+                FROM pg_catalog.pg_attribute a
+                WHERE a.attrelid = 'ddl_pgtypes'::regclass AND a.attnum > 0
+                  AND NOT a.attisdropped
+                ORDER BY a.attnum"""))
+            assert [tuple(r) for r in rows] == want
+        finally:
+            engine.execute("DROP TABLE ddl_pgtypes")
+
     def test_comment_on(self, engine):
         engine.execute("CREATE TABLE ddl_c (a INT)")
         assert engine.execute(
             "COMMENT ON TABLE ddl_c IS 'hello'")[0].command_tag == \
             "COMMENT"
         engine.execute("DROP TABLE ddl_c")
+
+
+class TestCatalogViews:
+    """Every catalog view is an Arrow-backed local relation, and the
+    column record that pg_class / pg_attribute list the catalog from
+    matches the live views."""
+
+    @staticmethod
+    def _views(spark, engine):
+        engine.execute("CREATE OR REPLACE TEMP VIEW zz_cat_views AS "
+                       "SELECT 1 AS x")  # DDL: the next catalog read refreshes
+        engine.execute("SELECT count(*) FROM pg_catalog.pg_class")
+        return sorted(t.name for t in spark.catalog.listTables()
+                      if t.name.startswith(("pg_catalog_",
+                                            "information_schema_")))
+
+    def test_no_catalog_view_is_an_rdd_scan(self, spark, engine):
+        views = self._views(spark, engine)
+        assert len(views) > 90
+        rdd = [v for v in views if "ExistingRDD" in spark.table(v)._jdf
+               .queryExecution().executedPlan().toString()]
+        assert rdd == []
+
+    def test_self_row_record_matches_live_views(self, spark, engine):
+        from datafusion_postgres_spark.catalog.pg_catalog import (
+            CATALOG_COLUMNS)
+        for view in self._views(spark, engine):
+            live = [(c.name, c.dataType, c.nullable)
+                    for c in spark.catalog.listColumns(view)]
+            assert CATALOG_COLUMNS[view] == live, view
+        # pg_attribute lists pg_class's own columns from the record
+        rows = one_row(engine.execute(
+            "SELECT attname FROM pg_catalog.pg_attribute "
+            "WHERE attrelid = 'pg_class'::regclass ORDER BY attnum"))
+        assert [r[0] for r in rows] == [
+            c for c, _t, _n in CATALOG_COLUMNS["pg_catalog_pg_class"]]
 
 
 class TestCatalogSchemaParity:
