@@ -199,16 +199,14 @@ def _view(spark, name: str, schema: StructType, rows: list) -> None:
     spark.createDataFrame(table, schema).createOrReplaceTempView(name)
 
 
-def _user_tables(spark) -> list:
-    """Temp views + catalog tables, excluding our own pg_catalog_* and
-    information_schema_* views."""
-    out = []
-    for tbl in spark.catalog.listTables():
-        nm = tbl.name
-        if nm.startswith("pg_catalog_") or nm.startswith("information_schema_"):
-            continue
-        out.append(tbl)
-    return sorted(out, key=lambda x: x.name)
+def _user_tables(spark) -> list[str]:
+    """Names of the temp views + catalog tables, excluding our own
+    pg_catalog_* and information_schema_* views. ``SHOW TABLES`` is a
+    driver-side command (no Spark job); ``catalog.listTables()`` starts
+    several jobs and ~10 py4j calls per relation."""
+    return sorted(r.tableName for r in spark.sql("SHOW TABLES").collect()
+                  if not r.tableName.startswith(
+                      ("pg_catalog_", "information_schema_")))
 
 
 def bootstrap(spark: SparkSession) -> None:
@@ -349,21 +347,21 @@ def refresh(spark: SparkSession, oids: OidRegistry,
     from its GUCs (``None`` = the defaults)."""
     cls_rows, attr_rows, tbl_rows, info_tbl_rows, info_col_rows = \
         [], [], [], [], []
-    for tbl in _user_tables(spark):
-        oid = oids.oid(f"public.{tbl.name}")
+    for name in _user_tables(spark):
+        oid = oids.oid(f"public.{name}")
         cols = [(f.name, f.dataType.simpleString(), f.nullable)
-                for f in spark.table(tbl.name).schema]
-        cls_rows.append((oid, tbl.name, PUBLIC_NAMESPACE_OID, 0, 0, 10, 2,
+                for f in spark.table(name).schema]
+        cls_rows.append((oid, name, PUBLIC_NAMESPACE_OID, 0, 0, 10, 2,
                          oid, 0, 0, float(-1), 0, 0, False, False, "p", "r",
                          len(cols), 0, False, False, False, False, False,
                          True, "d", False, 0, 1, 1, None, None, None))
         attr_rows += _attribute_rows(oid, cols)
-        tbl_rows.append(("public", tbl.name, "postgres", None, False, False,
+        tbl_rows.append(("public", name, "postgres", None, False, False,
                          False, False))
-        info_tbl_rows.append(("postgres", "public", tbl.name, "BASE TABLE"))
-        info_col_rows += [("postgres", "public", tbl.name, name, i, None,
+        info_tbl_rows.append(("postgres", "public", name, "BASE TABLE"))
+        info_col_rows += [("postgres", "public", name, col, i, None,
                            "YES" if nullable else "NO", dtype)
-                          for i, (name, dtype, nullable) in
+                          for i, (col, dtype, nullable) in
                           enumerate(cols, start=1)]
 
     # ---- pg_tables (pg_catalog/pg_tables.rs) ----

@@ -128,7 +128,7 @@ def shingle_array(docs: DataFrame, text_col: str = "text",
     single-projection form put ``transform(ws, word_fingerprint)``
     inside the per-gram lambda body, where the interpreted HOF
     re-evaluates it per gram — measured 2.2x slower on sf0.1 docs
-    (tools/probe_shingle_cse.py; identical checksums)."""
+    (identical checksums; recorded in STATUS.md, Round-10 work)."""
     from datafusion_postgres_spark.operators.text import word_hashes_sql
     whs_df = (ensure_min_parallelism(docs)
               .where(F.trim(F.col(text_col)) != "")
@@ -463,8 +463,8 @@ def simhash_expr(text: Column, bits: int = 48) -> Column:
     """The per-row simhash signature as ONE composable column
     expression.
 
-    PERFORMANCE (round-10 verdict item #1 — measured, see
-    tools/probe_simhash_cse.py): this single-expression form textually
+    PERFORMANCE (round-10 verdict item #1 — measured, recorded in
+    STATUS.md, Round-10 work): this single-expression form textually
     duplicates the tokenize+hash chain into all ``2*bits`` per-bit
     subtrees, and because higher-order functions are interpreted
     (CodegenFallback) Spark's subexpression elimination recovers only
@@ -487,7 +487,7 @@ def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     the word-hash array is materialized in its own projection, then the
     48 per-bit majorities fold over the column — 18x less CPU per row
     than the single-expression form (verdict item #1 receipt in
-    tools/probe_simhash_cse.py; CollapseProject keeps the two
+    STATUS.md, Round-10 work; CollapseProject keeps the two
     projections apart because the array chain is non-cheap and
     referenced 96 times). Still embarrassingly parallel like
     shingle_array: no shuffle, no Python."""
@@ -756,8 +756,8 @@ def embedding_dedup_keep(emb: DataFrame, threshold: float = 0.38,
 # ---------------------------------------------------------------------------
 # text-simhash INGEST loop: bucketed near-dup state + per-batch
 # incremental dedup — completes the four-modality matrix (image /
-# audio / video / TEXT each have batch keep + pairs + streaming state
-# + driver-restart-safe bucketed ingest). The exact-fingerprint ingest
+# audio / video / TEXT each have batch keep + pairs +
+# driver-restart-safe bucketed ingest). The exact-fingerprint ingest
 # loop (write_fingerprint_table below) catches byte dups; this one
 # catches NEAR dups that survive it.
 
@@ -1390,9 +1390,8 @@ def build_bloom_probe(eval_docs: DataFrame, text_col: str = "text",
 
     ``bloom_keep(h_col) -> BooleanColumn`` tests a gram-hash column
     against a packed-word Bloom bitset shipped as ONE array<bigint>
-    Literal — an ordinary expression, so it composes into batch scans
-    AND streaming projections unchanged (streaming ingest gates reuse
-    it; see contamination_gate)."""
+    Literal — an ordinary expression, so it composes into any
+    projection unchanged."""
     import numpy as np
 
     n_bits = 1
@@ -1453,25 +1452,6 @@ def build_bloom_probe(eval_docs: DataFrame, text_col: str = "text",
         return t
 
     return bloom_keep, eval_grams
-
-
-def contamination_gate(docs: DataFrame, eval_docs: DataFrame,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       n: int = 3) -> DataFrame:
-    """Ingest-time contamination gate: every doc annotated with
-    ``n_bloom_hits`` (shingles colliding with the eval set's Bloom
-    bitset — true overlaps plus the ~0.6% FP tail; zero means PROVABLY
-    clean). A stateless zero-shuffle projection, so the identical
-    operator runs on a structured stream at ingest — quarantine
-    ``n_bloom_hits > 0`` for the exact decontaminate pass, pass the
-    rest straight through."""
-    bloom_keep, _ = build_bloom_probe(eval_docs, text_col, id_col, n)
-    per_doc = shingle_array(docs, text_col, id_col, n)
-    return per_doc.select(
-        F.col("id").alias(id_col),
-        F.col("set_size").cast("bigint").alias("n_grams"),
-        F.size(F.filter("grams", bloom_keep)).cast("bigint")
-        .alias("n_bloom_hits"))
 
 
 def decontaminate_bloom(docs: DataFrame, eval_docs: DataFrame,

@@ -303,11 +303,9 @@ def scd2_join(facts: DataFrame, dim: DataFrame, on: str | list[str],
 
     Versions from :func:`scd2_intervals` are disjoint per key, so each
     fact matches at most one version — same answer as a backward as-of
-    join on ``valid_from``, but expressed as an equi+range join, which
-    Structured Streaming accepts for STREAM-STATIC enrichment (window
-    functions are not allowed on streams; ``asof_join`` is batch-only).
-    Per micro-batch this is one key-partitioned join against the static
-    side; at 100 TB/day the dimension is the small side and AQE
+    join on ``valid_from``, but expressed as an equi+range join with no
+    window over the facts: one key-partitioned join against the
+    dimension; at 100 TB/day the dimension is the small side and AQE
     broadcasts it by measurement."""
     keys = [on] if isinstance(on, str) else list(on)
     cond = [facts[k] == dim[k] for k in keys]

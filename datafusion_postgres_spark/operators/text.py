@@ -33,10 +33,6 @@ def ensure_min_parallelism(df: DataFrame) -> DataFrame:
     arrives already split into many row groups and this is a no-op; the
     one-time shuffle of raw text is only paid when the input is narrower
     than the cluster."""
-    if df.isStreaming:
-        # no static partition count to inspect; micro-batch parallelism
-        # is the source's concern (maxFilesPerTrigger etc.)
-        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     # Estimate the scan's split count from file stats (free — no job, no
@@ -453,13 +449,6 @@ def _pii_count_cols(c: Column) -> list[Column]:
         total = cnt if total is None else total + cnt
     cols.append(total.alias("n_pii_total"))
     return cols
-
-
-def pii_stats(df: DataFrame, text_col: str = "text",
-              id_col: str = "doc_id") -> DataFrame:
-    """Per-document PII hit counts per category plus the total — the audit
-    table that decides whether a document is dropped or scrubbed."""
-    return df.select(F.col(id_col), *_pii_count_cols(F.col(text_col)))
 
 
 def pii_redact(col: Column) -> Column:

@@ -55,18 +55,6 @@ def uses_broadcast(df: DataFrame) -> bool:
         "BroadcastNestedLoopJoin" in formatted_plan(df)
 
 
-def forced_broadcast_hints(df: DataFrame) -> list[str]:
-    """String forms of every user-forced broadcast hint in the ANALYZED
-    logical plan (ResolvedHint nodes). Distinct from ``uses_broadcast``:
-    AQE/statistics may legitimately *choose* a broadcast at any SF, but a
-    forced hint bypasses the size check — on an SF-proportional table
-    that's an OOM at 100× scale. Tests pin that hints appear only on
-    bounded tables (nation/region, tiny derived aggregates)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return [ln.strip() for ln in plan.splitlines()
-            if "ResolvedHint" in ln]
-
-
 _TPCH_PREFIX = {"c_": "customer", "o_": "orders", "l_": "lineitem",
                 "s_": "supplier", "n_": "nation", "r_": "region",
                 "p_": "part"}
@@ -98,11 +86,6 @@ def forced_broadcast_tables(df: DataFrame) -> set[str]:
                 col = m.group(1).split("#")[0]
                 out.add(_TPCH_PREFIX.get(col[:2], col))
     return out
-
-
-def whole_stage_codegen_spans(df: DataFrame) -> int:
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)",
-                              simple_plan(df))))
 
 
 # ---------------------------------------------------------------------------

@@ -141,7 +141,7 @@ PRIORITY = [
     # text_bpe_merges, events_attribution, multimodal_audio_neardups,
     # multimodal_image_components, multimodal_mixed_format_neardups,
     # multimodal_audio_dedup_keep, multimodal_video_dedup_keep,
-    # text_minhash_dedup_keep, text_clf_pr_curve, streaming_url_dedup.
+    # text_minhash_dedup_keep, text_clf_pr_curve.
     # TPC-H adaptations (compound shapes: joins + aggs + sorts)
     "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
     "q21_suppliers_kept_waiting",
@@ -159,8 +159,8 @@ PRIORITY = [
     # sorts / set ops (§2.6-2.8)
     "sort_wildcard_topk", "sort_multi_ordinal", "sort_topk",
     "set_union_distinct",
-    # REAL streaming executions (readStream -> stateful op -> memory sink)
-    "streaming_hourly_rollup", "streaming_sessionize",
+    # event analytics: time-bucket rollup and gap sessionization
+    "events_hourly_rollup", "events_sessionize",
     # LLM-data-pipeline operators
     "dedup_exact_groups", "dedup_minhash_lsh",
     "dedup_ngram_jaccard_capped", "dedup_decontaminate",
@@ -186,7 +186,7 @@ def load_all() -> dict[str, QuerySpec]:
     reordered so ``PRIORITY`` occupies the driver's checked window."""
     from datafusion_postgres_spark.queries import (  # noqa: F401
         dialect_q, events_q, joins_q, pipeline_q, relational, relational2,
-        streaming_q, suites, tpch2,
+        suites, tpch2,
     )
     missing = [n for n in PRIORITY if n not in REGISTRY]
     assert not missing, f"PRIORITY names not registered: {missing}"

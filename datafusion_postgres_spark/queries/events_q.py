@@ -1,5 +1,5 @@
-"""Event-stream analytics over the ``events`` table (batch side of the
-streaming surface): time-bucket rollups, sessionization, pivots, JSON.
+"""Event analytics over the ``events`` table: time-bucket rollups,
+sessionization, pivots, JSON.
 
 events.ts is nanosecond parquet: Spark reads int64 + converts to µs
 (sources.registry.read_table); oracles CAST(ts AS TIMESTAMP) for the same
@@ -219,9 +219,9 @@ FROM events p JOIN events v
 ORDER BY purchase_id, view_id
 """)
 def events_attribution(spark, sf_dir):
-    """Batch analog of streaming/ops.attribution_join_stream: purchases
-    attributed to same-user views within the preceding hour (interval
-    join keyed on user_id — one co-partitioned shuffle pair)."""
+    """Purchases attributed to same-user views within the preceding
+    hour (interval join keyed on user_id — one co-partitioned shuffle
+    pair)."""
     ev = t(spark, sf_dir, "events")
     v = ev.where("event_type = 'view'").select(
         F.col("user_id").alias("vu"), F.col("event_id").alias("view_id"),

@@ -213,8 +213,7 @@ def join_scd2_enrich(spark, sf_dir):
     intervals via scd2_intervals (lead over the version log), then every
     click joins the version valid AT ITS EVENT TIME. Disjoint versions =>
     at most one match per fact; clicks before a user's first purchase
-    keep NULL. Same plan runs stream-static (streaming/ops.py
-    enrich_stream_scd2)."""
+    keep NULL."""
     from datafusion_postgres_spark.operators.joins import (
         scd2_intervals, scd2_join)
     from pyspark.sql import Window

@@ -881,7 +881,7 @@ def text_simhash_dedup_incremental(spark, sf_dir):
     join — dedup.simhash_dedup_incremental, the text twin of the
     image/audio/video ingest loops (state passed as a frame here so
     the oracled row stays side-effect-free; the bucketed-table loop is
-    pinned in test_streaming_dedup.py). The oracle replays the
+    pinned in test_incremental_dedup.py). The oracle replays the
     survivor predicate with naive hamming joins — exact because the
     chunk blocking is pigeonhole-lossless at max_hamming <= 3 and the
     oracled row opts out of the df cap."""
@@ -1212,11 +1212,7 @@ def _emb_lsh_tables_sql(n_planes: int = 8, n_tables: int = 4) -> str:
     return "\n  UNION ALL\n  ".join(sels)
 
 
-# ONE definition of the banded-LSH verified-pairs ground truth — shared
-# by the batch row below AND streaming_q's streaming_embedding_dedup
-# (round-10 second review pass: two byte-identical copies of the same
-# contract drift independently).
-EMB_LSH_PAIRS_ORACLE = f"""
+@register("dedup_embedding_lsh", oracle=f"""
 WITH blocked AS (
   {_emb_lsh_tables_sql()}
 ),
@@ -1230,10 +1226,7 @@ SELECT DISTINCT id_a, id_b,
 FROM cand
 WHERE {_cos_sql('va', 'vb')} >= 0.38
 ORDER BY id_a, id_b
-"""
-
-
-@register("dedup_embedding_lsh", oracle=EMB_LSH_PAIRS_ORACLE)
+""")
 def dedup_embedding_lsh(spark, sf_dir):
     """Multi-table hyperplane-LSH near-dup — FULLY oracled (round-4
     session 3): the hyperplane signs are literals and every float fold
@@ -1314,7 +1307,7 @@ def dedup_embedding_incremental(spark, sf_dir):
     LSH (tbl, bucket) blocked join — dedup.embedding_dedup_incremental
     completes the five-modality ingest matrix (state passed as a frame
     here so the oracled row stays side-effect-free; the bucketed-table
-    loop is pinned in test_streaming_dedup.py). The oracle replays the
+    loop is pinned in test_incremental_dedup.py). The oracle replays the
     survivor predicate naively per member — equivalent to the Spark
     side's distinct-vector collapse because array-equal vectors share
     every band bucket and every cosine (the repgraph perfect-
@@ -1464,8 +1457,8 @@ FROM sess GROUP BY user_id, session_id
 ORDER BY user_id, session_start
 """)
 def events_session_windows(spark, sf_dir):
-    """F.session_window in batch mode — the same gap-merge operator the
-    streaming surface uses. Oracle: classic lag/cumsum sessionization
+    """F.session_window in batch mode: Spark's gap-merge window
+    operator. Oracle: classic lag/cumsum sessionization
     (session_window merges windows that touch, i.e. gap >= 30min starts a
     new session)."""
     ev = t(spark, sf_dir, "events").withColumn(
@@ -2836,7 +2829,7 @@ def multimodal_image_dedup_incremental(spark, sf_dir):
     (every 5th doc's PNG) dedups against the rest of the corpus as
     state — imagehash.image_dedup_incremental with the state hashed on
     the fly (sig_survivor_ids' frame-based state; the bucketed-table
-    loop with the same semantics is pinned in test_streaming_dedup).
+    loop with the same semantics is pinned in test_incremental_dedup).
     The oracle recomputes every aHash from character codes and replays
     the survivor predicate with naive hamming joins — exact because
     both the state join and the in-batch pairing are

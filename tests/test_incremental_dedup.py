@@ -1,164 +1,14 @@
-"""Streaming dedup tests: documents replayed as a 2-batch file stream;
-exact dedup and simhash near-dup results cross-checked against the batch
-operators. The 2-file split forces REAL cross-batch state: duplicates of
-a batch-1 doc arriving in batch 2 must still be caught."""
+"""Incremental dedup against persisted, bucketed state tables: each
+batch anti-joins the state table and its survivors append back, so a
+duplicate of an earlier batch's item is dropped by the STATE, not by
+in-memory bookkeeping (the property that survives a driver restart).
+Covers text fingerprints, simhash, embeddings, image, audio and video,
+driven as two-batch loops and through Spark's own ``foreachBatch``
+(whose micro-batches are ordinary batch DataFrames)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from datafusion_postgres_spark.operators import dedup as batch_dedup
-from datafusion_postgres_spark.operators.text import fingerprint
-from datafusion_postgres_spark.sources.registry import read_table
-from datafusion_postgres_spark.streaming import dedup as sdedup
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs_stream_dir(spark, tmp_path_factory):
-    """Documents split into two parquet files by doc_id parity so
-    maxFilesPerTrigger=1 yields two micro-batches."""
-    d = tmp_path_factory.mktemp("docs_stream")
-    docs = read_table(spark, SF_DIR, "documents")
-    docs.where(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
-        "overwrite").parquet(str(d / "even"))
-    docs.where(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
-        "overwrite").parquet(str(d / "odd"))
-    # flatten the two part-files into one stream directory; pin mtimes so
-    # the file source replays even -> odd deterministically
-    import glob
-    import os
-    import shutil
-    out = tmp_path_factory.mktemp("docs_stream_flat")
-    for i, sub in enumerate(("even", "odd")):
-        (part,) = glob.glob(str(d / sub / "part-*.parquet"))
-        dst = out / f"{i}_{sub}.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-    return str(out)
-
-
-def test_exact_dedup_stream(spark, docs_stream_dir):
-    stream = sdedup.read_documents_stream(spark, docs_stream_dir)
-    assert stream.isStreaming
-    q = (sdedup.dedup_exact_stream(stream)
-         .writeStream.format("memory").queryName("dedup_exact_s")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), 'stream did not finish in time'
-    try:
-        kept = spark.sql("SELECT fp FROM dedup_exact_s").collect()
-        kept_fps = [r["fp"] for r in kept]
-        # exactly one survivor per distinct normalized text
-        assert len(kept_fps) == len(set(kept_fps))
-        batch_fps = {r["fp"] for r in
-                     read_table(spark, SF_DIR, "documents")
-                     .select(fingerprint(F.col("text")).alias("fp"))
-                     .distinct().collect()}
-        assert set(kept_fps) == batch_fps
-    finally:
-        q.stop()
-
-
-def test_simhash_near_dup_stream_matches_batch(spark, docs_stream_dir):
-    stream = sdedup.read_documents_stream(spark, docs_stream_dir)
-    q = (sdedup.simhash_near_dup_stream(stream, state_timeout_ms=None)
-         .writeStream.format("memory").queryName("near_dup_s")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(300), 'stream did not finish in time'
-    try:
-        raw = spark.sql("SELECT * FROM near_dup_s").collect()
-        got = {(r["id_a"], r["id_b"]): r["hamming"] for r in raw}
-        docs = read_table(spark, SF_DIR, "documents")
-        expected = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-                    batch_dedup.simhash_near_pairs(docs).collect()}
-        # exactly-once pair emission (lowest-chunk ownership) and full
-        # recall vs the batch operator, including cross-batch pairs;
-        # the raw-count pin catches duplicate emissions the dict
-        # comprehension would silently collapse
-        assert got == expected
-        assert len(raw) == len(expected)
-        # the split guarantees cross-batch pairs exist (even id with odd id)
-        cross = [p for p in expected if p[0] % 2 != p[1] % 2]
-        assert cross, "testdata should contain cross-parity near-dup pairs"
-    finally:
-        q.stop()
-
-
-def test_exact_dedup_stream_catches_cross_batch_dup(spark, tmp_path):
-    """Synthetic 2-batch stream where batch 2 re-sends a batch-1 text:
-    the duplicate must NOT survive."""
-    import pandas as pd
-
-    b1 = pd.DataFrame({
-        "doc_id": [1, 2], "text": ["alpha beta", "gamma delta"],
-        "lang": ["en", "en"], "source": ["s", "s"], "n_chars": [10, 11]})
-    b2 = pd.DataFrame({
-        "doc_id": [3, 4], "text": ["ALPHA   beta", "epsilon zeta"],
-        "lang": ["en", "en"], "source": ["s", "s"], "n_chars": [10, 12]})
-    d = tmp_path / "stream"
-    d.mkdir()
-    import os
-    b1.to_parquet(d / "0_b1.parquet")
-    b2.to_parquet(d / "1_b2.parquet")
-    os.utime(d / "0_b1.parquet", (1_700_000_000, 1_700_000_000))
-    os.utime(d / "1_b2.parquet", (1_700_000_010, 1_700_000_010))
-    stream = sdedup.read_documents_stream(spark, str(d))
-    q = (sdedup.dedup_exact_stream(stream)
-         .writeStream.format("memory").queryName("dedup_cross")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(120), 'stream did not finish in time'
-    try:
-        rows = spark.sql("SELECT doc_id FROM dedup_cross").collect()
-        ids = sorted(r["doc_id"] for r in rows)
-        # doc 3 normalizes to doc 1's text (case + whitespace) -> dropped
-        assert ids == [1, 2, 4]
-    finally:
-        q.stop()
-
-
-def test_bucket_state_cap_and_timeout():
-    """_update_bucket bounds hot buckets (oldest-out beyond the cap) and
-    evicts on timeout instead of re-arming state forever."""
-    import pandas as pd
-
-    class FakeState:
-        def __init__(self, value=None, timed_out=False):
-            self._value = value
-            self.hasTimedOut = timed_out
-            self.removed = False
-            self.updated = None
-
-        @property
-        def exists(self):
-            return self._value is not None
-
-        @property
-        def get(self):
-            return self._value
-
-        def update(self, v):
-            self.updated = v
-
-        def remove(self):
-            self.removed = True
-
-        def setTimeoutDuration(self, ms):
-            self.timeout_ms = ms
-
-    # timeout invocation: state removed, nothing emitted, no re-arm
-    st = FakeState(value=([1], [0]), timed_out=True)
-    out = list(sdedup._update_bucket((0, 7), iter(()), st))
-    assert out == [] and st.removed and st.updated is None
-
-    # hot bucket: feeding cap+100 docs keeps only the newest cap entries
-    cap = sdedup._MAX_BUCKET_DOCS
-    n = cap + 100
-    pdf = pd.DataFrame({"id": range(n), "sig": [i << 20 for i in range(n)]})
-    st = FakeState()
-    list(sdedup._update_bucket((0, 7), iter([pdf]), st))
-    ids, sigs = st.updated
-    assert len(ids) == cap == len(sigs)
-    assert ids[0] == n - cap and ids[-1] == n - 1  # oldest-out
 
 
 def test_foreachbatch_ingest_loop_with_bucketed_state(spark, tmp_path):
@@ -260,52 +110,6 @@ def test_compaction_bounds_state_files(spark, tmp_path):
         out.collect()
     finally:
         spark.sql("DROP TABLE IF EXISTS fp_compact_state")
-
-
-def test_url_dedup_stream_collapses_messy_variants(spark, tmp_path):
-    """Streaming URL dedup: a messy recrawl variant arriving in a LATER
-    micro-batch dedups against the clean first sight (state carries the
-    canonical key across batches)."""
-    import os
-    from pyspark.sql import functions as F
-    from datafusion_postgres_spark.streaming import dedup as sdedup
-
-    import glob
-    import shutil
-    src = str(tmp_path / "url_stream")
-    os.makedirs(src)
-    for i, rows in enumerate((
-            [(1, "https://example.com/a"), (2, "https://other.org/x")],
-            [(3, "HTTPS://WWW.EXAMPLE.COM:443/a/?utm_source=r"),
-             (4, "https://fresh.net/y")])):
-        staging = str(tmp_path / f"stage{i}")
-        spark.createDataFrame(
-            rows, "doc_id long, url string").coalesce(1) \
-            .write.parquet(staging)
-        (part,) = glob.glob(f"{staging}/part-*.parquet")
-        dst = f"{src}/{i}_batch.parquet"
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-    schema = StructType([StructField("doc_id", LongType()),
-                         StructField("url", StringType())])
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(src)
-              .withColumn("ingest_ts",
-                          F.timestamp_millis(F.lit(1_704_067_200_000)
-                                             + F.col("doc_id"))))
-    out = sdedup.dedup_url_stream(stream)
-    q = (out.writeStream.format("memory").queryName("url_dedup_mem")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(180), "stream did not finish in time"
-    try:
-        kept = {r["doc_id"] for r in
-                spark.sql("SELECT doc_id FROM url_dedup_mem").collect()}
-        # doc 3 is a messy recrawl of doc 1's canonical URL -> dropped
-        assert 3 not in kept and {1, 2, 4} <= kept
-    finally:
-        q.stop()
 
 
 def test_foreachbatch_video_ingest_loop(spark, tmp_path):
@@ -717,47 +521,3 @@ def test_foreachbatch_embedding_ingest_loop(spark, tmp_path):
         assert sorted(survived) == [1, 2, 4]   # 3 caught by the state
     finally:
         spark.sql("DROP TABLE IF EXISTS emb_stream_state")
-
-
-def test_embedding_near_dup_stream_matches_batch(spark, tmp_path):
-    """Streaming semantic near-dup (round-10): the LSH-bucket-state
-    pair stream over a 2-batch embeddings replay equals the batch
-    embedding_cosine_pairs_lsh set EXACTLY (ids and cos_sim to the
-    last bit — the Python state math replicates the Spark folds),
-    including cross-batch pairs and exactly-once emission via
-    lowest-colliding-table ownership."""
-    import glob
-    import os
-    import shutil
-    emb = read_table(spark, SF_DIR, "embeddings").where("vec_id < 200")
-    d = tmp_path / "emb_stream"
-    d.mkdir()
-    for i, pred in enumerate(("vec_id % 2 = 0", "vec_id % 2 = 1")):
-        p = str(tmp_path / f"embp{i}.parquet")
-        emb.where(pred).coalesce(1).write.mode("overwrite").parquet(p)
-        (part,) = glob.glob(p + "/part-*.parquet")
-        dst = str(d / f"{i}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (1_700_000_000 + i * 10,) * 2)
-    stream = (spark.readStream.schema(emb.schema)
-              .option("maxFilesPerTrigger", 1).parquet(str(d)))
-    q = (sdedup.embedding_near_dup_stream(stream, state_timeout_ms=None)
-         .writeStream.format("memory").queryName("emb_near_dup_s")
-         .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(300), "stream did not finish in time"
-    try:
-        raw = spark.sql("SELECT id_a, id_b, round(cos_sim, 6) AS "
-                        "cos_sim FROM emb_near_dup_s").collect()
-        got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in raw}
-        expected = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
-                    batch_dedup.embedding_cosine_pairs_lsh(
-                        emb, threshold=0.38).collect()}
-        assert got == expected
-        # EXACTLY-once: the dict above would collapse duplicate
-        # emissions (a broken ownership rule), so pin the raw count
-        assert len(raw) == len(expected)
-        assert expected, "testdata should contain near-dup pairs"
-        cross = [p for p in expected if p[0] % 2 != p[1] % 2]
-        assert cross, "testdata should contain cross-batch pairs"
-    finally:
-        q.stop()

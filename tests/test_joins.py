@@ -214,43 +214,6 @@ class TestScd2:
                        13: None, 14: None}
         assert out.count() == 5  # disjoint versions: exactly one row/fact
 
-    def test_stream_static_matches_batch(self, spark, dim, tmp_path):
-        import shutil
-
-        from datafusion_postgres_spark.operators.joins import (
-            scd2_intervals, scd2_join)
-        from datafusion_postgres_spark.streaming import ops
-        sf = "/root/testdata/sf0.001"
-        d = tmp_path / "ev"
-        d.mkdir()
-        shutil.copy(f"{sf}/events.parquet", d / "events.parquet")
-        from datafusion_postgres_spark.sources.registry import read_table
-        ev = read_table(spark, sf, "events")
-        daily = (ev.where("event_type = 'purchase'")
-                 .groupBy("user_id",
-                          F.date_trunc("day", "ts").alias("valid_from"))
-                 .agg(F.count("*").alias("n")))
-        ver = scd2_intervals(daily, "user_id", "valid_from")
-        stream = ops.read_events_stream(spark, str(d)) \
-            .where("event_type = 'click'") \
-            .select("event_id", "user_id", "ts")
-        enriched = ops.enrich_stream_scd2(stream, ver)
-        assert enriched.isStreaming
-        q = (enriched.writeStream.format("memory").queryName("scd2m")
-             .outputMode("append").trigger(availableNow=True).start())
-        assert q.awaitTermination(120), "stream did not finish in time"
-        try:
-            got = {(r["event_id"], r["n"]) for r in
-                   spark.sql("SELECT event_id, n FROM scd2m").collect()}
-            batch = scd2_join(
-                ev.where("event_type = 'click'")
-                .select("event_id", "user_id", "ts"), ver,
-                on="user_id", fact_ts="ts")
-            want = {(r["event_id"], r["n"]) for r in batch.collect()}
-            assert got == want and len(want) > 50
-        finally:
-            q.stop()
-
 
 class TestAsofRandomized:
     def test_matches_brute_force_random(self, spark):

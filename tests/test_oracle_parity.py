@@ -1,10 +1,12 @@
-"""DuckDB oracle parity inside tier-1 for the single-parse SQL queries.
+"""DuckDB oracle parity inside tier-1 for a sample of registered queries.
 
-These queries are built with one ``spark.sql`` parse each (TPC-H q3/q5/
-q8/q9, the relational join/aggregate/window rows and the exact cosine
-top-k). Each is run on Spark and its registered oracle on DuckDB, then
-compared by the same function ``tools/check_oracle.py`` uses for the
-full sweep: columns, compatible types, row count and repr-strict values.
+The sample covers the single-parse SQL builders (TPC-H q3/q5/q8/q9, the
+relational join/aggregate/window rows and the exact cosine top-k) and
+the DataFrame-built event rows in the PRIORITY window (hourly
+rollup, gap sessionization). Each is run on Spark and its registered
+oracle on DuckDB, then compared by the same function
+``tools/check_oracle.py`` uses for the full sweep: columns, compatible
+types, row count and repr-strict values.
 """
 
 import importlib.util
@@ -23,6 +25,8 @@ QUERIES = [
     "q8_market_share",
     "q9_product_profit",
     "sim_cosine_topk",
+    "events_hourly_rollup",
+    "events_sessionize",
 ]
 
 

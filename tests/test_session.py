@@ -398,6 +398,25 @@ class TestCatalogViews:
         assert [r[0] for r in rows] == [
             c for c, _t, _n in CATALOG_COLUMNS["pg_catalog_pg_class"]]
 
+    def test_refresh_starts_no_spark_job(self, spark, engine):
+        from datafusion_postgres_spark.catalog.pg_catalog import refresh
+        engine.execute("CREATE TABLE zz_refresh_jobs (k int4, v text)")
+        try:
+            engine.execute("SELECT count(*) FROM pg_catalog.pg_class")
+            dag = spark._jsc.sc().dagScheduler()
+            before = dag.nextJobId()
+            refresh(spark, engine.oids, engine.state.vars)
+            assert dag.nextJobId() - before == 0
+            names = {r[0] for r in one_row(engine.execute(
+                "SELECT relname FROM pg_catalog.pg_class"))}
+            assert {"zz_refresh_jobs", "nation", "region", "orders",
+                    "pg_class"} <= names
+            assert not any(n.startswith(("pg_catalog_",
+                                         "information_schema_"))
+                           for n in names)
+        finally:
+            engine.execute("DROP TABLE zz_refresh_jobs")
+
 
 class TestCatalogSchemaParity:
     """Every catalog table the reference ships resolves with (at least)

@@ -121,8 +121,7 @@ COMMENTARY = {
         "SCD2 enrichment: version intervals from one lead() window on "
         "the (small) dimension; facts join on user_id + half-open range "
         "predicate — disjoint versions mean at most one match per fact, "
-        "and AQE broadcasts the dim when measured-small. Same plan runs "
-        "stream-static per micro-batch.",
+        "and AQE broadcasts the dim when measured-small.",
     "geo_radius_pairs":
         "Grid-binned radius join: one side exploded to its 3x3 cell "
         "neighborhood (constant 9x), equi-join on (cx, cy), exact "
