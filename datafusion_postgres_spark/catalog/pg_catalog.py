@@ -10,10 +10,11 @@ Spark design: each table is a temp view named ``pg_catalog_<name>`` or
 dialect layer rewrites ``pg_catalog.pg_class`` references).
 
 * **Arrow-backed local relations.** Like the reference's in-memory Arrow
-  ``RecordBatch``es, every view is built by :func:`_view` on the driver:
-  rows + ``StructType`` -> ``pyarrow.Table`` -> ``createDataFrame``, which
-  Spark plans as a ``LocalTableScan``. A catalog read therefore starts no
-  Python worker and scans no RDD.
+  ``RecordBatch``es, every view is built by :func:`_view` on the driver
+  through ``session.local_relation`` (rows + ``StructType`` ->
+  ``pyarrow.Table`` -> ``createDataFrame``, the helper COPY FROM STDIN
+  stages its rows with too), which Spark plans as a ``LocalTableScan``. A
+  catalog read therefore starts no Python worker and scans no RDD.
 * **Static vs dynamic.** :func:`_static_views` builds, once per server
   (the template session; connections inherit the views through
   ``cloneSession``), every table that depends on neither the relations
@@ -34,9 +35,7 @@ values (type OIDs etc.), not copied from the reference's feather exports.
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import SparkSession
-from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, FloatType, IntegerType, LongType,
     ShortType, StringType, StructField, StructType, TimestampType,
@@ -44,6 +43,7 @@ from pyspark.sql.types import (
 
 from datafusion_postgres_spark.catalog.schema_ref import (
     PG_CATALOG_REF_SCHEMAS)
+from datafusion_postgres_spark.session import local_relation
 
 PG_CATALOG_NAMESPACE_OID = 11
 PUBLIC_NAMESPACE_OID = 2200
@@ -189,14 +189,8 @@ def _padded_schema(name: str, schema: StructType) -> StructType:
 def _view(spark, name: str, schema: StructType, rows: list) -> None:
     """Create a catalog view as an Arrow-backed local relation: ``rows``
     fill the columns of ``schema``, the pad columns are NULL."""
-    width = len(schema)
-    schema = _padded_schema(name, schema)
-    arrow = to_arrow_schema(schema)
-    table = pa.Table.from_arrays(
-        [pa.array([r[i] for r in rows], f.type) if i < width
-         else pa.nulls(len(rows), f.type) for i, f in enumerate(arrow)],
-        schema=arrow)
-    spark.createDataFrame(table, schema).createOrReplaceTempView(name)
+    local_relation(spark, _padded_schema(name, schema),
+                   rows).createOrReplaceTempView(name)
 
 
 def _user_tables(spark) -> list[str]:

@@ -8,16 +8,22 @@ encoding (``arrow-pg/src/encoder.rs:259-493``), list/struct encoding
 and the binary format (result columns a Bind asks for in binary, COPY
 binary), plus the binary decoders for Bind parameters and COPY FROM.
 
-Spark-first: encoding happens at the serving edge, one value at a time,
-over the rows the wire writer pulls from a result — ``toLocalIterator``
-rows (or ``collect`` under a statement timeout) for a Spark result, the
-driver-held rows for a hook answer. Everything upstream stays columnar in
-the engine.
+Spark-first: a Spark result reaches the driver as Arrow record batches,
+one partition at a time (``session.arrow_batches``), and the wire writer
+encodes it a chunk of rows at a time, one column at a time:
+:func:`column_encoder` picks each column's encoder once per result, with
+fast paths for ints, text, floats, timestamps, dates, booleans and the
+binary fixed-width types, and falls back to the per-value
+:func:`encode_value` / :func:`encode_value_binary` for the rest (numeric,
+intervals, arrays, structs, maps, bytea). Driver-held rows (hook answers)
+take the same path.
 """
 
 from __future__ import annotations
 
+import functools
 import math
+import struct
 from dataclasses import dataclass
 from datetime import date, datetime, time, timedelta
 from decimal import Decimal
@@ -157,12 +163,12 @@ def _strip_exponent(v: Decimal) -> str:
 
 
 def _encode_timestamp(v: datetime, tz_suffix: bool) -> str:
-    base = v.strftime("%Y-%m-%d %H:%M:%S")
+    """A naive timestamp; a TIMESTAMP value is the UTC instant, hence the
+    ``+00``. The year is zero-padded to four digits, as PG prints it."""
+    base = v.isoformat(" ")
     if v.microsecond:
-        base += f".{v.microsecond:06d}".rstrip("0")
-    if tz_suffix:
-        base += "+00"  # engine normalizes to UTC (session timeZone)
-    return base
+        base = base.rstrip("0")
+    return base + "+00" if tz_suffix else base
 
 
 def _encode_interval(v: timedelta) -> str:
@@ -238,8 +244,6 @@ def encode_value_binary(v, dt: T.DataType) -> bytes | None:
     reference encodes (``arrow-pg/src/encoder.rs:259-493``,
     ``list_encoder.rs:102+``, ``struct_encoder.rs:74-161``). Callers fall
     back to text format for anything :func:`supports_binary` rejects."""
-    import struct
-
     if v is None:
         return None
     if isinstance(dt, T.BooleanType):
@@ -299,8 +303,6 @@ def encode_value_binary(v, dt: T.DataType) -> bytes | None:
 
 def _encode_numeric_binary(v: Decimal) -> bytes:
     """numeric_send: (ndigits, weight, sign, dscale) + base-10000 digits."""
-    import struct
-
     if v.is_nan():
         return struct.pack("!HhHH", 0, 0, 0xC000, 0)
     if v.is_infinite():
@@ -352,8 +354,6 @@ def _encode_array_binary(vals, elem_dt: T.DataType) -> bytes:
     elements are the flattened leaves in row-major order. PG requires
     rectangular multidim arrays and non-NULL sub-arrays — ragged data
     raises (PG itself cannot represent it)."""
-    import struct
-
     vals = list(vals)
     dims = [len(vals)]
     flat = vals
@@ -389,8 +389,6 @@ def _encode_array_binary(vals, elem_dt: T.DataType) -> bytes:
 
 def _encode_struct_binary(row, dt: T.StructType) -> bytes:
     """record_send: field count, then per field (type oid, length, bytes)."""
-    import struct
-
     out = [struct.pack("!i", len(dt.fields))]
     for field, x in zip(dt.fields, row):
         oid, _ = _type_to_oid(field.dataType)
@@ -429,13 +427,96 @@ def encode_row(row, schema: T.StructType,
 
 
 # ---------------------------------------------------------------------------
+# column-at-a-time cell encoding (the wire writer's path)
+
+_NULL_CELL = struct.pack("!i", -1)
+_pack_len = struct.Struct("!i").pack
+_INT_TYPES = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_TEXT_TYPES = (T.StringType, T.VarcharType, T.CharType)
+_ONE_US = timedelta(microseconds=1)
+
+
+def column_encoder(dt: T.DataType, fmt: int, extra_float_digits: int = 1):
+    """The encoder of one result column: a sequence of values -> one
+    DataRow cell per value (int32 length, then the value in format
+    ``fmt``; length -1 for NULL). The type dispatch runs here, once per
+    column; types without a fast path go through :func:`encode_value` /
+    :func:`encode_value_binary` one value at a time."""
+    fixed = _fixed_width_cell(dt) if fmt == 1 else None
+    if fixed is not None:
+        return lambda values: [_NULL_CELL if v is None else fixed(v)
+                               for v in values]
+    to_bytes = (_binary_bytes(dt) if fmt == 1
+                else _text_bytes(dt, extra_float_digits))
+
+    def encode_column(values) -> list[bytes]:
+        out = []
+        for v in values:
+            if v is None:
+                out.append(_NULL_CELL)
+            else:
+                b = to_bytes(v)
+                out.append(_pack_len(len(b)) + b)
+        return out
+    return encode_column
+
+
+def _text_bytes(dt: T.DataType, efd: int):
+    if isinstance(dt, _INT_TYPES):
+        return b"%d".__mod__
+    if isinstance(dt, _TEXT_TYPES):
+        return _str_bytes
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return lambda v: _encode_float(v, efd).encode()
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        tz = isinstance(dt, T.TimestampType)
+        return lambda v: _encode_timestamp(v, tz).encode()
+    if isinstance(dt, T.DateType):
+        return lambda v: v.isoformat().encode()
+    if isinstance(dt, T.BooleanType):
+        return lambda v: b"t" if v else b"f"
+    return lambda v: encode_value(v, dt, efd).encode()
+
+
+def _binary_bytes(dt: T.DataType):
+    if isinstance(dt, _TEXT_TYPES):
+        return _str_bytes
+    return lambda v: encode_value_binary(v, dt)
+
+
+def _str_bytes(v) -> bytes:
+    return str(v).encode()
+
+
+def _fixed_width_cell(dt: T.DataType):
+    """value -> whole cell (length and bytes in one pack) for the binary
+    fixed-width types, else None."""
+    if isinstance(dt, T.BooleanType):
+        return lambda v: b"\x00\x00\x00\x01\x01" if v else \
+            b"\x00\x00\x00\x01\x00"
+    for types, code, width in (((T.ByteType, T.ShortType), "h", 2),
+                               (T.IntegerType, "i", 4),
+                               (T.LongType, "q", 8),
+                               (T.FloatType, "f", 4),
+                               (T.DoubleType, "d", 8)):
+        if isinstance(dt, types):
+            return functools.partial(struct.Struct("!i" + code).pack, width)
+    if isinstance(dt, T.DateType):
+        pack_date = struct.Struct("!ii").pack
+        epoch = _PG_EPOCH_DATE.toordinal()
+        return lambda v: pack_date(4, v.toordinal() - epoch)
+    if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+        pack_ts = struct.Struct("!iq").pack
+        return lambda v: pack_ts(8, (v - _PG_EPOCH_TS) // _ONE_US)
+    return None
+
+
+# ---------------------------------------------------------------------------
 # binary-format value DECODING (COPY FROM STDIN (FORMAT binary), binary
 # Bind parameters) — inverse of encode_value_binary for the scalar surface
 
 def decode_value_binary(b: bytes, dt: T.DataType):
     """PG binary wire bytes → Python value for the Spark type."""
-    import struct
-
     if b is None:
         return None
     if isinstance(dt, T.BooleanType):
@@ -479,8 +560,6 @@ def decode_value_binary(b: bytes, dt: T.DataType):
 def _decode_array_binary(b: bytes, dt: T.ArrayType):
     """array_recv: inverse of :func:`_encode_array_binary` including the
     multidimensional reshape back to nested Python lists."""
-    import struct
-
     ndim, _hasnull, _oid = struct.unpack("!iii", b[:12])
     pos = 12
     if ndim == 0:
@@ -512,8 +591,6 @@ def _decode_array_binary(b: bytes, dt: T.ArrayType):
 def _decode_struct_binary(b: bytes, dt: T.StructType):
     """record_recv: (nfields, then per field oid + length + payload) →
     tuple in schema field order."""
-    import struct
-
     (n,) = struct.unpack("!i", b[:4])
     if n != len(dt.fields):
         raise NotImplementedError(
@@ -533,8 +610,6 @@ def _decode_struct_binary(b: bytes, dt: T.StructType):
 
 
 def _decode_numeric_binary(b: bytes) -> Decimal:
-    import struct
-
     nd, weight, sign, dscale = struct.unpack("!HhHH", b[:8])
     if sign == 0xC000:
         return Decimal("NaN")

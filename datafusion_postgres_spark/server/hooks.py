@@ -313,12 +313,13 @@ class HookChain:
         from datafusion_postgres_spark.server.session_state import Cursor
 
         spark_sql = self.engine.transpiler.transpile(query)
-        df = self.engine.spark.sql(spark_sql)
+        res = ExecutionResult(df=self.engine.spark.sql(spark_sql))
         # Eager execution like the reference (cursor.rs:89-152), but
-        # streamed: toLocalIterator pulls partitions on demand, so a cursor
-        # over a 100 TB result does not materialize on the driver.
+        # streamed: the result's batches are pulled a partition at a time,
+        # so a cursor over a 100 TB result does not materialize on the
+        # driver.
         self.engine.state.cursors[name.lower()] = Cursor(
-            schema=df.schema, iterator=df.toLocalIterator())
+            schema=res.schema, iterator=res.rows())
         return ExecutionResult(df=None, command_tag="DECLARE CURSOR")
 
     def _fetch(self, m):

@@ -21,10 +21,18 @@ Both query protocols share one statement lifecycle
 a simple query is the unnamed portal with text formats, no row limit and
 a RowDescription (handlers.rs shares its planning path and
 ``arrow-pg/src/datatypes/df.rs`` encoder the same way).
+
+Rows leave in chunks of at most ``_CHUNK_ROWS``, never past an Execute's
+``max_rows``: the writer pulls a chunk from the result's row stream
+(Arrow batches underneath, ``session.arrow_batches``), transposes it,
+encodes each column with the encoder ``encoder.column_encoder`` chose for
+it, and writes the chunk's DataRows with one socket write; COPY TO
+STDOUT writes its CopyData messages the same way.
 """
 
 from __future__ import annotations
 
+import itertools
 import socket
 import socketserver
 import struct
@@ -45,8 +53,20 @@ CANCEL_REQUEST = 80877102
 GSSENC_REQUEST = 80877104
 
 
+# rows per socket write of DataRows / CopyData
+_CHUNK_ROWS = 4096
+
+_pack_len = struct.Struct("!I").pack
+
+
 def _msg(tag: bytes, payload: bytes) -> bytes:
-    return tag + struct.pack("!I", len(payload) + 4) + payload
+    return tag + _pack_len(len(payload) + 4) + payload
+
+
+def _chunks(rows):
+    """Lists of up to _CHUNK_ROWS rows from an iterator."""
+    while chunk := list(itertools.islice(rows, _CHUNK_ROWS)):
+        yield chunk
 
 
 def _sqlstate_of(exc: Exception) -> str:
@@ -397,46 +417,45 @@ class _Conn(socketserver.BaseRequestHandler):
     def _stream_portal_rows(self, portal_key, rows, res, fmts,
                             max_rows: int, n: int):
         """The one DataRow loop: send rows from a (possibly resumed) portal
-        iterator; on hitting max_rows, park the iterator for the next
-        Execute."""
-        payload = self._row_payload(res.schema, fmts)
+        iterator a chunk at a time, one socket write per chunk; on hitting
+        max_rows, park the iterator for the next Execute."""
+        messages = self._tuple_messages(b"D", res.schema, fmts)
         sent = 0
-        for row in rows:
-            self._send(_msg(b"D", payload(row)))
-            n += 1
-            sent += 1
-            if max_rows and sent >= max_rows:
-                self.portal_iters[portal_key] = (rows, res, fmts, n)
-                self._send(_msg(b"s", b""))  # PortalSuspended
+        while not max_rows or sent < max_rows:
+            want = (min(_CHUNK_ROWS, max_rows - sent) if max_rows
+                    else _CHUNK_ROWS)
+            chunk = list(itertools.islice(rows, want))
+            if chunk:
+                self._send(messages(chunk))
+                sent += len(chunk)
+                n += len(chunk)
+            if len(chunk) < want:
+                tag = res.command_tag
+                if tag == "SELECT":
+                    tag = f"SELECT {n}"
+                self._send(_msg(b"C", _cstr(tag)))
                 return
-        tag = res.command_tag
-        if tag == "SELECT":
-            tag = f"SELECT {n}"
-        self._send(_msg(b"C", _cstr(tag)))
+        self.portal_iters[portal_key] = (rows, res, fmts, n)
+        self._send(_msg(b"s", b""))  # PortalSuspended
 
-    def _row_payload(self, schema, fmts):
-        """row -> DataRow payload: int16 column count, then per column an
-        int32 length (-1 for NULL) and the value in its format. A COPY
-        binary tuple has the same layout. The encoders are looked up here,
-        per result, not bound at import."""
-        from datafusion_postgres_spark.server.encoder import (
-            encode_value, encode_value_binary)
-
+    def _tuple_messages(self, tag: bytes, schema, fmts):
+        """chunk of rows -> one buffer of ``tag`` messages, one per row:
+        int16 column count, then per column an int32 length (-1 for NULL)
+        and the value in its format (a DataRow, or a COPY binary tuple as
+        CopyData). The chunk is transposed and each column encoded by the
+        encoder :func:`encoder.column_encoder` chose for it, per result."""
         efd = int(self.engine.state.get_var("extra_float_digits") or 1)
-        cols = [(f.dataType, fmt) for f, fmt in zip(schema.fields, fmts)]
-        head = struct.pack("!H", len(cols))
+        encoders = [encoder.column_encoder(f.dataType, fmt, efd)
+                    for f, fmt in zip(schema.fields, fmts)]
+        head = struct.pack("!H", len(encoders))
 
-        def payload(row) -> bytes:
-            buf = head
-            for v, (dt, fmt) in zip(row, cols):
-                if v is None:
-                    buf += struct.pack("!i", -1)
-                    continue
-                b = (encode_value_binary(v, dt) if fmt == 1
-                     else encode_value(v, dt, efd).encode())
-                buf += struct.pack("!I", len(b)) + b
-            return buf
-        return payload
+        def messages(chunk) -> bytes:
+            cells = [enc(col) for enc, col in zip(encoders, zip(*chunk))]
+            bodies = (map(b"".join, zip(*cells)) if cells
+                      else [b""] * len(chunk))
+            return b"".join(tag + _pack_len(len(body) + 6) + head + body
+                            for body in bodies)
+        return messages
 
     def _recv_message(self) -> tuple[bytes, bytes]:
         tag = self._recv_exact(1)
@@ -496,21 +515,24 @@ class _Conn(socketserver.BaseRequestHandler):
             header = ",".join(f.name for f in schema.fields) + "\n"
             self._send(_msg(b"d", header.encode()))
         n = 0
-        for row in res.rows():
-            values = encoder.encode_row(row, schema, efd)
-            if csv:
-                cells = ["" if v is None else
-                         ('"' + v.replace('"', '""') + '"'
-                          if any(c in v for c in ',"\n') else v)
-                         for v in values]
-                line = ",".join(cells) + "\n"
-            else:
-                cells = ["\\N" if v is None else
-                         v.replace("\\", "\\\\").replace("\t", "\\t")
-                          .replace("\n", "\\n") for v in values]
-                line = "\t".join(cells) + "\n"
-            self._send(_msg(b"d", line.encode()))
-            n += 1
+        for chunk in _chunks(res.rows()):
+            out = []
+            for row in chunk:
+                values = encoder.encode_row(row, schema, efd)
+                if csv:
+                    cells = ["" if v is None else
+                             ('"' + v.replace('"', '""') + '"'
+                              if any(c in v for c in ',"\n') else v)
+                             for v in values]
+                    line = ",".join(cells) + "\n"
+                else:
+                    cells = ["\\N" if v is None else
+                             v.replace("\\", "\\\\").replace("\t", "\\t")
+                              .replace("\n", "\\n") for v in values]
+                    line = "\t".join(cells) + "\n"
+                out.append(_msg(b"d", line.encode()))
+            self._send(b"".join(out))
+            n += len(chunk)
         self._send(_msg(b"c", b""))
         self._send(_msg(b"C", _cstr(f"COPY {n}")))
 
@@ -528,11 +550,11 @@ class _Conn(socketserver.BaseRequestHandler):
                         struct.pack(f"!{n_cols}H", *([1] * n_cols))))
         self._send(_msg(b"d", COPY_BINARY_SIGNATURE +
                         struct.pack("!ii", 0, 0)))
-        payload = self._row_payload(schema, [1] * n_cols)
+        messages = self._tuple_messages(b"d", schema, [1] * n_cols)
         n = 0
-        for row in res.rows():
-            self._send(_msg(b"d", payload(row)))
-            n += 1
+        for chunk in _chunks(res.rows()):
+            self._send(messages(chunk))
+            n += len(chunk)
         self._send(_msg(b"d", struct.pack("!h", -1)))
         self._send(_msg(b"c", b""))
         self._send(_msg(b"C", _cstr(f"COPY {n}")))

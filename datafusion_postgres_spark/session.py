@@ -19,8 +19,13 @@ import threading
 from dataclasses import dataclass, field
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    ArrayType, DataType, MapType, StringType, StructField, StructType,
+    TimestampNTZType, TimestampType,
+)
 
 _BUILD_LOCK = threading.Lock()
 
@@ -113,11 +118,13 @@ def clone_session(spark: SparkSession) -> SparkSession:
 class ExecutionResult:
     """One statement's result, as the wire writer consumes it.
 
-    A Spark result streams through ``toLocalIterator``, so a 100 TB result
-    set passes through the driver instead of being collect()ed. Answers
-    the driver already holds (SHOW, FETCH, ``set_config``, EXPLAIN
-    ANALYZE) carry their rows and schema directly and run no Spark job.
-    A result with no schema is a command: only its tag goes to the client.
+    A Spark result crosses to the driver as Arrow record batches, one
+    partition at a time (:func:`arrow_batches`), so a 100 TB result set
+    streams through the driver instead of being collect()ed; :meth:`rows`
+    turns each batch into ``Row``s as the writer pulls them. Answers the
+    driver already holds (SHOW, FETCH, ``set_config``, EXPLAIN ANALYZE)
+    carry their rows and schema directly and run no Spark job. A result
+    with no schema is a command: only its tag goes to the client.
     """
 
     df: DataFrame | None
@@ -133,17 +140,85 @@ class ExecutionResult:
     def rows(self) -> Iterator:
         if self.df is None:
             return iter(self.held_rows or ())
-        return self.df.toLocalIterator()
+        return _arrow_rows(self.df)
 
     def collect(self, timeout_secs: float = 0.0) -> list:
         """Materialize under the statement timeout (57014 on deadline)."""
         if self.df is None:
             return list(self.held_rows or ())
-        if timeout_secs > 0:
-            from datafusion_postgres_spark.server.timeout import run_with_timeout
-            return run_with_timeout(self.df.sparkSession, self.df.collect,
-                                    timeout_secs)
-        return self.df.collect()
+        from datafusion_postgres_spark.server.timeout import run_with_timeout
+        return run_with_timeout(self.df.sparkSession,
+                                lambda: list(_arrow_rows(self.df)),
+                                timeout_secs)
+
+
+def _utc_naive(dt: DataType) -> DataType:
+    """``dt`` with every TIMESTAMP read as TIMESTAMP_NTZ. An Arrow
+    TIMESTAMP column holds UTC instants; read tz-naive, they stay the UTC
+    instant, where PySpark's converter would shift them into the OS's
+    local time zone."""
+    if isinstance(dt, TimestampType):
+        return TimestampNTZType()
+    if isinstance(dt, ArrayType):
+        return ArrayType(_utc_naive(dt.elementType), dt.containsNull)
+    if isinstance(dt, MapType):
+        return MapType(_utc_naive(dt.keyType), _utc_naive(dt.valueType),
+                       dt.valueContainsNull)
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _utc_naive(f.dataType),
+                                       f.nullable, f.metadata)
+                           for f in dt.fields])
+    return dt
+
+
+def arrow_batches(df: DataFrame) -> Iterator[pa.RecordBatch]:
+    """The result of ``df`` as Arrow record batches, one partition at a
+    time: executors encode their rows as Arrow IPC batches
+    (``toArrowBatchRdd``, ``private[sql]`` in Scala but public in the
+    bytecode) and the driver requests one partition after another, so it
+    holds one partition at a time. The Spark work starts here; the
+    batches are read as they are pulled."""
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.util import _local_iterator_from_socket
+
+    spark = df.sparkSession
+    schema = to_arrow_schema(
+        _utc_naive(df.schema),
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes())
+    sock_info = spark.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
+        df._jdf.toArrowBatchRdd(), False)
+    return (pa.ipc.read_record_batch(pa.py_buffer(payload), schema)
+            for payload in _local_iterator_from_socket(sock_info,
+                                                       NoOpSerializer()))
+
+
+def _arrow_rows(df: DataFrame) -> Iterator:
+    """``df``'s rows, converted from :func:`arrow_batches` one batch at a
+    time (the same ``Row`` values ``toLocalIterator`` gives, except that a
+    TIMESTAMP is the naive UTC instant and a MAP keeps Spark's entry
+    order)."""
+    from pyspark.sql.conversion import ArrowTableToRowsConversion
+
+    schema = _utc_naive(df.schema)
+    batches = arrow_batches(df)
+    return (row for batch in batches
+            for row in ArrowTableToRowsConversion.convert(
+                pa.Table.from_batches([batch]), schema))
+
+
+def local_relation(spark: SparkSession, schema: StructType,
+                   rows: list) -> DataFrame:
+    """Driver-held rows as an Arrow-backed local relation: rows + schema
+    -> ``pyarrow.Table`` -> ``createDataFrame``, which Spark plans as a
+    ``LocalTableScan`` (a list of rows would be a Python-RDD scan).
+    Columns past the end of the rows are NULL."""
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows))
+    table = pa.Table.from_arrays(
+        [pa.array(columns[i], f.type) if i < len(columns)
+         else pa.nulls(len(rows), f.type) for i, f in enumerate(arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def text_schema(columns: list[str]) -> StructType:
@@ -254,11 +329,11 @@ class SparkPgEngine:
         # Full execution through THIS DataFrame's QueryExecution (like
         # PG, which runs the statement and discards the tuples) so the
         # executed plan carries populated SQLMetrics — the per-operator
-        # actuals DataFusion prints from its metrics tree. Streamed via
-        # toLocalIterator and discarded: the driver holds one partition
-        # at a time, so a large-result statement can't OOM it the way a
-        # collect() would (PG's ANALYZE never materializes either).
-        n = sum(1 for _ in df.toLocalIterator())
+        # actuals DataFusion prints from its metrics tree. The Arrow
+        # batches are counted and dropped: the driver holds one partition
+        # at a time and builds no row objects, so a large-result statement
+        # can't OOM it the way a collect() would.
+        n = sum(batch.num_rows for batch in arrow_batches(df))
         t2 = time.perf_counter()
         lines = plan.rstrip("\n").split("\n")
         from datafusion_postgres_spark.plans.inspect import executed_nodes
@@ -392,15 +467,14 @@ class SparkPgEngine:
         if fmt == "binary":
             # typed rows straight from the wire decoders — no string stage
             rows = parse_copy_binary(data, [f.dataType for f in fields])
-            staged = self.spark.createDataFrame(
-                rows, T.StructType(
-                    [T.StructField(f.name, f.dataType) for f in fields]))
+            staged_types = [f.dataType for f in fields]
         else:
             rows = parse_copy_payload(data, len(fields), fmt, delimiter,
                                       null_marker, header)
-            str_schema = T.StructType(
-                [T.StructField(f.name, T.StringType()) for f in fields])
-            staged = self.spark.createDataFrame(rows, str_schema)
+            staged_types = [T.StringType()] * len(fields)
+        staged = local_relation(self.spark, T.StructType(
+            [T.StructField(f.name, t) for f, t in zip(fields, staged_types)]),
+            rows)
         named = {f.name for f in fields}
         proj = [(F.col(f.name).cast(f.dataType) if f.name in named
                  else F.lit(None).cast(f.dataType)).alias(f.name)

@@ -213,6 +213,15 @@ class TestSimpleQuery:
             "SELECT array(1,2,3) AS xs, named_struct('a', 1, 'b', 'x') AS st")
         assert res["rows"] == [["{1,2,3}", "(1,x)"]]
 
+    def test_map_text_is_spark_to_json(self, client, spark):
+        # a MAP goes out in Spark's entry order, which is what Spark's own
+        # to_json prints (a hash order would give zz, aa, a, b, c)
+        m = "map('b', 1, 'a', 2, 'zz', 3, 'c', 4, 'aa', 5)"
+        res = client.query(f"SELECT {m} AS m")
+        want = spark.sql(f"SELECT to_json({m})").first()[0]
+        assert res["rows"] == [[want]]
+        assert want == '{"b":1,"a":2,"zz":3,"c":4,"aa":5}'
+
 
 class TestExtendedProtocol:
     def _parse(self, client, name, sql):
@@ -651,6 +660,38 @@ class TestCopyIn:
         got = client.query("SELECT count(*) FROM copy_tgt")
         assert got["rows"] == [["0"]]
 
+    @pytest.mark.parametrize("fmt", ["text", "binary"])
+    def test_copy_staged_as_arrow_table(self, client, monkeypatch, fmt):
+        # COPY input is staged as an Arrow local relation, never as a
+        # list of rows (a Python-RDD scan)
+        import pyarrow as pa
+        from pyspark.sql import SparkSession
+
+        from datafusion_postgres_spark.server.copy_data import (
+            COPY_BINARY_SIGNATURE)
+
+        staged = []
+        create = SparkSession.createDataFrame
+
+        def spy(self, data, *args, **kwargs):
+            staged.append(type(data))
+            return create(self, data, *args, **kwargs)
+        monkeypatch.setattr(SparkSession, "createDataFrame", spy)
+        client.query("TRUNCATE TABLE copy_tgt")
+        if fmt == "text":
+            payload, opts = b"3\tthree\t3.5\n", ""
+        else:
+            payload = (COPY_BINARY_SIGNATURE + struct.pack("!ii", 0, 0) +
+                       struct.pack("!hii", 3, 4, 3) +
+                       struct.pack("!i", 5) + b"three" +
+                       struct.pack("!id", 8, 3.5) + struct.pack("!h", -1))
+            opts = " WITH (FORMAT binary)"
+        res = client.copy_in(f"COPY copy_tgt FROM STDIN{opts}", payload)
+        assert res["tags"] == ["COPY 1"], res
+        assert staged == [pa.Table]
+        got = client.query("SELECT * FROM copy_tgt")
+        assert got["rows"] == [["3", "three", "3.5"]]
+
     def test_copy_in_bad_column_count(self, client):
         res = client.copy_in("COPY copy_tgt FROM STDIN", b"1\tonly-two\n")
         assert res["errors"] and res["errors"][0][b"C"] == "22P04"
@@ -879,3 +920,129 @@ class TestHeldRows:
         plan = client.query("EXPLAIN ANALYZE SELECT 1 AS one")
         assert not plan["errors"] and plan["cols"] == ["QUERY PLAN"]
         assert plan["rows"][-1] == ["Actual Rows: 1"]
+
+
+@pytest.fixture
+def new_york_tz(monkeypatch):
+    """The server's OS time zone set to America/New_York (the session's
+    TimeZone stays UTC), restored afterwards."""
+    import time
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+class TestTimestampZone:
+    """A TIMESTAMP goes out as the UTC instant Spark holds, whatever the
+    server process's OS time zone."""
+
+    def test_wire_value_ignores_os_time_zone(self, client, new_york_tz):
+        from datetime import datetime, timedelta
+
+        ts = "TIMESTAMP '2024-01-02 03:04:05'"
+        res = client.query(f"SELECT {ts} AS t, CAST({ts} AS STRING) AS s")
+        assert res["rows"] == [["2024-01-02 03:04:05+00",
+                                "2024-01-02 03:04:05"]]
+        msgs = _extended(client, f"SELECT {ts} AS t, array({ts}) AS a",
+                         result_format=1)
+        (row,) = [_text_cells(p) for t, p in msgs if t == b"D"]
+        micros = (datetime(2024, 1, 2, 3, 4, 5) - datetime(2000, 1, 1)) \
+            // timedelta(microseconds=1)
+        assert row[0] == struct.pack("!q", micros)
+        # one-element array: header, then the element's length and value
+        assert row[1].endswith(struct.pack("!iq", 8, micros))
+
+
+def _execute_pieces(client, portal: str, max_rows: int) -> list:
+    """Execute a bound portal ``max_rows`` rows at a time until it
+    completes: [(DataRow payloads, "suspended" or the CommandComplete
+    tag)] per Execute."""
+    pieces = []
+    while True:
+        _frame(client, b"E", portal.encode() + b"\x00" +
+               struct.pack("!I", max_rows))
+        _frame(client, b"H", b"")
+        rows = []
+        while True:
+            tag, payload = client.read_message()
+            if tag == b"D":
+                rows.append(payload)
+            elif tag == b"s":
+                pieces.append((rows, "suspended"))
+                break
+            elif tag == b"C":
+                pieces.append((rows, payload.rstrip(b"\x00").decode()))
+                return pieces
+            elif tag == b"E":
+                raise AssertionError(payload)
+
+
+class TestChunkedPortals:
+    """Rows go out a chunk at a time; a portal's max_rows cuts across
+    Arrow batches and writer chunks without losing or repeating a row."""
+
+    # two partitions of 12,500 rows: two Arrow batches each at the default
+    # 10,000 rows per batch (operators that ran earlier in the session may
+    # have lowered spark.sql.execution.arrow.maxRecordsPerBatch, which
+    # only adds batch boundaries), and more than one 4,096-row chunk
+    SQL = "SELECT id, CAST(id * 3 AS STRING) AS s FROM range(0, 25000, 1, 2)"
+    N = 25000
+
+    def _bind(self, client, portal, sql):
+        _frame(client, b"P", portal.encode() + b"\x00" + sql.encode() +
+               b"\x00\x00\x00")
+        _frame(client, b"B", portal.encode() + b"\x00" + portal.encode() +
+               b"\x00" + struct.pack("!HHH", 0, 0, 0))
+
+    def test_result_spans_batches(self, spark):
+        from datafusion_postgres_spark.session import arrow_batches
+
+        sizes = [b.num_rows for b in arrow_batches(spark.sql(self.SQL))]
+        assert len(sizes) > 2 and sum(sizes) == self.N
+
+    @pytest.mark.parametrize("max_rows", [7, 4097])
+    def test_pieces_equal_simple_query(self, client, max_rows):
+        simple = client.query(self.SQL)
+        assert simple["tags"] == [f"SELECT {self.N}"]
+        self._bind(client, "chunked", self.SQL)
+        pieces = _execute_pieces(client, "chunked", max_rows)
+        _frame(client, b"S", b"")
+        assert [t for t, _ in _until_ready(client)] == [b"Z"]
+        *suspended, (last_rows, tag) = pieces
+        assert all(len(rows) == max_rows and how == "suspended"
+                   for rows, how in suspended)
+        assert len(suspended) == self.N // max_rows
+        assert len(last_rows) == self.N % max_rows
+        assert tag == f"SELECT {self.N}"
+        got = [[c.decode() for c in _text_cells(p)]
+               for rows, _ in pieces for p in rows]
+        assert got == simple["rows"]
+
+    def test_close_mid_portal_then_new_statement(self, client):
+        self._bind(client, "half", self.SQL)
+        _frame(client, b"E", b"half\x00" + struct.pack("!I", 4097))
+        _frame(client, b"C", b"Phalf\x00")
+        _frame(client, b"S", b"")
+        msgs = _until_ready(client)
+        assert [t for t, _ in msgs] == \
+            [b"1", b"2"] + [b"D"] * 4097 + [b"s", b"3", b"Z"]
+        assert client.query("SELECT 41 + 1 AS x")["rows"] == [["42"]]
+        _frame(client, b"E", b"half\x00" + struct.pack("!I", 0))
+        _frame(client, b"S", b"")
+        (err,) = [p for t, p in _until_ready(client) if t == b"E"]
+        assert b"C34000" in err
+
+    def test_zero_rows_and_empty_query(self, client):
+        empty = "SELECT id FROM range(0)"
+        self._bind(client, "none", empty)
+        assert _execute_pieces(client, "none", 7) == [([], "SELECT 0")]
+        _frame(client, b"S", b"")
+        _until_ready(client)
+        res = client.query(empty)
+        assert res["cols"] == ["id"] and res["rows"] == []
+        assert res["tags"] == ["SELECT 0"]
+        _frame(client, b"Q", b"\x00")
+        assert [t for t, _ in _until_ready(client)] == [b"I", b"Z"]
