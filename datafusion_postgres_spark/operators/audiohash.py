@@ -37,6 +37,8 @@ from pyspark.sql.types import (
     IntegerType, LongType, StructField, StructType,
 )
 
+from datafusion_postgres_spark.operators.multimodal import map_in_batches
+
 
 def decode_wav_samples(content: bytes) -> tuple[int, list[int]]:
     """(sample_rate, mono samples) from a RIFF/WAVE byte string.
@@ -131,9 +133,6 @@ def audio_envelope_hashes(media: DataFrame, id_col: str = "doc_id",
     """Per-clip envelope fingerprints over Arrow batches — zero
     shuffle, linear scan; undecodable/compressed rows emit NULLs (a
     poison clip must never kill the corpus job)."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -149,7 +148,7 @@ def audio_envelope_hashes(media: DataFrame, id_col: str = "doc_id",
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               ENVELOPE_SCHEMA.fields])
 
-    return media.mapInPandas(batches, ENVELOPE_SCHEMA)
+    return map_in_batches(media, batches, ENVELOPE_SCHEMA, batch_size)
 
 
 def audio_near_dup_pairs(media: DataFrame, id_col: str = "doc_id",
@@ -307,7 +306,5 @@ def synthesize_wav_corpus(docs: DataFrame, text_col: str = "text",
             yield pd.DataFrame(rows, columns=["doc_id", "content",
                                               "media_type"])
 
-    spark = docs.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
-    return docs.select(id_col, text_col).mapInPandas(to_wav, out_schema)
+    return map_in_batches(docs.select(id_col, text_col), to_wav, out_schema,
+                          batch_size)

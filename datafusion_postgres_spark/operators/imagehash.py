@@ -52,6 +52,8 @@ from pyspark.sql.types import (
     IntegerType, LongType, StructField, StructType,
 )
 
+from datafusion_postgres_spark.operators.multimodal import map_in_batches
+
 _log = logging.getLogger(__name__)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -455,9 +457,6 @@ def image_perceptual_hashes(media: DataFrame, id_col: str = "doc_id",
     Undecodable rows (codec formats, corrupt bytes) emit NULL hashes
     instead of failing the batch: at corpus scale a poison row must
     never kill the job."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def hash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -473,7 +472,7 @@ def image_perceptual_hashes(media: DataFrame, id_col: str = "doc_id",
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               HASH_SCHEMA.fields])
 
-    return media.mapInPandas(hash_batches, HASH_SCHEMA)
+    return map_in_batches(media, hash_batches, HASH_SCHEMA, batch_size)
 
 
 def _bq(name: str) -> str:
@@ -791,10 +790,8 @@ def synthesize_png_corpus(docs: DataFrame, text_col: str = "text",
             yield pd.DataFrame(rows, columns=["doc_id", "content",
                                               "media_type"])
 
-    spark = docs.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
-    return docs.select(id_col, text_col).mapInPandas(to_png, out_schema)
+    return map_in_batches(docs.select(id_col, text_col), to_png, out_schema,
+                          batch_size)
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,8 @@ The Spark-side plumbing is real either way:
   * feature extraction runs through `mapInPandas` (Arrow batches, one
     Python worker per partition — the only sane shape for CPU-heavy
     decode at 100 TB: no shuffle, linear scan, vectorized transfer);
-  * batch size control via spark.sql.execution.arrow.maxRecordsPerBatch;
+  * batch size control per operator (`map_in_batches` slices each Arrow
+    batch in the worker; the session's Arrow settings stay untouched);
   * partitioning: decode cost is per-byte, so repartition by size budget
     (`repartition_for_decode`) before the map to avoid straggler tasks.
 """
@@ -48,6 +49,22 @@ DECODED_SCHEMA = StructType([
     StructField("height", IntegerType()),
     StructField("checksum", LongType()),
 ])
+
+
+def map_in_batches(df: DataFrame, fn, schema: StructType,
+                   batch_size: int) -> DataFrame:
+    """``df.mapInPandas(fn, schema)`` with ``fn`` fed pandas frames of at
+    most ``batch_size`` rows. The slicing happens in the Python worker,
+    so the caller's session keeps its own
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``: Spark reads that
+    setting when an action runs, not when the plan is built, so an
+    operator returning a lazy DataFrame could only make it apply by
+    leaving it changed for every later query of the session."""
+    def sliced(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        return fn(pdf.iloc[i:i + batch_size] for pdf in batches
+                  for i in range(0, len(pdf), batch_size))
+    return df.mapInPandas(sliced, schema)
+
 
 _MAGIC = {b"\x89PNG": "png", b"\xff\xd8\xff": "jpeg", b"RIFF": "wav",
           b"GIF8": "gif", b"\x00\x00\x00": "mp4", b"BM": "bmp",
@@ -254,9 +271,6 @@ def extract_metadata(media: DataFrame, fake_decode: bool = True,
     The per-partition generator shape means constant memory per worker
     regardless of table size; at cluster scale this is the operator you'd
     wrap a GPU decode pool around."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -266,7 +280,7 @@ def extract_metadata(media: DataFrame, fake_decode: bool = True,
             out.insert(1, "media_type", pdf["media_type"].values)
             yield out
 
-    return media.mapInPandas(decode_batches, DECODED_SCHEMA)
+    return map_in_batches(media, decode_batches, DECODED_SCHEMA, batch_size)
 
 
 def repartition_for_decode(media: DataFrame, target_bytes: int = 128 << 20,
@@ -332,9 +346,6 @@ def resize_batch(media: DataFrame, max_side: int = 256,
     a GPU/libvips pool plugs in."""
     import math
 
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
     out_schema = StructType([
         StructField("doc_id", LongType()),
         StructField("media_type", StringType()),
@@ -364,7 +375,7 @@ def resize_batch(media: DataFrame, max_side: int = 256,
             out.insert(1, "media_type", pdf["media_type"].values)
             yield out
 
-    return media.mapInPandas(batches, out_schema)
+    return map_in_batches(media, batches, out_schema, batch_size)
 
 
 def audio_chunk_plan(media: DataFrame, chunk_ms: int = 30_000,
@@ -403,9 +414,6 @@ def byte_histogram_features(media: DataFrame, dims: int = 16,
     import numpy as np
     from pyspark.sql.types import ArrayType, DoubleType
 
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
     out_schema = StructType([
         StructField("doc_id", LongType()),
         StructField("media_type", StringType()),
@@ -430,7 +438,7 @@ def byte_histogram_features(media: DataFrame, dims: int = 16,
                 "features": feats,
             })
 
-    return media.mapInPandas(batches, out_schema)
+    return map_in_batches(media, batches, out_schema, batch_size)
 
 
 AUDIO_SCHEMA = StructType([
@@ -594,9 +602,6 @@ def extract_audio_metadata(media: DataFrame,
     """Header-only WAV probe over Arrow batches — the real-duration
     input to ``audio_chunk_plan`` (join on doc_id and pass
     duration_ms_col). Same mapInPandas shape as extract_metadata."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -605,7 +610,7 @@ def extract_audio_metadata(media: DataFrame,
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out[[f.name for f in AUDIO_SCHEMA.fields]]
 
-    return media.mapInPandas(probe, AUDIO_SCHEMA)
+    return map_in_batches(media, probe, AUDIO_SCHEMA, batch_size)
 
 
 # EXIF IFD0 tags we surface (public TIFF 6.0 / Exif 2.x spec)
@@ -697,9 +702,6 @@ def extract_image_exif(media: DataFrame,
     """EXIF probe over Arrow batches — same constant-memory mapInPandas
     shape as the other probes; non-JPEG and EXIF-less inputs come back
     has_exif=False instead of erroring (probes run over mixed corpora)."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -708,7 +710,7 @@ def extract_image_exif(media: DataFrame,
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out[[f.name for f in EXIF_SCHEMA.fields]]
 
-    return media.mapInPandas(probe, EXIF_SCHEMA)
+    return map_in_batches(media, probe, EXIF_SCHEMA, batch_size)
 
 
 def synthetic_jpeg(width: int, height: int, orientation: int | None = None,
@@ -864,9 +866,6 @@ def extract_video_metadata(media: DataFrame,
     as extract_audio_metadata: no shuffle, constant memory per worker,
     `mdat` never read. Feed its duration_ms into frame_sample_plan so
     the sampling grid uses REAL durations."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -875,7 +874,7 @@ def extract_video_metadata(media: DataFrame,
             out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out[[f.name for f in VIDEO_SCHEMA.fields]]
 
-    return media.mapInPandas(probe, VIDEO_SCHEMA)
+    return map_in_batches(media, probe, VIDEO_SCHEMA, batch_size)
 
 
 def synthetic_mp4(duration_ms: int, width: int, height: int,

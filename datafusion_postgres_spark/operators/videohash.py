@@ -43,7 +43,9 @@ from pyspark.sql.types import (
 from datafusion_postgres_spark.operators.imagehash import (
     ahash_chunks, chunked_hamming_pairs,
 )
-from datafusion_postgres_spark.operators.multimodal import _iter_boxes
+from datafusion_postgres_spark.operators.multimodal import (
+    _iter_boxes, map_in_batches,
+)
 
 
 def _box(btype: bytes, payload: bytes) -> bytes:
@@ -233,9 +235,6 @@ def video_frame_hashes(media: DataFrame, every_n: int = 2,
     scan; one output row per sampled (video, frame position).
     Undecodable/coded-video rows emit a single NULL row (a poison
     container must never kill the corpus job)."""
-    spark = media.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -252,7 +251,7 @@ def video_frame_hashes(media: DataFrame, every_n: int = 2,
             yield pd.DataFrame(rows, columns=[f.name for f in
                                               FRAME_HASH_SCHEMA.fields])
 
-    return media.mapInPandas(batches, FRAME_HASH_SCHEMA)
+    return map_in_batches(media, batches, FRAME_HASH_SCHEMA, batch_size)
 
 
 def video_near_dup_pairs(media: DataFrame, every_n: int = 2,
@@ -538,7 +537,5 @@ def synthesize_mp4_corpus(docs: DataFrame, text_col: str = "text",
             yield pd.DataFrame(rows, columns=["doc_id", "content",
                                               "media_type"])
 
-    spark = docs.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
-                   str(batch_size))
-    return docs.select(id_col, text_col).mapInPandas(to_mp4, out_schema)
+    return map_in_batches(docs.select(id_col, text_col), to_mp4, out_schema,
+                          batch_size)

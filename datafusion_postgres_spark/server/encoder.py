@@ -197,19 +197,26 @@ def _encode_interval(v: timedelta) -> str:
     return " ".join(parts)
 
 
-_ARRAY_QUOTE_CHARS = set(' {},"\\\'')
+# array_out quotes an element holding one of these (array_isspace's
+# whitespace included)
+_ARRAY_QUOTE_CHARS = frozenset('{},"\\ \t\n\r\v\f')
 
 
 def _encode_array(vals, elem_dt: T.DataType, efd: int) -> str:
+    """PG ``array_out``: an element's text is double-quoted (``"`` and
+    ``\\`` escaped) when it is empty, reads ``NULL`` in any case, or holds
+    a brace, comma, quote, backslash or whitespace, whatever its type (a
+    timestamp or interval has a space). A nested array is a further
+    dimension and is never quoted."""
+    quote = not isinstance(elem_dt, T.ArrayType)
     out = []
     for v in vals:
         if v is None:
             out.append("NULL")
             continue
         s = encode_value(v, elem_dt, efd)
-        if isinstance(elem_dt, (T.StringType, T.VarcharType, T.CharType)) and (
-                s == "" or any(c in _ARRAY_QUOTE_CHARS for c in s) or
-                s.upper() == "NULL"):
+        if quote and (s == "" or s.upper() == "NULL" or
+                      any(c in _ARRAY_QUOTE_CHARS for c in s)):
             s = '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
         out.append(s)
     return "{" + ",".join(out) + "}"

@@ -26,8 +26,19 @@ Rows leave in chunks of at most ``_CHUNK_ROWS``, never past an Execute's
 ``max_rows``: the writer pulls a chunk from the result's row stream
 (Arrow batches underneath, ``session.arrow_batches``), transposes it,
 encodes each column with the encoder ``encoder.column_encoder`` chose for
-it, and writes the chunk's DataRows with one socket write; COPY TO
-STDOUT writes its CopyData messages the same way.
+it, and hands the chunk's DataRows to one ``_send``; COPY TO STDOUT
+sends its CopyData messages the same way.
+
+``_send`` only queues; ``_flush`` writes the queue with one ``sendall``,
+as PostgreSQL's backend buffers a response and flushes it whole. It
+flushes at three points: just before a read blocks on the socket (after
+ReadyForQuery, the end of a pipelined Parse/Bind/Describe/Execute/Sync
+batch, a CopyInResponse, an authentication request), once the queue
+passes ``_FLUSH_BYTES`` (large results stream in bounded memory), and
+when the connection closes (a FATAL error still reaches the client); a
+Flush message also writes the queue. Every accepted socket sets
+``TCP_NODELAY``, as PostgreSQL does: with Nagle on, a small write that
+follows another waits for the client's delayed ACK, about 40 ms.
 """
 
 from __future__ import annotations
@@ -53,8 +64,10 @@ CANCEL_REQUEST = 80877102
 GSSENC_REQUEST = 80877104
 
 
-# rows per socket write of DataRows / CopyData
+# rows per encoded chunk of DataRows / CopyData
 _CHUNK_ROWS = 4096
+# queued bytes that trigger a write before the response is complete
+_FLUSH_BYTES = 64 << 10
 
 _pack_len = struct.Struct("!I").pack
 
@@ -133,7 +146,11 @@ class _Conn(socketserver.BaseRequestHandler):
 
     def handle(self):
         self.sock = self.request
+        # answers go out whole: no Nagle wait on a response's last segment
+        self.sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self.buf = b""
+        self.out: list[bytes] = []  # messages not yet written
+        self.out_bytes = 0
         self.engine = None
         self._in_error = False  # extended-protocol: discard until Sync
         self.backend_key = None
@@ -161,12 +178,17 @@ class _Conn(socketserver.BaseRequestHandler):
         except (ConnectionError, OSError):
             pass
         finally:
+            try:
+                self._flush()  # e.g. a FATAL auth error before the close
+            except OSError:
+                pass
             if self.backend_key is not None:
                 self.server.cancel_registry.unregister(self.backend_key[0])
 
     # -- plumbing ----------------------------------------------------------
     def _recv_exact(self, n: int) -> bytes:
         while len(self.buf) < n:
+            self._flush()  # the client may be waiting for our answer
             chunk = self.sock.recv(65536)
             if not chunk:
                 raise ConnectionError("client disconnected")
@@ -175,7 +197,19 @@ class _Conn(socketserver.BaseRequestHandler):
         return out
 
     def _send(self, data: bytes) -> None:
-        self.sock.sendall(data)
+        """Queue one message group; :meth:`_flush` writes it."""
+        self.out.append(data)
+        self.out_bytes += len(data)
+        if self.out_bytes >= _FLUSH_BYTES:
+            self._flush()
+
+    def _flush(self) -> None:
+        """Write every queued message with one ``sendall``."""
+        if self.out:
+            data = b"".join(self.out)
+            self.out.clear()
+            self.out_bytes = 0
+            self.sock.sendall(data)
 
     # -- startup -----------------------------------------------------------
     def _startup(self) -> bool:
@@ -191,6 +225,7 @@ class _Conn(socketserver.BaseRequestHandler):
                 # accept: 'S' then immediately wrap the socket (lib.rs:40-64
                 # TLS acceptor analog); the startup packet arrives encrypted
                 self._send(b"S")
+                self._flush()
                 assert not self.buf, "client sent data before TLS handshake"
                 import ssl as _ssl
                 try:
@@ -417,7 +452,7 @@ class _Conn(socketserver.BaseRequestHandler):
     def _stream_portal_rows(self, portal_key, rows, res, fmts,
                             max_rows: int, n: int):
         """The one DataRow loop: send rows from a (possibly resumed) portal
-        iterator a chunk at a time, one socket write per chunk; on hitting
+        iterator a chunk at a time, one ``_send`` per chunk; on hitting
         max_rows, park the iterator for the next Execute."""
         messages = self._tuple_messages(b"D", res.schema, fmts)
         sent = 0
@@ -737,7 +772,7 @@ class _Conn(socketserver.BaseRequestHandler):
         self._send(self._ready())
 
     def _on_flush(self, _payload: bytes):
-        pass
+        self._flush()
 
 
 class CancelRegistry:

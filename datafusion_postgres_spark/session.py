@@ -175,21 +175,44 @@ def arrow_batches(df: DataFrame) -> Iterator[pa.RecordBatch]:
     """The result of ``df`` as Arrow record batches, one partition at a
     time: executors encode their rows as Arrow IPC batches
     (``toArrowBatchRdd``, ``private[sql]`` in Scala but public in the
-    bytecode) and the driver requests one partition after another, so it
-    holds one partition at a time. The Spark work starts here; the
-    batches are read as they are pulled."""
-    from pyspark.serializers import NoOpSerializer
-    from pyspark.util import _local_iterator_from_socket
-
+    bytecode), and for each partition the driver runs one job
+    (``PythonRDD.runJob``, the entry point of ``SparkContext.runJob``)
+    whose result the JVM serves on a fresh local socket through a
+    buffered stream, so a small partition arrives in one piece. The
+    driver holds one partition at a time. Planning happens here; each
+    partition's job runs, on the caller's thread (its job group, hence
+    cancellation and statement timeout), when its batches are pulled."""
     spark = df.sparkSession
     schema = to_arrow_schema(
         _utc_naive(df.schema),
         prefers_large_types=spark._jconf.arrowUseLargeVarTypes())
-    sock_info = spark.sparkContext._jvm.PythonRDD.toLocalIteratorAndServe(
-        df._jdf.toArrowBatchRdd(), False)
-    return (pa.ipc.read_record_batch(pa.py_buffer(payload), schema)
-            for payload in _local_iterator_from_socket(sock_info,
-                                                       NoOpSerializer()))
+    rdd = df._jdf.toArrowBatchRdd()
+    n_parts = rdd.getNumPartitions()
+    return _served_batches(spark, rdd, n_parts, schema)
+
+
+def _served_batches(spark: SparkSession, rdd, n_parts: int,
+                    schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """:func:`arrow_batches`' reads; a consumer that stops early (a
+    portal or cursor closed mid-result, an error) closes the socket of
+    the partition it was reading."""
+    from pyspark.serializers import NoOpSerializer
+    from pyspark.util import local_connect_and_auth
+
+    if not n_parts:
+        return
+    jvm, sc = spark.sparkContext._jvm, spark.sparkContext._jsc.sc()
+    jrdd = rdd.toJavaRDD()
+    for i in range(n_parts):
+        info = jvm.PythonRDD.runJob(sc, jrdd, [i])
+        sockfile, sock = local_connect_and_auth(info[0], info[1])
+        try:
+            sock.settimeout(None)  # as pyspark.util._create_local_socket
+            for payload in NoOpSerializer().load_stream(sockfile):
+                yield pa.ipc.read_record_batch(pa.py_buffer(payload), schema)
+        finally:
+            sockfile.close()
+            sock.close()
 
 
 def _arrow_rows(df: DataFrame) -> Iterator:

@@ -34,6 +34,29 @@ def test_extract_metadata_shape(media):
         assert 64 <= r["width"] < 64 + 1024
 
 
+_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def test_operator_leaves_session_arrow_batch_size(spark, media):
+    """An operator's batch_size must not stay behind in the session, where
+    every later Arrow exchange (result fetches included) would use it."""
+    before = spark.conf.get(_BATCH_CONF)
+    assert mm.extract_metadata(media, batch_size=7).count() == 100
+    assert spark.conf.get(_BATCH_CONF) == before
+
+
+def test_map_in_batches_bounds_each_batch(spark):
+    import pandas as pd
+
+    def sizes(batches):
+        for pdf in batches:
+            yield pd.DataFrame({"n": [len(pdf)], "first": [pdf["id"].iloc[0]]})
+
+    df = spark.range(0, 10, 1, 1)
+    got = mm.map_in_batches(df, sizes, "n long, first long", 3).collect()
+    assert [(r.n, r.first) for r in got] == [(3, 0), (3, 3), (3, 6), (1, 9)]
+
+
 def test_metadata_deterministic_vs_local(spark, media):
     """The distributed mapInPandas result must equal a local recompute."""
     sample = media.orderBy("doc_id").limit(5).collect()

@@ -213,6 +213,23 @@ class TestSimpleQuery:
             "SELECT array(1,2,3) AS xs, named_struct('a', 1, 'b', 'x') AS st")
         assert res["rows"] == [["{1,2,3}", "(1,x)"]]
 
+    def test_array_elements_quoted_as_array_out(self, client):
+        # PG array_out quotes any element whose text is empty, reads NULL
+        # or holds whitespace, a quote, a brace, a comma or a backslash,
+        # whatever the element type
+        res = client.query(
+            "SELECT array(TIMESTAMP '2024-01-02 03:04:05') AS ts,"
+            " array(DATE '2024-01-02', NULL) AS d,"
+            " array(make_dt_interval(1, 2, 0, 0)) AS iv,"
+            " array('a b', 'null', '', 'x', 'it''s', 'q\"', 't\tab') AS t,"
+            " array(array('a b')) AS nested")
+        assert res["rows"] == [[
+            '{"2024-01-02 03:04:05+00"}',
+            "{2024-01-02,NULL}",
+            '{"1 day 02:00:00"}',
+            '{"a b","null","",x,it\'s,"q\\"","t\tab"}',
+            '{{"a b"}}']]
+
     def test_map_text_is_spark_to_json(self, client, spark):
         # a MAP goes out in Spark's entry order, which is what Spark's own
         # to_json prints (a hash order would give zz, aa, a, b, c)
@@ -985,9 +1002,7 @@ class TestChunkedPortals:
     Arrow batches and writer chunks without losing or repeating a row."""
 
     # two partitions of 12,500 rows: two Arrow batches each at the default
-    # 10,000 rows per batch (operators that ran earlier in the session may
-    # have lowered spark.sql.execution.arrow.maxRecordsPerBatch, which
-    # only adds batch boundaries), and more than one 4,096-row chunk
+    # 10,000 rows per batch, and more than one 4,096-row chunk
     SQL = "SELECT id, CAST(id * 3 AS STRING) AS s FROM range(0, 25000, 1, 2)"
     N = 25000
 
@@ -1002,6 +1017,7 @@ class TestChunkedPortals:
 
         sizes = [b.num_rows for b in arrow_batches(spark.sql(self.SQL))]
         assert len(sizes) > 2 and sum(sizes) == self.N
+        assert max(sizes) > 4096  # a batch spans several writer chunks
 
     @pytest.mark.parametrize("max_rows", [7, 4097])
     def test_pieces_equal_simple_query(self, client, max_rows):
@@ -1046,3 +1062,225 @@ class TestChunkedPortals:
         assert res["tags"] == ["SELECT 0"]
         _frame(client, b"Q", b"\x00")
         assert [t for t, _ in _until_ready(client)] == [b"I", b"Z"]
+
+
+class _CountingSock:
+    """The accepted socket, with every ``sendall`` recorded."""
+
+    def __init__(self, sock, writes):
+        self._sock, self._writes = sock, writes
+
+    def sendall(self, data):
+        self._writes.append(bytes(data))
+        return self._sock.sendall(data)
+
+    def __getattr__(self, name):
+        return getattr(self._sock, name)
+
+
+@pytest.fixture
+def watched(server, monkeypatch):
+    """A fresh connection whose server side records the TCP_NODELAY
+    option of its socket and every write made on it."""
+    from datafusion_postgres_spark.server import pgwire
+
+    seen = {"writes": []}
+    main_loop = pgwire._Conn._main_loop
+
+    def recording_main_loop(self):
+        seen["nodelay"] = self.sock.getsockopt(socket.IPPROTO_TCP,
+                                               socket.TCP_NODELAY)
+        self.sock = _CountingSock(self.sock, seen["writes"])
+        return main_loop(self)
+
+    monkeypatch.setattr(pgwire._Conn, "_main_loop", recording_main_loop)
+    c = MiniPgClient(server.host, server.port)
+    c.sock.settimeout(20)  # a response left unflushed fails, not hangs
+    c.query("SELECT 1")
+    yield c, seen
+    c.close()
+
+
+def _tag_seq(data: bytes) -> list:
+    """The message tags in one buffer of backend messages."""
+    tags, off = [], 0
+    while off < len(data):
+        (length,) = struct.unpack("!I", data[off + 1:off + 5])
+        tags.append(data[off:off + 1])
+        off += 1 + length
+    return tags
+
+
+class TestFlushRule:
+    """A response leaves in one write when the server is about to wait
+    for the client, so no small write waits on a delayed ACK."""
+
+    def test_accepted_socket_sets_nodelay(self, watched):
+        _client, seen = watched
+        assert seen["nodelay"]
+
+    @pytest.mark.parametrize("sql,tags", [
+        ("SHOW TimeZone", [b"T", b"D", b"C", b"Z"]),
+        ("BEGIN", [b"C", b"Z"]),
+        ("COMMIT", [b"C", b"Z"]),
+        ("SET TimeZone = 'UTC'", None),
+    ])
+    def test_response_is_one_write(self, watched, sql, tags):
+        client, seen = watched
+        seen["writes"].clear()
+        res = client.query(sql)
+        assert not res["errors"]
+        (data,) = seen["writes"]
+        got = _tag_seq(data)
+        if tags is None:  # CommandComplete, ParameterStatus..., Ready
+            assert got[0] == b"C" and got[-1] == b"Z"
+            assert len(got) > 2 and set(got[1:-1]) == {b"S"}
+        else:
+            assert got == tags
+
+    def test_pipelined_batch_in_one_client_write(self, watched):
+        client, seen = watched
+        sql = b"SELECT 6 * 7 AS x"
+        frames = [(b"P", b"\x00" + sql + b"\x00\x00\x00"),
+                  (b"B", b"\x00\x00" + struct.pack("!HHH", 0, 0, 0)),
+                  (b"D", b"P\x00"),
+                  (b"E", b"\x00" + struct.pack("!I", 0)),
+                  (b"S", b"")]
+        seen["writes"].clear()
+        client.sock.sendall(b"".join(
+            tag + struct.pack("!I", len(body) + 4) + body
+            for tag, body in frames))
+        msgs = _until_ready(client)
+        assert [t for t, _ in msgs] == [b"1", b"2", b"T", b"D", b"C", b"Z"]
+        assert _text_cells(msgs[3][1]) == [b"42"]
+        assert len(seen["writes"]) == 1
+
+    def test_execute_then_flush_without_sync(self, watched):
+        client, _seen = watched
+        _frame(client, b"P", b"fl\x00SELECT id FROM range(3)\x00\x00\x00")
+        _frame(client, b"B", b"fl\x00fl\x00" + struct.pack("!HHH", 0, 0, 0))
+        _frame(client, b"E", b"fl\x00" + struct.pack("!I", 0))
+        _frame(client, b"H", b"")
+        tags = []
+        while not tags or tags[-1] != b"C":
+            tags.append(client.read_message()[0])
+        assert tags == [b"1", b"2", b"D", b"D", b"D", b"C"]
+        _frame(client, b"S", b"")
+        assert [t for t, _ in _until_ready(client)] == [b"Z"]
+
+    def test_copy_in_response_precedes_the_data(self, watched):
+        client, _seen = watched
+        client.query("DROP TABLE IF EXISTS zz_flush_copy")
+        client.query("CREATE TABLE zz_flush_copy (a INT)")
+        try:
+            _frame(client, b"Q", b"COPY zz_flush_copy FROM STDIN\x00")
+            tag, _payload = client.read_message()  # before any CopyData
+            assert tag == b"G"
+            _frame(client, b"d", b"5\n")
+            _frame(client, b"c", b"")
+            assert _tags(_until_ready(client)) == ["COPY 1"]
+        finally:
+            client.query("DROP TABLE IF EXISTS zz_flush_copy")
+
+    def test_failed_password_delivers_error(self, spark):
+        from datafusion_postgres_spark.server.auth import AuthManager, User
+
+        auth = AuthManager()
+        auth.add_user(User("flushuser", password="right"))
+        srv = PgWireServer(spark, port=0, password_mode="password",
+                           auth=auth)
+        srv.start_background()
+        try:
+            c = MiniPgClient.__new__(MiniPgClient)
+            c.sock = socket.create_connection((srv.host, srv.port),
+                                              timeout=20)
+            c.buf = b""
+            body = (struct.pack("!I", 196608) +
+                    b"user\x00flushuser\x00database\x00postgres\x00\x00")
+            c.sock.sendall(struct.pack("!I", len(body) + 4) + body)
+            assert c.read_message() == (b"R", struct.pack("!I", 3))
+            _frame(c, b"p", b"wrong\x00")
+            tag, payload = c.read_message()
+            assert tag == b"E" and b"C28P01" in payload
+            with pytest.raises(ConnectionError):
+                c.read_message()  # then the server closes
+            c.sock.close()
+        finally:
+            srv.shutdown()
+
+    def test_begin_commit_round_trip_has_no_ack_stall(self, watched):
+        import statistics
+        import time
+
+        client, _seen = watched
+        times = []
+        for _ in range(20):
+            t0 = time.perf_counter()
+            client.query("BEGIN")
+            client.query("COMMIT")
+            times.append((time.perf_counter() - t0) * 1000.0)
+        # a delayed-ACK stall costs about 40 ms per statement
+        assert statistics.median(times) < 20.0
+
+
+@pytest.fixture
+def result_socks(monkeypatch):
+    """Every (file, socket) pair the driver opens to read a result from
+    the JVM."""
+    import pyspark.util
+
+    opened = []
+    connect = pyspark.util.local_connect_and_auth
+
+    def recording(*args):
+        pair = connect(*args)
+        opened.append(pair)
+        return pair
+
+    monkeypatch.setattr(pyspark.util, "local_connect_and_auth", recording)
+    return opened
+
+
+class TestFetchPath:
+    """``session.arrow_batches``: one job and one result socket per
+    partition, closed when the consumer stops early."""
+
+    SQL = "SELECT id FROM range(0, 30000, 1, 3)"
+
+    @pytest.mark.parametrize("sql,parts", [
+        ("SELECT id FROM range(0)", 0),
+        ("SELECT id FROM range(0, 10, 1, 4) WHERE id > 7", 4),
+        ("SELECT id, CAST(id AS STRING) AS s FROM range(0, 3000, 1, 3)", 3),
+    ], ids=["no_partitions", "empty_partitions", "several_partitions"])
+    def test_rows_equal_collect(self, spark, sql, parts):
+        from datafusion_postgres_spark.session import ExecutionResult
+
+        df = spark.sql(sql)
+        assert df._jdf.toArrowBatchRdd().getNumPartitions() == parts
+        assert list(ExecutionResult(df=df).rows()) == df.collect()
+
+    def test_portal_closed_mid_result_closes_its_socket(self, client,
+                                                        result_socks):
+        _frame(client, b"P", b"mid\x00" + self.SQL.encode() + b"\x00\x00\x00")
+        _frame(client, b"B", b"mid\x00mid\x00" + struct.pack("!HHH", 0, 0, 0))
+        _frame(client, b"E", b"mid\x00" + struct.pack("!I", 10))
+        _frame(client, b"H", b"")
+        tags = []
+        while not tags or tags[-1] != b"s":
+            tags.append(client.read_message()[0])
+        assert tags == [b"1", b"2"] + [b"D"] * 10 + [b"s"]
+        assert [sock.fileno() != -1 for _f, sock in result_socks] == [True]
+        _frame(client, b"C", b"Pmid\x00")
+        _frame(client, b"S", b"")
+        assert [t for t, _ in _until_ready(client)] == [b"3", b"Z"]
+        (sockfile, sock), = result_socks
+        assert sockfile.closed and sock.fileno() == -1
+
+    def test_cursor_closed_mid_result_closes_its_socket(self, client,
+                                                        result_socks):
+        client.query(f"DECLARE zz_mid CURSOR FOR {self.SQL}")
+        assert len(client.query("FETCH 5 FROM zz_mid")["rows"]) == 5
+        assert [sock.fileno() != -1 for _f, sock in result_socks] == [True]
+        assert client.query("CLOSE zz_mid")["tags"] == ["CLOSE CURSOR"]
+        (sockfile, sock), = result_socks
+        assert sockfile.closed and sock.fileno() == -1
