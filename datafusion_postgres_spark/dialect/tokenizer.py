@@ -35,10 +35,6 @@ class Token:
     kind: str
     text: str
 
-    @property
-    def upper(self) -> str:
-        return self.text.upper() if self.kind == IDENT else self.text
-
     def is_kw(self, *words: str) -> bool:
         return self.kind == IDENT and self.text.upper() in words
 

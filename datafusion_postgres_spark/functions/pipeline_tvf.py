@@ -749,13 +749,13 @@ _FROM_ENDERS = frozenset({
 })
 
 
-def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
-                          check_table=None, defer: bool = False):
-    """If ``stmt`` contains pipeline table-function calls IN TABLE
-    POSITION, rewrite each into a temp-view reference and return the
-    rewritten statement; None when no call is present. ``check_table
-    (name)`` is the permission hook — called for every table argument
-    before any operator work happens.
+def rewrite_pipeline_tvfs(spark: SparkSession, stmt, check_table=None):
+    """If ``stmt`` (text, or a ``dialect.transpiler.Statement`` record,
+    whose tokens are reused) contains pipeline table-function calls IN
+    TABLE POSITION, rewrite each into a temp-view reference and return
+    ``(rewritten_stmt, pending)``; ``(None, [])`` when no call is
+    present. ``check_table(name)`` is the permission hook — called for
+    every table argument before any operator work happens.
 
     Table position = the previous significant token is FROM / JOIN /
     LATERAL, or a comma inside an open FROM list. A scalar call of a
@@ -763,8 +763,7 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
     t``) is left untouched, so the rewrite never changes an unrelated
     statement's semantics.
 
-    ``defer=True`` returns ``(rewritten_stmt, pending)`` WITHOUT
-    executing any builder; pass ``pending`` to
+    No builder runs here: pass ``pending`` to
     ``materialize_pipeline_tvfs`` after statement-level authorization
     completes — eager builders (e.g. trained_quality's training run)
     must not burn cluster time for a statement that is then denied.
@@ -773,13 +772,14 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
     name inside a string literal, quoted identifier, or comment is
     never rewritten, and only bare or ``pipeline.``-qualified calls
     count as TVF invocations."""
-    low = stmt.lower()
+    text = stmt if isinstance(stmt, str) else stmt.text
+    low = text.lower()
     if not any(name in low for name in TVF_REGISTRY):
-        return (None, []) if defer else None
+        return None, []
     from datafusion_postgres_spark.dialect.tokenizer import (
-        IDENT, PUNCT, WS, Token, emit, tokenize,
+        IDENT, PUNCT, WS, Token, emit, significant, tokenize,
     )
-    toks = tokenize(stmt)
+    toks = tokenize(stmt) if isinstance(stmt, str) else stmt.tokens
     out: list[Token] = []
     pending: list[tuple[str, str, list[str]]] = []
     i, changed = 0, False
@@ -801,12 +801,6 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
             elif tl in _FROM_ENDERS:
                 in_from = False
 
-    def _last_sig(seq):
-        for idx in range(len(seq) - 1, -1, -1):
-            if seq[idx].kind != WS:
-                return idx
-        return -1
-
     def _emit(tok):
         _track(tok)
         out.append(tok)
@@ -817,20 +811,17 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
             _emit(t)
             i += 1
             continue
-        j = i + 1
-        while j < len(toks) and toks[j].kind == WS:
-            j += 1
-        if not (j < len(toks) and toks[j].kind == PUNCT
-                and toks[j].text == "("):
+        j = significant(toks, i)
+        if not (j >= 0 and toks[j].kind == PUNCT and toks[j].text == "("):
             _emit(t)   # bare identifier, not a call
             i += 1
             continue
         # qualification: only bare or pipeline.-prefixed calls rewrite
-        p = _last_sig(out)
+        p = significant(out, len(out), -1)
         qualified = p >= 0 and out[p].kind == PUNCT and out[p].text == "."
         drop_from = None
         if qualified:
-            q = _last_sig(out[:p])
+            q = significant(out, p, -1)
             if q >= 0 and out[q].kind == IDENT and \
                     out[q].text.lower() == "pipeline":
                 drop_from = q  # pipeline. prefix — drop if we rewrite
@@ -840,7 +831,8 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
                 continue
         # TABLE-POSITION check: the token before the call (before any
         # pipeline. prefix) must put us in a from-clause slot.
-        ctx = _last_sig(out[:drop_from] if drop_from is not None else out)
+        ctx = significant(out, len(out) if drop_from is None else drop_from,
+                          -1)
         in_table_pos = ctx >= 0 and (
             (out[ctx].kind == IDENT
              and out[ctx].text.lower() in ("from", "join", "lateral"))
@@ -859,28 +851,20 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
         fn = t.text.lower()
         builder, lo, hi, n_tables = TVF_REGISTRY[fn]
         # collect literal args up to the matching ')' (no nesting)
-        k = j + 1
-        groups, ok = [[]], True
-        while k < len(toks):
-            tk = toks[k]
-            if tk.kind == PUNCT and tk.text == ")":
-                break
-            if tk.kind == PUNCT and tk.text == "(":
-                ok = False
-                break
-            if tk.kind == PUNCT and tk.text == ",":
+        k, groups = j + 1, [[]]
+        while k < len(toks) and not (toks[k].kind == PUNCT
+                                     and toks[k].text in "()"):
+            if toks[k].kind == PUNCT and toks[k].text == ",":
                 groups.append([])
-            elif tk.kind != WS:
-                groups[-1].append(tk)
+            elif toks[k].kind != WS:
+                groups[-1].append(toks[k])
             k += 1
-        if not ok or k >= len(toks):
+        if k >= len(toks) or toks[k].text == "(":
             raise TvfError(
                 f"{fn}(...) takes literal table names and numbers only",
                 "42601")
-        if groups == [[]]:
-            args: list[str] = []
-        else:
-            args = [_group_to_literal(g) for g in groups]
+        args = ([] if groups == [[]]
+                else [_group_to_literal(g) for g in groups])
         if not (lo <= len(args) <= hi):
             raise TvfError(
                 f"{fn} expects {lo}..{hi} arguments, got {len(args)}")
@@ -893,15 +877,12 @@ def rewrite_pipeline_tvfs(spark: SparkSession, stmt: str,
         out.append(Token(IDENT, view))
         changed = True
         i = k + 1
-    if defer:
-        return (emit(out), pending) if changed else (None, [])
-    materialize_pipeline_tvfs(spark, pending)
-    return emit(out) if changed else None
+    return (emit(out), pending) if changed else (None, [])
 
 
 def materialize_pipeline_tvfs(spark: SparkSession, pending) -> None:
-    """Build the temp views a deferred ``rewrite_pipeline_tvfs`` call
-    planned. Runs AFTER statement authorization — the builders may be
+    """Build the temp views a ``rewrite_pipeline_tvfs`` call planned.
+    Runs AFTER statement authorization — the builders may be
     eager (trained_quality trains on materialization), so nothing here
     may execute before the permission check passes."""
     for view, fn, args in pending:

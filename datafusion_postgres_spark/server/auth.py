@@ -5,14 +5,16 @@ Reference parity: ``datafusion-postgres/src/auth.rs:13-446`` (AuthManager,
 role inheritance resolved recursively, superuser bypass, resource matching
 including schema→table prefixes) and ``hooks/permissions.rs:44-92``
 (statement kind → required permission mapping). Same semantics,
-re-expressed as plain Python over the transpiler's statement-kind
-classifier.
+re-expressed as plain Python over the dialect's one kind table
+(``dialect.transpiler.KINDS``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 from enum import Enum
+
+from datafusion_postgres_spark.dialect.transpiler import KINDS, OTHER_KIND
 
 
 class Permission(Enum):
@@ -29,29 +31,6 @@ class Permission(Enum):
     EXECUTE = "execute"
     USAGE = "usage"
     ALL = "all"
-
-
-# Statement kind -> required permission (hooks/permissions.rs:44-57).
-# SET/SHOW/transaction/cursor statements bypass the check (handled by hooks).
-STATEMENT_PERMISSIONS = {
-    "SELECT": Permission.SELECT,
-    "WITH": Permission.SELECT,
-    "VALUES": Permission.SELECT,
-    "EXPLAIN": Permission.SELECT,
-    "INSERT": Permission.INSERT,
-    "UPDATE": Permission.UPDATE,
-    "DELETE": Permission.DELETE,
-    "MERGE": Permission.UPDATE,
-    "CREATE": Permission.CREATE,
-    "DROP": Permission.DROP,
-    "ALTER": Permission.ALTER,
-    "TRUNCATE": Permission.TRUNCATE,
-    "GRANT": Permission.ALL,
-    "REVOKE": Permission.ALL,
-}
-
-EXEMPT_KINDS = {"SET", "SHOW", "BEGIN", "START", "COMMIT", "END", "ROLLBACK",
-                "ABORT", "DECLARE", "FETCH", "CLOSE", "RESET", "DISCARD", ""}
 
 
 @dataclass(frozen=True)
@@ -163,14 +142,20 @@ class AuthManager:
                         resource: Resource) -> None:
         """Raise PermissionDenied (42501) unless allowed. SET/SHOW/txn
         kinds are exempt (permissions.rs: skipped statement kinds)."""
-        kind = statement_kind.upper()
-        if kind in EXEMPT_KINDS:
+        required = KINDS.get(statement_kind.upper(), OTHER_KIND).permission
+        if required is None:
             return
-        perm = STATEMENT_PERMISSIONS.get(kind, Permission.SELECT)
+        perm = Permission(required)
         if not self.check(user_name, perm, resource):
             raise PermissionDenied(
                 f"permission denied for user {user_name}: requires "
                 f"{perm.value} on {resource.name}")
+
+    def check_table(self, user_name: str, statement_kind: str,
+                    table: str) -> None:
+        """:meth:`check_statement` on a table; unqualified is public."""
+        self.check_statement(user_name, statement_kind, Resource(
+            "table", table if "." in table else f"public.{table}"))
 
 
 # -- password verification (AuthSource analog, auth.rs:461-596) -------------

@@ -3,6 +3,11 @@
 Reference parity: the ``QueryHook`` chain (``hooks/mod.rs:49-76``; wiring
 ``handlers.rs:181-191``) — cursor hook, SET/SHOW hook, transaction hook —
 each of which may fully answer a statement before it reaches the engine.
+Like the reference's hooks, which get the parsed sqlparser ``Statement``,
+the chain reads the statement's record (``dialect.transpiler.Statement``);
+the engine makes the failed-transaction check before it. SET, RESET and
+``set_config`` only write the session state and mark the engine's
+settings stale (``SET TIME ZONE`` also sets Spark's time zone at once).
 """
 
 from __future__ import annotations
@@ -11,8 +16,14 @@ import itertools
 import re
 from typing import TYPE_CHECKING
 
+from datafusion_postgres_spark.server.session_state import (
+    DEFAULT_SESSION_VARS, Cursor,
+)
+from datafusion_postgres_spark.session import ExecutionResult, text_result
+
 if TYPE_CHECKING:
-    from datafusion_postgres_spark.session import ExecutionResult, SparkPgEngine
+    from datafusion_postgres_spark.dialect.transpiler import Statement
+    from datafusion_postgres_spark.session import SparkPgEngine
 
 _SET_RE = re.compile(
     r"^\s*SET\s+(?:SESSION\s+|LOCAL\s+)?(?P<name>[A-Za-z_][\w.]*)\s*"
@@ -81,18 +92,12 @@ def _parse_copy_opts(opts: str | None) -> dict:
     return out
 
 # SHOW answers synthesized exactly like hooks/set_show.rs:283-366
+# (any other name is its own column name, spaces as underscores)
 _SHOW_COLUMN_NAMES = {
     "time zone": "TimeZone",
     "timezone": "TimeZone",
-    "server_version": "server_version",
-    "transaction_isolation": "transaction_isolation",
     "transaction isolation level": "transaction_isolation",
-    "statement_timeout": "statement_timeout",
-    "search_path": "search_path",
     "datestyle": "DateStyle",
-    "bytea_output": "bytea_output",
-    "application_name": "application_name",
-    "extra_float_digits": "extra_float_digits",
 }
 
 
@@ -106,30 +111,11 @@ class HookChain:
     def __init__(self, engine: "SparkPgEngine"):
         self.engine = engine
 
-    def _refresh_current_setting(self) -> None:
-        """Thread live GUC values into the ``current_setting`` SQL UDF
-        (STATUS.md round-1 item: it used to return static defaults)."""
-        try:
-            from datafusion_postgres_spark.functions.registry import (
-                refresh_current_setting)
-            refresh_current_setting(self.engine.spark,
-                                    self.engine.state.vars)
-        except Exception:
-            pass  # never fail a SET over a UDF re-registration
-        try:
-            from datafusion_postgres_spark.catalog.pg_catalog import (
-                refresh_settings)
-            refresh_settings(self.engine.spark, self.engine.state.vars)
-        except Exception:
-            pass
-
-    def try_handle(self, stmt: str):
-        from datafusion_postgres_spark.session import (
-            ExecutionResult, text_result)
-
+    def try_handle(self, stmt: str | Statement):
         state = self.engine.state
         spark = self.engine.spark
-        kind = self.engine.transpiler.statement_kind(stmt)
+        record = self.engine.transpiler.parse(stmt)
+        kind, stmt = record.kind, record.text
 
         # -- transaction hook (transactions.rs) ----------------------------
         if kind in ("BEGIN", "START"):
@@ -138,33 +124,20 @@ class HookChain:
             return ExecutionResult(df=None, command_tag=state.commit())
         if kind in ("ROLLBACK", "ABORT"):
             return ExecutionResult(df=None, command_tag=state.rollback())
-        if state.in_failed_transaction() and kind not in ("ROLLBACK", "COMMIT",
-                                                          "ABORT", "END"):
-            from datafusion_postgres_spark.session import FailedTransactionError
-            raise FailedTransactionError(
-                "current transaction is aborted, commands ignored until end "
-                "of transaction block")
 
         # -- SET hook (set_show.rs:130-246) --------------------------------
-        m = _SET_TZ_RE.match(stmt) or (_SET_RE.match(stmt)
-                                       if kind == "SET" else None)
-        if kind == "SET" and m:
-            groups = m.groupdict()
-            name = groups.get("name", "timezone") or "timezone"
-            if "name" not in groups:
-                name = "timezone"
-            value = groups["value"].strip().strip("'\"")
-            if name.lower() in ("time", "timezone", "time zone"):
-                name = "timezone"
-                state.set_var("timezone", value)
-                spark.conf.set("spark.sql.session.timeZone", value)
-            else:
+        if kind == "SET":
+            m = _SET_TZ_RE.match(stmt) or _SET_RE.match(stmt)
+            if m:
+                name = m.groupdict().get("name", "timezone").lower()
+                value = m.group("value").strip().strip("'\"")
+                if name in ("time", "timezone"):
+                    name = "timezone"
+                    spark.conf.set("spark.sql.session.timeZone", value)
                 state.set_var(name, value)
-            self._refresh_current_setting()
-            # unknown SETs are acknowledged regardless (reference swallows
-            # engine errors and always returns SET)
-            return ExecutionResult(df=None, command_tag="SET")
-        if kind == "SET":  # unparseable SET — still ack
+                self.engine.settings_changed()
+            # unknown and unparseable SETs are acknowledged regardless
+            # (reference swallows engine errors and always returns SET)
             return ExecutionResult(df=None, command_tag="SET")
 
         # -- set_config() as a statement (how clients write GUCs from SQL;
@@ -181,7 +154,7 @@ class HookChain:
                     name = "timezone"
                     spark.conf.set("spark.sql.session.timeZone", value)
                 state.set_var(name, value)
-                self._refresh_current_setting()
+                self.engine.settings_changed()
                 return text_result(["set_config"], [(value,)], "SELECT")
 
         # -- COPY TO STDOUT / FROM STDIN (beyond the reference: it has no
@@ -189,27 +162,21 @@ class HookChain:
         if kind == "COPY":
             m = _COPY_RE.match(stmt)
             if m:
-                from datafusion_postgres_spark.server.auth import Resource
                 if m.group("tbl"):
-                    tbl = m.group("tbl").strip('"')
-                    self.engine.auth.check_statement(
-                        self.engine.user, "SELECT",
-                        Resource("table",
-                                 tbl if "." in tbl else f"public.{tbl}"))
+                    self.engine.auth.check_table(
+                        self.engine.user, "SELECT", m.group("tbl").strip('"'))
                 inner = m.group("q") or f'SELECT * FROM {m.group("tbl")}'
                 opts = _parse_copy_opts(m.group("opts"))
-                df = spark.sql(self.engine.transpiler.transpile(inner))
+                df = self.engine._sql(self.engine.transpiler.parse(inner),
+                                      None)
                 res = ExecutionResult(df=df, command_tag="COPY_OUT")
                 res.copy_format = opts.get("format", "text")
                 res.copy_header = opts.get("header", False)
                 return res
             m = _COPY_IN_RE.match(stmt)
             if m:
-                from datafusion_postgres_spark.server.auth import Resource
                 tbl = m.group("tbl").strip('"')
-                self.engine.auth.check_statement(
-                    self.engine.user, "INSERT",
-                    Resource("table", tbl if "." in tbl else f"public.{tbl}"))
+                self.engine.auth.check_table(self.engine.user, "INSERT", tbl)
                 opts = _parse_copy_opts(m.group("opts"))
                 cols = [c.strip().strip('"')
                         for c in m.group("cols").split(",")] \
@@ -238,26 +205,19 @@ class HookChain:
                 "unsupported COPY form (use COPY ... TO STDOUT or "
                 "COPY table FROM STDIN)", "0A000")
 
-        # -- maintenance no-ops clients send (VACUUM/ANALYZE/etc.) ---------
-        if kind in ("VACUUM", "ANALYZE", "ANALYSE", "CHECKPOINT", "LISTEN",
-                    "UNLISTEN", "NOTIFY", "DEALLOCATE", "SECURITY"):
+        # -- maintenance no-ops clients send (VACUUM/ANALYZE/REINDEX/etc.)
+        if record.props.ack:
             return ExecutionResult(df=None, command_tag=kind)
-        # index DDL and physical-maintenance statements: Spark has no
-        # secondary indexes (scans are pruned by parquet statistics /
-        # partitioning instead), so ORM/pg_restore index DDL is accepted
-        # as a no-op — same honesty class as VACUUM above
-        import re as _re
-        if _re.match(r"(?is)^\s*CREATE\s+(UNIQUE\s+)?INDEX\b", stmt):
+        # index DDL: Spark has no secondary indexes (scans are pruned by
+        # parquet statistics / partitioning instead), so ORM/pg_restore
+        # index DDL is accepted as a no-op — same honesty class as VACUUM
+        if re.match(r"(?is)^\s*CREATE\s+(UNIQUE\s+)?INDEX\b", stmt):
             return ExecutionResult(df=None, command_tag="CREATE INDEX")
-        if _re.match(r"(?is)^\s*DROP\s+INDEX\b", stmt):
+        if re.match(r"(?is)^\s*DROP\s+INDEX\b", stmt):
             return ExecutionResult(df=None, command_tag="DROP INDEX")
-        if kind in ("REINDEX", "CLUSTER"):
-            return ExecutionResult(df=None, command_tag=kind)
 
         # -- RESET / DISCARD (Postgres session maintenance) -----------------
         if kind == "RESET":
-            from datafusion_postgres_spark.server.session_state import (
-                DEFAULT_SESSION_VARS)
             target = stmt.split(None, 1)[1].strip().strip(";").lower() \
                 if len(stmt.split(None, 1)) > 1 else "all"
             if target == "all":
@@ -266,7 +226,7 @@ class HookChain:
                 state.vars[target] = DEFAULT_SESSION_VARS[target]
             else:
                 state.vars.pop(target, None)
-            self._refresh_current_setting()
+            self.engine.settings_changed()
             return ExecutionResult(df=None, command_tag="RESET")
         if kind == "DISCARD":
             state.cursors.clear()
@@ -276,17 +236,14 @@ class HookChain:
         if kind == "SHOW":
             m = _SHOW_RE.match(stmt)
             name = (m.group("name") if m else "").strip().strip(";").lower()
-            if name == "catalogs":
-                df = spark.sql("SHOW CATALOGS")
-                return ExecutionResult(df=df, command_tag="SHOW")
+            if name in ("catalogs", "tables"):
+                return ExecutionResult(df=spark.sql(f"SHOW {name.upper()}"),
+                                       command_tag="SHOW")
             if name == "all":
                 # SHOW ALL: every session var as (name, setting, description)
                 rows = [(k, v, "") for k, v in sorted(state.vars.items())]
                 return text_result(["name", "setting", "description"], rows,
                                    "SHOW")
-            if name == "tables":
-                df = spark.sql("SHOW TABLES")
-                return ExecutionResult(df=df, command_tag="SHOW")
             col = _SHOW_COLUMN_NAMES.get(name, name.replace(" ", "_"))
             value = state.get_var("timezone" if col == "TimeZone" else name)
             return text_result([col], [(value,)], "SHOW")
@@ -309,11 +266,8 @@ class HookChain:
 
     # -- cursors -----------------------------------------------------------
     def _declare(self, name: str, query: str):
-        from datafusion_postgres_spark.session import ExecutionResult
-        from datafusion_postgres_spark.server.session_state import Cursor
-
-        spark_sql = self.engine.transpiler.transpile(query)
-        res = ExecutionResult(df=self.engine.spark.sql(spark_sql))
+        res = ExecutionResult(df=self.engine._sql(
+            self.engine.transpiler.parse(query), None))
         # Eager execution like the reference (cursor.rs:89-152), but
         # streamed: the result's batches are pulled a partition at a time,
         # so a cursor over a 100 TB result does not materialize on the
@@ -323,8 +277,6 @@ class HookChain:
         return ExecutionResult(df=None, command_tag="DECLARE CURSOR")
 
     def _fetch(self, m):
-        from datafusion_postgres_spark.session import ExecutionResult
-
         direction = (m.group("dir") or "NEXT").upper()
         name = m.group("name").strip('"').lower()
         if direction in ("PRIOR", "BACKWARD", "ABSOLUTE", "RELATIVE", "LAST"):
@@ -348,8 +300,6 @@ class HookChain:
                                held_rows=rows, held_schema=cur.schema)
 
     def _close(self, name: str):
-        from datafusion_postgres_spark.session import ExecutionResult
-
         if name.upper() == "ALL":
             self.engine.state.cursors.clear()
             return ExecutionResult(df=None, command_tag="CLOSE CURSOR ALL")

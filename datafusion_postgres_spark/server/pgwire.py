@@ -50,12 +50,18 @@ import struct
 import threading
 
 from datafusion_postgres_spark.server import encoder
+from datafusion_postgres_spark.server.auth import (
+    AuthManager, ScramServer, verify_cleartext, verify_md5,
+)
 from datafusion_postgres_spark.server.hooks import CursorError
 from datafusion_postgres_spark.server.prepared import (
     PreparedStatementManager,
 )
 from datafusion_postgres_spark.server.session_state import (
     PARAMETER_STATUS_VARS, TxnState,
+)
+from datafusion_postgres_spark.session import (
+    SparkPgEngine, clone_session, text_schema,
 )
 
 PROTOCOL_V3 = 196608
@@ -113,6 +119,11 @@ def _error_text(exc: Exception) -> str:
 
 def _cstr(s: str) -> bytes:
     return s.encode() + b"\x00"
+
+
+def _error_response(severity: str, sqlstate: str, message: str) -> bytes:
+    return _msg(b"E", b"S" + _cstr(severity) + b"V" + _cstr(severity) +
+                b"C" + _cstr(sqlstate) + b"M" + _cstr(message) + b"\x00")
 
 
 class _CopyFailed(RuntimeError):
@@ -244,7 +255,7 @@ class _Conn(socketserver.BaseRequestHandler):
                 self.server.cancel_registry.cancel(pid, secret)
                 return False
             if code != PROTOCOL_V3:
-                self._error("08P01", f"unsupported protocol {code}")
+                self._error("08P01", f"unsupported protocol {code}", "FATAL")
                 return False
             params = payload[4:].split(b"\x00")
             kv = dict(zip(params[0::2], params[1::2]))
@@ -269,13 +280,13 @@ class _Conn(socketserver.BaseRequestHandler):
         (length,) = struct.unpack("!I", self._recv_exact(4))
         payload = self._recv_exact(length - 4)
         if tag != b"p":
-            self._error("08P01", "expected PasswordMessage")
+            self._error("08P01", "expected PasswordMessage", "FATAL")
             return None
         return payload
 
     def _auth_failed(self) -> None:
         self._error("28P01", f'password authentication failed for user '
-                             f'"{self.client_user}"')
+                             f'"{self.client_user}"', "FATAL")
 
     def _auth_cleartext(self) -> bool:
         self._send(_msg(b"R", struct.pack("!I", 3)))
@@ -283,7 +294,6 @@ class _Conn(socketserver.BaseRequestHandler):
         if payload is None:
             return False
         password = payload.rstrip(b"\x00").decode()
-        from datafusion_postgres_spark.server.auth import verify_cleartext
         if not verify_cleartext(self.server.auth, self.client_user, password):
             self._auth_failed()
             return False
@@ -297,7 +307,6 @@ class _Conn(socketserver.BaseRequestHandler):
         if payload is None:
             return False
         response = payload.rstrip(b"\x00").decode()
-        from datafusion_postgres_spark.server.auth import verify_md5
         if not verify_md5(self.server.auth, self.client_user, response, salt):
             self._auth_failed()
             return False
@@ -307,8 +316,6 @@ class _Conn(socketserver.BaseRequestHandler):
         """SCRAM-SHA-256 server side (RFC 5802/7677): AuthenticationSASL ->
         client-first -> SASLContinue(server-first) -> client-final ->
         SASLFinal(verifier) + AuthenticationOk."""
-        from datafusion_postgres_spark.server.auth import ScramServer
-
         self._send(_msg(b"R", struct.pack("!I", 10) +
                         _cstr("SCRAM-SHA-256") + b"\x00"))
         payload = self._recv_password_message()
@@ -318,7 +325,8 @@ class _Conn(socketserver.BaseRequestHandler):
         mech_end = payload.index(b"\x00")
         mechanism = payload[:mech_end].decode()
         if mechanism != "SCRAM-SHA-256":
-            self._error("28000", f"unsupported SASL mechanism {mechanism}")
+            self._error("28000", f"unsupported SASL mechanism {mechanism}",
+                        "FATAL")
             return False
         (resp_len,) = struct.unpack("!i", payload[mech_end + 1:mech_end + 5])
         client_first = payload[mech_end + 5:mech_end + 5 + max(resp_len, 0)]
@@ -330,7 +338,7 @@ class _Conn(socketserver.BaseRequestHandler):
         try:
             server_first = scram.handle_client_first(client_first.decode())
         except ValueError as exc:
-            self._error("28000", _error_text(exc))
+            self._error("28000", _error_text(exc), "FATAL")
             return False
         self._send(_msg(b"R", struct.pack("!I", 11) + server_first.encode()))
         payload = self._recv_password_message()
@@ -370,10 +378,11 @@ class _Conn(socketserver.BaseRequestHandler):
                   TxnState.ERROR: b"E"}[self.engine.state.txn]
         return _msg(b"Z", status)
 
-    def _error(self, sqlstate: str, message: str) -> None:
-        payload = (b"S" + _cstr("ERROR") + b"V" + _cstr("ERROR") +
-                   b"C" + _cstr(sqlstate) + b"M" + _cstr(message) + b"\x00")
-        self._send(_msg(b"E", payload))
+    def _error(self, sqlstate: str, message: str,
+               severity: str = "ERROR") -> None:
+        """ErrorResponse; ``FATAL`` when the server then closes the
+        connection."""
+        self._send(_error_response(severity, sqlstate, message))
 
     # -- main loop ---------------------------------------------------------
     def _main_loop(self):
@@ -620,15 +629,9 @@ class _Conn(socketserver.BaseRequestHandler):
             # Bind decode the raw bytes as text (OID 25)
             rest = rest[sql_end + 1:]
             declared: list[int] = []
-            if len(rest) >= 2:
-                (n_oids,) = struct.unpack("!H", rest[:2])
-                rest = rest[2:]
-                for _ in range(n_oids):
-                    if len(rest) < 4:
-                        break
-                    (oid,) = struct.unpack("!I", rest[:4])
-                    declared.append(oid)
-                    rest = rest[4:]
+            if len(rest) >= 2:  # a truncated list keeps its whole OIDs
+                n = min(struct.unpack("!H", rest[:2])[0], (len(rest) - 2) // 4)
+                declared = list(struct.unpack(f"!{n}I", rest[2:2 + 4 * n]))
             self.prepared.parse(name or "", sql, declared_oids=declared)
             self._send(_msg(b"1", b""))
         except Exception as exc:
@@ -686,10 +689,9 @@ class _Conn(socketserver.BaseRequestHandler):
         try:
             if kind == b"S":
                 stmt = self.prepared.describe(name)
-                buf = struct.pack("!H", stmt.num_params)
-                for oid in stmt.param_oids:
-                    buf += struct.pack("!I", oid)
-                self._send(_msg(b"t", buf))
+                self._send(_msg(b"t", struct.pack(
+                    f"!H{stmt.num_params}I", stmt.num_params,
+                    *stmt.param_oids)))
                 # a statement's result formats are not known yet: text
                 self._send(self._describe_rows(stmt, []))
             else:
@@ -712,27 +714,24 @@ class _Conn(socketserver.BaseRequestHandler):
                               "34000") from None
 
     def _describe_rows(self, stmt, result_formats: list[int]) -> bytes:
-        # Only SELECT-shaped statements get a schema probe: Spark executes
+        # Only row-returning statements get a schema probe: Spark executes
         # commands (INSERT / CTAS / DDL) EAGERLY inside spark.sql(), so
         # probing a DML statement at Describe time would actually run it
         # (with NULL parameters), then again at Execute. Clients that
         # Describe before Execute (psycopg, JDBC) hit this on every write.
-        kind = self.engine.transpiler.statement_kind(stmt.sql)
-        if kind == "EXPLAIN":
+        record = stmt.statement
+        if record.kind == "EXPLAIN":
             # no probe: both EXPLAIN paths of _execute_one answer one
             # text column named QUERY PLAN, while a raw spark.sql names
             # it `plan` and never sees the EXPLAIN ANALYZE rewrite
-            from datafusion_postgres_spark.session import text_schema
             schema = text_schema(["QUERY PLAN"])
             return _row_description(
                 schema, _column_formats(schema, result_formats))
-        if kind not in ("SELECT", "WITH", "VALUES", "TABLE"):
+        if not record.props.rows:
             return _msg(b"n", b"")  # NoData
         try:
             nulls = {f"p{i + 1}": None for i in range(stmt.num_params)}
-            schema = self.engine._sql(
-                self.engine.transpiler.transpile(stmt.sql),
-                nulls or None).schema
+            schema = self.engine._sql(record, nulls or None).schema
             return _row_description(
                 schema, _column_formats(schema, result_formats))
         except Exception:
@@ -838,10 +837,6 @@ class PgWireServer:
                  max_connections: int = 100,
                  ssl_certfile: str | None = None,
                  ssl_keyfile: str | None = None):
-        from datafusion_postgres_spark.server.auth import AuthManager
-        from datafusion_postgres_spark.session import (
-            SparkPgEngine, clone_session)
-
         self.spark = spark
         self.auth = auth or AuthManager()
         ssl_context = None
@@ -870,11 +865,8 @@ class PgWireServer:
             def verify_request(self, request, client_address):
                 if not sem.acquire(blocking=False):
                     try:
-                        request.sendall(_msg(b"E", b"S" + _cstr("FATAL") +
-                                             b"C" + _cstr("53300") +
-                                             b"M" + _cstr(
-                                                 "too many connections") +
-                                             b"\x00"))
+                        request.sendall(_error_response(
+                            "FATAL", "53300", "too many connections"))
                     except OSError:
                         pass
                     return False

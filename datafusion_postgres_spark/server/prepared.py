@@ -10,17 +10,23 @@ Reference parity:
     statement lifecycle, which binds the values with parameterized
     ``spark.sql(query, args)`` (named-parameter form), so values never get
     string-spliced into SQL.
+
+Parse tokenizes the statement once into its record
+(``dialect.transpiler.Statement``) and keeps it; Describe and every
+Execute reuse its kind, tables and transpiled ``$n`` → ``:pn`` text.
 """
 
 from __future__ import annotations
 
-import re
 from dataclasses import dataclass, field
 from datetime import date, datetime
 from decimal import Decimal
 
 from datafusion_postgres_spark.dialect.tokenizer import (
-    IDENT, OP, PARAM, WS, Token, significant, tokenize,
+    IDENT, OP, PARAM, Token, significant, tokenize,
+)
+from datafusion_postgres_spark.dialect.transpiler import (
+    PostgresTranspiler, Statement,
 )
 
 # PG type name -> (oid, python decoder)
@@ -48,14 +54,15 @@ _PG_NAME_TO_OID = {
 }
 
 DEFAULT_PARAM_OID = 25  # unknown params default to text, like the reference
+_PARSER = PostgresTranspiler()  # record builder; any instance builds the same
 
 
 @dataclass
 class PreparedStatement:
-    """Stored statement: (sql, param type oids) — the analog of the
+    """Stored statement: (record, param type oids) — the analog of the
     reference's (String, Option<(Statement, LogicalPlan)>)."""
 
-    sql: str
+    statement: Statement
     param_oids: list[int] = field(default_factory=list)
 
     @property
@@ -63,11 +70,11 @@ class PreparedStatement:
         return len(self.param_oids)
 
 
-def infer_param_types(sql: str) -> list[int]:
+def infer_param_types(sql: str | list[Token]) -> list[int]:
     """Scan for $n placeholders and infer each one's type from an adjacent
     cast: ``$1::int4`` or ``CAST($1 AS BIGINT)`` (planner.rs:9-66 trick).
     Uninferred params stay TEXT."""
-    toks = tokenize(sql)
+    toks = tokenize(sql) if isinstance(sql, str) else sql
     max_n = 0
     inferred: dict[int, int] = {}
     for i, t in enumerate(toks):
@@ -106,8 +113,6 @@ def decode_parameter(value, oid: int):
     if value is None:
         return None
     if isinstance(value, tuple) and value[0] == "bin":
-        from pyspark.sql import types as T
-
         from datafusion_postgres_spark.server.encoder import (
             decode_value_binary)
         dt = _OID_TO_SPARK_TYPE.get(oid)
@@ -134,20 +139,12 @@ def _oid_spark_types():
 _OID_TO_SPARK_TYPE = _oid_spark_types()
 
 
-_DOLLAR_RE = re.compile(r"\$(\d+)")
-
-
-def to_named_params(sql: str) -> str:
+def to_named_params(sql: str | list[Token]) -> str:
     """$1, $2 → :p1, :p2 (Spark parameterized SQL named markers). Skips
     string literals/comments by running on the token stream."""
-    toks = tokenize(sql)
-    out = []
-    for t in toks:
-        if t.kind == PARAM:
-            out.append(Token(IDENT, f":p{t.text[1:]}"))
-        else:
-            out.append(t)
-    return "".join(x.text for x in out)
+    toks = tokenize(sql) if isinstance(sql, str) else sql
+    return "".join(f":p{t.text[1:]}" if t.kind == PARAM else t.text
+                   for t in toks)
 
 
 class PreparedStatementManager:
@@ -162,14 +159,15 @@ class PreparedStatementManager:
         """Declared param OIDs from the Parse message take precedence over
         cast-inference; OID 0 means "unspecified" and falls back to the
         inferred (or default text) type, per the PG protocol."""
-        oids = infer_param_types(sql)
+        record = _PARSER.parse(sql)
+        oids = infer_param_types(record.tokens)
         for i, oid in enumerate(declared_oids or []):
             if not oid:
                 continue
             while len(oids) <= i:
                 oids.append(DEFAULT_PARAM_OID)
             oids[i] = oid
-        stmt = PreparedStatement(sql=sql, param_oids=oids)
+        stmt = PreparedStatement(record, param_oids=oids)
         self.statements[name] = stmt
         return stmt
 
@@ -189,7 +187,7 @@ class PreparedStatementManager:
                 f"prepared statement requires {stmt.num_params}")
         args = {f"p{i + 1}": decode_parameter(p, oid)
                 for i, (p, oid) in enumerate(zip(params, stmt.param_oids))}
-        return self.engine._execute_one(stmt.sql, args or None)
+        return self.engine._execute_one(stmt.statement, args or None)
 
     def close(self, name: str) -> None:
         self.statements.pop(name, None)

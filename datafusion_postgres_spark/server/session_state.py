@@ -48,7 +48,6 @@ PARAMETER_STATUS_VARS = {"client_encoding", "datestyle", "timezone",
 class Cursor:
     schema: object
     iterator: object
-    exhausted: bool = False
 
 
 @dataclass

@@ -15,6 +15,7 @@ SessionContext for TimeZone (SURVEY.md §7 "hard parts").
 from __future__ import annotations
 
 import os
+import re
 import threading
 from dataclasses import dataclass, field
 from typing import Iterator
@@ -26,6 +27,9 @@ from pyspark.sql.types import (
     ArrayType, DataType, MapType, StringType, StructField, StructType,
     TimestampNTZType, TimestampType,
 )
+
+from datafusion_postgres_spark.dialect.transpiler import Statement
+from datafusion_postgres_spark.server.prepared import to_named_params
 
 _BUILD_LOCK = threading.Lock()
 
@@ -285,6 +289,7 @@ class SparkPgEngine:
         # the session's catalog views may predate its tables (a clone's
         # were built in the template), so the first catalog read refreshes
         self._catalog_dirty = True
+        self._current_setting_stale = self._pg_settings_stale = False
         from datafusion_postgres_spark.functions import register_all
         register_all(self.spark)
 
@@ -304,19 +309,23 @@ class SparkPgEngine:
 
     # -- query execution ---------------------------------------------------
     def execute(self, sql: str) -> list[ExecutionResult]:
-        """Execute a (possibly multi-statement) Postgres-dialect SQL string.
+        """Execute a (possibly multi-statement) Postgres-dialect SQL string:
+        one tokenization splits it into statement records, each run by
+        :meth:`_execute_one`."""
+        return [self._execute_one(stmt)
+                for stmt in self.transpiler.statements(sql)]
 
-        Lifecycle mirrors handlers.rs:154-233: split → transpile →
-        hook chain (cursor / SET / SHOW / txn may answer fully) → Spark SQL.
-        """
-        results = []
-        for stmt in self.transpiler.split_statements(sql):
-            results.append(self._execute_one(stmt))
-        return results
+    def settings_changed(self) -> None:
+        """After a GUC write: ``current_setting`` is re-registered before
+        the next statement reaches Spark, ``pg_settings`` rebuilt on the
+        next catalog read."""
+        self._current_setting_stale = self._pg_settings_stale = True
 
-    _EXPLAIN_ANALYZE_RE = None
+    _EXPLAIN_ANALYZE_RE = re.compile(
+        r"(?is)^\s*EXPLAIN\s+(?:\(\s*([^)]*?)\s*\)|ANALYZE\b"
+        r"(?:\s+VERBOSE\b)?)\s*(.*)$")
 
-    def _maybe_explain_analyze(self, stmt: str, args: dict | None):
+    def _maybe_explain_analyze(self, stmt: Statement, args: dict | None):
         """Real ``EXPLAIN ANALYZE``: PG executes the statement and reports
         actual rows + timings; Spark's EXPLAIN never executes. For
         row-returning statements we run the inner query (full execution),
@@ -327,25 +336,18 @@ class SparkPgEngine:
         metrics only through the UI event log). DML under ANALYZE falls
         through to the plain EXPLAIN path (we don't execute side effects
         twice)."""
-        import re
         import time
-        cls = type(self)
-        if cls._EXPLAIN_ANALYZE_RE is None:
-            cls._EXPLAIN_ANALYZE_RE = re.compile(
-                r"(?is)^\s*EXPLAIN\s+(?:\(\s*([^)]*?)\s*\)|ANALYZE\b"
-                r"(?:\s+VERBOSE\b)?)\s*(.*)$")
-        m = cls._EXPLAIN_ANALYZE_RE.match(stmt)
+        m = self._EXPLAIN_ANALYZE_RE.match(stmt.text)
         if not m:
             return None
         opts = m.group(1)
         if opts is not None and not re.search(r"(?i)\bANALYZE\b(?!\s*\bfalse\b|\s+off\b)", opts):
             return None
-        inner = m.group(2).strip().rstrip(";")
-        if not inner or self.transpiler.statement_kind(inner) not in (
-                "SELECT", "WITH", "VALUES", "TABLE"):
+        inner = self.transpiler.parse(m.group(2).strip().rstrip(";"))
+        if not inner.props.rows:
             return None
         t0 = time.perf_counter()
-        df = self._sql(self.transpiler.transpile(inner), args)
+        df = self._sql(inner, args)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         t1 = time.perf_counter()
@@ -390,27 +392,44 @@ class SparkPgEngine:
         return text_result(["QUERY PLAN"], [(line,) for line in lines],
                            "EXPLAIN")
 
-    def _sql(self, spark_sql: str, args: dict | None) -> DataFrame:
-        """``spark.sql``, with ``$n`` bound as named parameters when the
-        statement came through Bind (values never spliced into SQL)."""
-        if args is None:
-            return self.spark.sql(spark_sql)
-        from datafusion_postgres_spark.server.prepared import to_named_params
-        return self.spark.sql(to_named_params(spark_sql), args=args)
+    def _sql(self, stmt: Statement, args: dict | None) -> DataFrame:
+        """``spark.sql`` of the record, transpiled once per record, with
+        ``$n`` bound as named parameters when the statement came through
+        Bind (values never spliced into SQL)."""
+        if stmt.spark_sql is None:
+            sql = self.transpiler.transpile(stmt)
+            if args is not None:
+                # left as written: the record's tokens are this text's
+                sql = to_named_params(stmt.tokens if sql == stmt.text
+                                      else sql)
+            stmt.spark_sql = sql
+        if self._current_setting_stale:
+            self._current_setting_stale = False
+            from datafusion_postgres_spark.functions.registry import (
+                refresh_current_setting)
+            try:
+                refresh_current_setting(self.spark, self.state.vars)
+            except Exception:
+                pass  # a GUC value must not fail an unrelated statement
+        return self.spark.sql(stmt.spark_sql, args=args)
 
-    def _execute_one(self, stmt: str,
+    def _execute_one(self, stmt: str | Statement,
                      args: dict | None = None) -> ExecutionResult:
-        """The one statement lifecycle of both wire protocols. ``args``
-        holds the decoded ``$n`` values of a parameterized Execute; the
-        hooks answer only unparameterized statements."""
+        """The one statement lifecycle of both wire protocols. Every step
+        reads the statement's record (parsed here if given text), never
+        re-tokenizing: the failed-transaction guard, hooks, TVF rewrite,
+        RBAC, catalog refresh, EXPLAIN ANALYZE, Spark SQL, the tag.
+        ``args`` holds the decoded ``$n`` values of a parameterized
+        Execute; the hooks answer only unparameterized statements."""
+        stmt = self.transpiler.parse(stmt)
+        if self.state.in_failed_transaction() and not stmt.props.txn:
+            raise FailedTransactionError(
+                "current transaction is aborted, commands ignored until "
+                "end of transaction block")  # error code 25P01
         if args is None:
             hooked = self.hooks.try_handle(stmt)
             if hooked is not None:
                 return hooked
-        if self.state.in_failed_transaction():
-            raise FailedTransactionError(
-                "current transaction is aborted, commands ignored until "
-                "end of transaction block")  # error code 25P01
         stmt, pending_tvfs = self._maybe_rewrite_pipeline_tvfs(stmt)
         self._check_permissions(
             stmt, tvf_views={view for view, _, _ in pending_tvfs})
@@ -427,17 +446,15 @@ class SparkPgEngine:
         analyzed = self._maybe_explain_analyze(stmt, args)
         if analyzed is not None:
             return analyzed
-        spark_sql = self.transpiler.transpile(stmt)
-        kind = self.transpiler.statement_kind(stmt)
+        kind, props = stmt.kind, stmt.props
         try:
-            df = self._sql(spark_sql, args)
-            if kind in ("CREATE", "DROP", "ALTER", "INSERT", "UPDATE",
-                        "DELETE", "TRUNCATE", "MERGE"):
-                self._catalog_dirty = True
+            df = self._sql(stmt, args)
         except Exception:
             self.state.statement_failed()
             raise
-        if kind in ("INSERT", "UPDATE", "DELETE", "MERGE"):
+        if props.ddl:
+            self._catalog_dirty = True
+        if props.dml:
             # DML returns no rows; surface the affected count in the tag
             # like the reference ("INSERT 0 n", handlers.rs:354-376)
             n = _dml_row_count(df)
@@ -450,12 +467,11 @@ class SparkPgEngine:
             # PG clients expect the QUERY PLAN column name
             df = df.withColumnRenamed("plan", "QUERY PLAN")
             return ExecutionResult(df=df, command_tag="EXPLAIN")
-        if kind in ("CREATE", "DROP", "ALTER", "TRUNCATE"):
-            import re as _re
-            m = _re.match(
+        if props.ddl:
+            m = re.match(
                 r"(?is)^\s*(?:CREATE|DROP|ALTER)\s+(?:OR\s+REPLACE\s+)?"
                 r"(?:TEMP(?:ORARY)?\s+)?(?:MATERIALIZED\s+)?"
-                r"(SCHEMA|VIEW|DATABASE|SEQUENCE|FUNCTION|TYPE)\b", stmt)
+                r"(SCHEMA|VIEW|DATABASE|SEQUENCE|FUNCTION|TYPE)\b", stmt.text)
             obj = m.group(1).upper() if m else "TABLE"
             return ExecutionResult(df=None, command_tag=f"{kind} {obj}")
         return ExecutionResult(df=df)
@@ -509,64 +525,53 @@ class SparkPgEngine:
                 f"INSERT INTO {table} SELECT * FROM {view}")
         finally:
             self.spark.catalog.dropTempView(view)
-        self._catalog_dirty = True
         n = _dml_row_count(res)
         return n if n else len(rows)
 
     def _maybe_rewrite_pipeline_tvfs(
-            self, stmt: str) -> tuple[str, list]:
+            self, stmt: Statement) -> tuple[Statement, list]:
         """Expose the pipeline operator tier (dedup/similarity/text)
         through SQL: `SELECT * FROM minhash_near_dups('documents', 0.5)`
         — each registered pipeline-function call materializes as a lazy
-        temp view and the statement proceeds through the ordinary
-        transpile path, so the full relational surface composes over the
-        operator output (functions/pipeline_tvf.py)."""
-        kind = self.transpiler.statement_kind(stmt)
-        if kind not in ("SELECT", "WITH", "CREATE", "EXPLAIN"):
+        temp view and the rewritten statement (a record of its own)
+        proceeds through the ordinary transpile path, so the full
+        relational surface composes over the operator output
+        (functions/pipeline_tvf.py)."""
+        if not stmt.props.tvf:
             return stmt, []
         from datafusion_postgres_spark.functions.pipeline_tvf import (
             rewrite_pipeline_tvfs,
         )
-        from datafusion_postgres_spark.server.auth import Resource
-
-        def check_table(name: str) -> None:
-            self.auth.check_statement(
-                self.user, "SELECT",
-                Resource("table",
-                         name if "." in name else f"public.{name}"))
 
         rewritten, pending = rewrite_pipeline_tvfs(
-            self.spark, stmt, check_table=check_table, defer=True)
-        return (stmt, []) if rewritten is None else (rewritten, pending)
+            self.spark, stmt, check_table=lambda name: self.auth.check_table(
+                self.user, "SELECT", name))
+        if rewritten is None:
+            return stmt, []
+        return self.transpiler.parse(rewritten), pending
 
-    def _check_permissions(self, stmt: str,
+    def _check_permissions(self, stmt: str | Statement,
                            tvf_views: set[str] | None = None) -> None:
-        """Per-statement RBAC (hooks/permissions.rs:44-92): map statement
-        kind to a required permission and check it against every referenced
-        table. Superuser (the default 'postgres' user) bypasses.
+        """Per-statement RBAC (hooks/permissions.rs:44-92): the kind's
+        required permission, checked against every referenced table.
+        Superuser (the default 'postgres' user) bypasses.
 
-        Fail-closed rule: statement kinds that MUST reference a table
-        (DML/DDL) but where the tokenizer could not extract one are denied
-        for non-superusers instead of being checked against a placeholder
-        — a permissive default there would let exotic spellings bypass
-        grants. Table-less SELECTs (``SELECT 1``) stay allowed."""
-        from datafusion_postgres_spark.server.auth import (
-            PermissionDenied, Resource)
+        Fail-closed rule: a kind needing more than a read whose target
+        table the tokenizer could not extract is denied for
+        non-superusers — a permissive default there would let exotic
+        spellings bypass grants. Table-less SELECTs stay allowed."""
+        from datafusion_postgres_spark.server.auth import PermissionDenied
 
-        kind = self.transpiler.statement_kind(stmt)
-        tables = self.transpiler.table_names(stmt)
-        if not tables:
-            needs_table = kind.upper() in (
-                "INSERT", "UPDATE", "DELETE", "MERGE", "CREATE", "DROP",
-                "ALTER", "TRUNCATE", "GRANT", "REVOKE")
-            if needs_table:
+        stmt = self.transpiler.parse(stmt)
+        if not stmt.tables:
+            if stmt.props.permission not in (None, "select"):
                 user = self.auth.users.get(self.user)
                 if user is None or not user.superuser:
                     raise PermissionDenied(
                         f"permission denied for user {self.user}: cannot "
-                        f"resolve target table of {kind.upper()} statement")
+                        f"resolve target table of {stmt.kind} statement")
             return
-        for tbl in tables:
+        for tbl in stmt.tables:
             # Engine-synthesized pipeline TVF views OF THIS STATEMENT:
             # already authorized per SOURCE table via the rewrite's
             # check_table hook; no user grant can name a one-off
@@ -575,24 +580,26 @@ class SparkPgEngine:
             # name (never by prefix): a user-created table that merely
             # starts with __tvf_ stays fully RBAC-checked — a prefix
             # trust would be a fail-open hole for DDL/DML on such names.
-            if tvf_views and tbl.split(".")[-1] in tvf_views:
-                continue
-            name = tbl if "." in tbl else f"public.{tbl}"
-            self.auth.check_statement(self.user, kind,
-                                      Resource("table", name))
+            if not (tvf_views and tbl.split(".")[-1] in tvf_views):
+                self.auth.check_table(self.user, stmt.kind, tbl)
 
-    def _maybe_refresh_catalog(self, stmt: str) -> None:
+    def _maybe_refresh_catalog(self, stmt: Statement) -> None:
         """Rebuild the dynamic pg_catalog views lazily: only when DDL
-        happened since the last build AND the statement touches catalog
-        tables. (The reference recomputes on every scan, pg_class.rs:84 —
-        the dirty flag is our many-tables-scale improvement.)"""
-        if not self._catalog_dirty:
+        happened (or, for pg_settings alone, a GUC changed) since the last
+        build AND the statement touches catalog tables. (The reference
+        recomputes on every scan, pg_class.rs:84 — the dirty flag is our
+        many-tables-scale improvement.)"""
+        if not (self._catalog_dirty or self._pg_settings_stale):
             return
-        low = stmt.lower()
+        low = stmt.text.lower()
         if "pg_" in low or "information_schema" in low or "regclass" in low:
-            from datafusion_postgres_spark.catalog.pg_catalog import refresh
-            refresh(self.spark, self.oids, self.state.vars)
-            self._catalog_dirty = False
+            from datafusion_postgres_spark.catalog.pg_catalog import (
+                refresh, refresh_settings)
+            if self._catalog_dirty:
+                refresh(self.spark, self.oids, self.state.vars)
+            else:
+                refresh_settings(self.spark, self.state.vars)
+            self._catalog_dirty = self._pg_settings_stale = False
 
 
 class FailedTransactionError(RuntimeError):

@@ -1208,6 +1208,35 @@ class TestFlushRule:
         finally:
             srv.shutdown()
 
+    def test_failed_password_error_is_fatal(self, spark):
+        """The server closes the connection after a failed password, so
+        the ErrorResponse's severity is FATAL, not ERROR."""
+        from datafusion_postgres_spark.server.auth import AuthManager, User
+
+        auth = AuthManager()
+        auth.add_user(User("fataluser", password="right"))
+        srv = PgWireServer(spark, port=0, password_mode="password",
+                           auth=auth)
+        srv.start_background()
+        try:
+            c = MiniPgClient.__new__(MiniPgClient)
+            c.sock = socket.create_connection((srv.host, srv.port),
+                                              timeout=20)
+            c.buf = b""
+            body = (struct.pack("!I", 196608) +
+                    b"user\x00fataluser\x00database\x00postgres\x00\x00")
+            c.sock.sendall(struct.pack("!I", len(body) + 4) + body)
+            c.read_message()  # AuthenticationCleartextPassword
+            _frame(c, b"p", b"wrong\x00")
+            tag, payload = c.read_message()
+            assert tag == b"E"
+            fields = payload.split(b"\x00")
+            assert b"SFATAL" in fields and b"VFATAL" in fields
+            assert b"C28P01" in fields
+            c.sock.close()
+        finally:
+            srv.shutdown()
+
     def test_begin_commit_round_trip_has_no_ack_stall(self, watched):
         import statistics
         import time
