@@ -55,14 +55,14 @@ KINDS: dict[str, Kind] = {
     "TRUNCATE": Kind("truncate", ddl=True),
     "GRANT": Kind("all"), "REVOKE": Kind("all"),
     **dict.fromkeys(("SET", "SHOW", "RESET", "DISCARD", "DECLARE", "FETCH",
-                     "CLOSE", ""), Kind(permission=None)),
+                     "CLOSE"), Kind(permission=None)),
     **dict.fromkeys(("BEGIN", "START", "COMMIT", "END", "ROLLBACK", "ABORT"),
                     Kind(permission=None, txn=True)),
     **dict.fromkeys(("VACUUM", "ANALYZE", "ANALYSE", "CHECKPOINT", "LISTEN",
                      "UNLISTEN", "NOTIFY", "DEALLOCATE", "SECURITY",
                      "REINDEX", "CLUSTER"), Kind(ack=True)),
 }
-OTHER_KIND = Kind()  # any kind not listed is checked as a read
+OTHER_KIND = Kind()  # any kind not listed, "" too, is checked as a read
 
 
 @dataclass
@@ -150,12 +150,13 @@ class PostgresTranspiler:
         return emit(tokens)
 
     def statement_kind(self, sql: str | list[Token]) -> str:
-        """First significant keyword, uppercased — the key of
+        """First significant keyword, uppercased, past any opening
+        parentheses (``(SELECT 1)`` is a SELECT) — the key of
         :data:`KINDS`."""
         for t in tokenize(sql) if isinstance(sql, str) else sql:
             if t.kind == IDENT:
                 return t.text.upper()
-            if t.kind != WS:
+            if t.kind != WS and t.text != "(":
                 break
         return ""
 

@@ -927,10 +927,10 @@ def refresh_current_setting(spark: SparkSession, session_vars: dict) -> None:
              "max_index_keys": "32"}
     merged = dict(extra)
     merged.update(session_vars)
-    arms = " ".join(
-        "WHEN '{}' THEN '{}'".format(k.lower().replace("'", "''"),
-                                     str(v).replace("'", "''"))
-        for k, v in merged.items())
+    esc = str.maketrans({"'": "''", "\\": "\\\\"})  # as a Spark '...' literal
+    arms = " ".join(f"WHEN '{k.lower().translate(esc)}' "
+                    f"THEN '{str(v).translate(esc)}'"
+                    for k, v in merged.items())
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION current_setting"
         "(name STRING, missing_ok BOOLEAN DEFAULT false) RETURNS STRING "

@@ -8,6 +8,9 @@ the chain reads the statement's record (``dialect.transpiler.Statement``);
 the engine makes the failed-transaction check before it. SET, RESET and
 ``set_config`` only write the session state and mark the engine's
 settings stale (``SET TIME ZONE`` also sets Spark's time zone at once).
+The chain answers session state only (transactions, SET/SHOW/RESET,
+cursors, acks, COPY framing): the queries inside COPY and DECLARE, and
+SHOW TABLES, are planned by ``SparkPgEngine._query`` like any statement.
 """
 
 from __future__ import annotations
@@ -19,7 +22,9 @@ from typing import TYPE_CHECKING
 from datafusion_postgres_spark.server.session_state import (
     DEFAULT_SESSION_VARS, Cursor,
 )
-from datafusion_postgres_spark.session import ExecutionResult, text_result
+from datafusion_postgres_spark.session import (
+    CopyOptions, ExecutionResult, text_result,
+)
 
 if TYPE_CHECKING:
     from datafusion_postgres_spark.dialect.transpiler import Statement
@@ -55,41 +60,27 @@ _COPY_IN_RE = re.compile(
     re.IGNORECASE | re.DOTALL)
 
 
-def _parse_copy_opts(opts: str | None) -> dict:
+def _parse_copy_opts(opts: str | None, **target) -> CopyOptions:
     """Parse the WITH (...) option list of COPY: FORMAT/DELIMITER/NULL/
-    HEADER, both `FORMAT csv` and bare legacy `csv` spellings."""
+    HEADER, and the bare legacy `csv`/`text`/`binary` spellings; ``target``
+    holds a FROM STDIN's table, columns and column count."""
     out: dict = {}
-    if not opts:
-        return out
-    toks = re.findall(r"'(?:[^']|'')*'|[^\s,]+", opts)
-    i = 0
-    while i < len(toks):
-        key = toks[i].lower()
-        val = toks[i + 1] if i + 1 < len(toks) else None
-        if val is not None and val.startswith("'"):
-            val = val[1:-1].replace("''", "'")
-        if key == "format" and val:
-            out["format"] = val.lower()
-            i += 2
-        elif key == "delimiter" and val is not None:
-            out["delimiter"] = val
-            i += 2
-        elif key == "null" and val is not None:
-            out["null"] = val
-            i += 2
-        elif key == "header":
-            if val and val.lower() in ("true", "false", "on", "off"):
-                out["header"] = val.lower() in ("true", "on")
-                i += 2
-            else:
-                out["header"] = True
-                i += 1
-        elif key in ("csv", "text", "binary"):
+    for key, val in re.findall(r"(\w+)\s*('(?:[^']|'')*'|[^\s,]*)",
+                               opts or ""):
+        key, val = key.lower(), (val[1:-1].replace("''", "'")
+                                 if val.startswith("'") else val)
+        if key in ("csv", "text", "binary"):
             out["format"] = key
-            i += 1
-        else:
-            i += 1
-    return out
+        elif key == "format":
+            out["format"] = val.lower()
+        elif key == "header":
+            out["header"] = val.lower() not in ("false", "off", "0")
+        elif key in ("delimiter", "null"):
+            out[key] = val
+    if len(out.get("delimiter", ",")) != 1:
+        raise CursorError(
+            "COPY delimiter must be a single one-byte character", "0A000")
+    return CopyOptions(**out, **target)
 
 # SHOW answers synthesized exactly like hooks/set_show.rs:283-366
 # (any other name is its own column name, spaces as underscores)
@@ -162,22 +153,17 @@ class HookChain:
         if kind == "COPY":
             m = _COPY_RE.match(stmt)
             if m:
-                if m.group("tbl"):
-                    self.engine.auth.check_table(
-                        self.engine.user, "SELECT", m.group("tbl").strip('"'))
-                inner = m.group("q") or f'SELECT * FROM {m.group("tbl")}'
                 opts = _parse_copy_opts(m.group("opts"))
-                df = self.engine._sql(self.engine.transpiler.parse(inner),
-                                      None)
-                res = ExecutionResult(df=df, command_tag="COPY_OUT")
-                res.copy_format = opts.get("format", "text")
-                res.copy_header = opts.get("header", False)
-                return res
+                # the table form reads like SELECT * FROM it, and is
+                # checked like one
+                df = self.engine._query(
+                    m.group("q") or f'SELECT * FROM {m.group("tbl")}')
+                return ExecutionResult(df=df, command_tag="COPY_OUT",
+                                       copy=opts)
             m = _COPY_IN_RE.match(stmt)
             if m:
                 tbl = m.group("tbl").strip('"')
                 self.engine.auth.check_table(self.engine.user, "INSERT", tbl)
-                opts = _parse_copy_opts(m.group("opts"))
                 cols = [c.strip().strip('"')
                         for c in m.group("cols").split(",")] \
                     if m.group("cols") else None
@@ -192,15 +178,10 @@ class HookChain:
                     raise CursorError(
                         f'cannot copy to view "{tbl}"', "42809")
                 ncols = len(cols) if cols else len(spark.table(tbl).columns)
-                res = ExecutionResult(df=None, command_tag="COPY_IN")
-                res.copy_table = tbl
-                res.copy_columns = cols
-                res.copy_ncols = ncols
-                res.copy_format = opts.get("format", "text")
-                res.copy_delimiter = opts.get("delimiter")
-                res.copy_null = opts.get("null")
-                res.copy_header = opts.get("header", False)
-                return res
+                return ExecutionResult(
+                    df=None, command_tag="COPY_IN", copy=_parse_copy_opts(
+                        m.group("opts"), table=tbl, columns=cols,
+                        ncols=ncols))
             raise CursorError(
                 "unsupported COPY form (use COPY ... TO STDOUT or "
                 "COPY table FROM STDIN)", "0A000")
@@ -237,8 +218,8 @@ class HookChain:
             m = _SHOW_RE.match(stmt)
             name = (m.group("name") if m else "").strip().strip(";").lower()
             if name in ("catalogs", "tables"):
-                return ExecutionResult(df=spark.sql(f"SHOW {name.upper()}"),
-                                       command_tag="SHOW")
+                return ExecutionResult(df=self.engine._query(
+                    f"SHOW {name.upper()}"), command_tag="SHOW")
             if name == "all":
                 # SHOW ALL: every session var as (name, setting, description)
                 rows = [(k, v, "") for k, v in sorted(state.vars.items())]
@@ -266,8 +247,7 @@ class HookChain:
 
     # -- cursors -----------------------------------------------------------
     def _declare(self, name: str, query: str):
-        res = ExecutionResult(df=self.engine._sql(
-            self.engine.transpiler.parse(query), None))
+        res = ExecutionResult(df=self.engine._query(query))
         # Eager execution like the reference (cursor.rs:89-152), but
         # streamed: the result's batches are pulled a partition at a time,
         # so a cursor over a 100 TB result does not materialize on the

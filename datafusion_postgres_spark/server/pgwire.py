@@ -44,6 +44,7 @@ follows another waits for the client's delayed ACK, about 40 ms.
 from __future__ import annotations
 
 import itertools
+import re
 import socket
 import socketserver
 import struct
@@ -86,6 +87,44 @@ def _chunks(rows):
     """Lists of up to _CHUNK_ROWS rows from an iterator."""
     while chunk := list(itertools.islice(rows, _CHUNK_ROWS)):
         yield chunk
+
+
+# PostgreSQL's COPY text escapes (copyto.c, CopyAttributeOutText)
+_COPY_TEXT_ESCAPES = {"\\": "\\\\", "\b": "\\b", "\f": "\\f",
+                      "\n": "\\n", "\r": "\\r", "\t": "\\t",
+                      "\v": "\\v"}
+
+
+def _copy_field(opts):
+    """(value text or None -> its COPY TO field, the delimiter), as
+    PostgreSQL writes text and csv: text backslash-escapes the delimiter,
+    backslash and control characters; csv quotes a value holding the
+    delimiter, a quote, CR or LF; NULL is the NULL option (text ``\\N``,
+    csv empty)."""
+    if opts.format == "csv":
+        delimiter = opts.delimiter or ","
+        null = "" if opts.null is None else opts.null
+
+        def csv_field(v):
+            if v is None:
+                return null
+            if '"' in v or delimiter in v or "\n" in v or "\r" in v:
+                return '"' + v.replace('"', '""') + '"'
+            return v
+        return csv_field, delimiter
+    delimiter = opts.delimiter or "\t"
+    null = "\\N" if opts.null is None else opts.null
+    escapes = {delimiter: "\\" + delimiter, **_COPY_TEXT_ESCAPES}
+    pattern = re.compile("[" + re.escape("".join(escapes)) + "]")
+
+    def text_field(v):
+        if v is None:
+            return null
+        # the common case, and cheaper than the regex: nothing to escape
+        if v.isprintable() and "\\" not in v and delimiter not in v:
+            return v
+        return pattern.sub(lambda m: escapes[m.group()], v)
+    return text_field, delimiter
 
 
 def _sqlstate_of(exc: Exception) -> str:
@@ -512,7 +551,7 @@ class _Conn(socketserver.BaseRequestHandler):
 
         The target table/columns were validated by the hook BEFORE entering
         copy mode, so the client only ever sees data-level errors here."""
-        ncols = res.copy_ncols
+        ncols = res.copy.ncols
         self._send(_msg(b"G", struct.pack("!bH", 0, ncols) +
                         struct.pack(f"!{ncols}H", *([0] * ncols))))
         buf = bytearray()
@@ -533,49 +572,33 @@ class _Conn(socketserver.BaseRequestHandler):
                 break
         if fail is not None:
             raise _CopyFailed(fail)
-        n = self.engine.copy_into(
-            res.copy_table, res.copy_columns, bytes(buf),
-            getattr(res, "copy_format", "text"),
-            getattr(res, "copy_delimiter", None),
-            getattr(res, "copy_null", None),
-            getattr(res, "copy_header", False))
+        c = res.copy
+        n = self.engine.copy_into(c.table, c.columns, bytes(buf), c.format,
+                                  c.delimiter, c.null, c.header)
         self._send(_msg(b"C", _cstr(f"COPY {n}")))
 
     def _send_copy_out(self, res):
-        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows.
-        text format: tab-separated, \\N for NULL; csv: comma-separated,
-        empty NULL, optional header; binary: PGCOPY signature +
-        length-prefixed tuples in the binary wire encoding."""
-        schema = res.schema
+        """COPY ... TO STDOUT: CopyOutResponse + CopyData rows, one per
+        line in text or csv (:func:`_copy_field`), an optional header
+        line first; binary: PGCOPY signature + length-prefixed tuples in
+        the binary wire encoding."""
+        schema, opts = res.schema, res.copy
         n_cols = len(schema.fields)
-        if getattr(res, "copy_format", "text") == "binary":
+        if opts.format == "binary":
             self._send_copy_out_binary(res, schema, n_cols)
             return
         self._send(_msg(b"H", struct.pack("!bH", 0, n_cols) +
                         struct.pack(f"!{n_cols}H", *([0] * n_cols))))
-        csv = getattr(res, "copy_format", "text") == "csv"
+        field, delimiter = _copy_field(opts)
         efd = int(self.engine.state.get_var("extra_float_digits") or 1)
-        if csv and getattr(res, "copy_header", False):
-            header = ",".join(f.name for f in schema.fields) + "\n"
-            self._send(_msg(b"d", header.encode()))
+        if opts.header:
+            header = delimiter.join(field(f.name) for f in schema.fields)
+            self._send(_msg(b"d", (header + "\n").encode()))
         n = 0
         for chunk in _chunks(res.rows()):
-            out = []
-            for row in chunk:
-                values = encoder.encode_row(row, schema, efd)
-                if csv:
-                    cells = ["" if v is None else
-                             ('"' + v.replace('"', '""') + '"'
-                              if any(c in v for c in ',"\n') else v)
-                             for v in values]
-                    line = ",".join(cells) + "\n"
-                else:
-                    cells = ["\\N" if v is None else
-                             v.replace("\\", "\\\\").replace("\t", "\\t")
-                              .replace("\n", "\\n") for v in values]
-                    line = "\t".join(cells) + "\n"
-                out.append(_msg(b"d", line.encode()))
-            self._send(b"".join(out))
+            lines = (delimiter.join(map(field, encoder.encode_row(
+                row, schema, efd))) + "\n" for row in chunk)
+            self._send(b"".join(_msg(b"d", line.encode()) for line in lines))
             n += len(chunk)
         self._send(_msg(b"c", b""))
         self._send(_msg(b"C", _cstr(f"COPY {n}")))

@@ -9,7 +9,9 @@ Spark-first design: one shared ``SparkSession`` per process; each client
 connection gets a :func:`clone_session` of the server's registered template
 (isolated SET values, temp views + functions; shared cached data /
 executors) — this improves on the reference, which mutates a single shared
-SessionContext for TimeZone (SURVEY.md §7 "hard parts").
+SessionContext for TimeZone (SURVEY.md §7 "hard parts"). Every query, a
+statement or the inner query of COPY, DECLARE or EXPLAIN ANALYZE, is
+planned in one place, :meth:`SparkPgEngine._query`.
 """
 
 from __future__ import annotations
@@ -118,6 +120,20 @@ def clone_session(spark: SparkSession) -> SparkSession:
     return SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
 
 
+@dataclass(frozen=True)
+class CopyOptions:
+    """A COPY's WITH options (None: the format's default) and, for FROM
+    STDIN, its target table, named columns (None: all) and their count."""
+
+    format: str = "text"  # text | csv | binary
+    delimiter: str | None = None
+    null: str | None = None
+    header: bool = False
+    table: str | None = None
+    columns: list[str] | None = None
+    ncols: int = 0
+
+
 @dataclass
 class ExecutionResult:
     """One statement's result, as the wire writer consumes it.
@@ -136,6 +152,7 @@ class ExecutionResult:
     rows_affected: int | None = None
     held_rows: list | None = None
     held_schema: StructType | None = None
+    copy: CopyOptions | None = None  # COPY_OUT / COPY_IN framing
 
     @property
     def schema(self):
@@ -347,7 +364,7 @@ class SparkPgEngine:
         if not inner.props.rows:
             return None
         t0 = time.perf_counter()
-        df = self._sql(inner, args)
+        df = self._query(inner, args)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted")
         t1 = time.perf_counter()
@@ -413,14 +430,45 @@ class SparkPgEngine:
                 pass  # a GUC value must not fail an unrelated statement
         return self.spark.sql(stmt.spark_sql, args=args)
 
+    def _query(self, stmt: str | Statement,
+               args: dict | None = None) -> DataFrame:
+        """The one planning path of every query, a statement or the inner
+        query of COPY, DECLARE or EXPLAIN ANALYZE: TVF rewrite, RBAC, TVF
+        materialization, catalog refresh, then Spark SQL.
+
+        Each pipeline table-function call (`SELECT * FROM
+        minhash_near_dups('documents', 0.5)`, functions/pipeline_tvf.py)
+        becomes a temp view that the rewritten statement, a record of its
+        own, reads, so the relational surface composes over operator
+        output. The views materialize only after BOTH the rewrite's
+        per-source check and the statement's own: eager builders
+        (trained_quality runs a full training job) must not run for a
+        denied statement."""
+        stmt, pending = self.transpiler.parse(stmt), []
+        if stmt.props.tvf:
+            from datafusion_postgres_spark.functions.pipeline_tvf import (
+                materialize_pipeline_tvfs, rewrite_pipeline_tvfs,
+            )
+            rewritten, pending = rewrite_pipeline_tvfs(
+                self.spark, stmt, check_table=lambda name:
+                self.auth.check_table(self.user, "SELECT", name))
+            if rewritten is not None:
+                stmt = self.transpiler.parse(rewritten)
+        self._check_permissions(
+            stmt, tvf_views={view for view, _, _ in pending})
+        if pending:
+            materialize_pipeline_tvfs(self.spark, pending)
+        self._maybe_refresh_catalog(stmt)
+        return self._sql(stmt, args)
+
     def _execute_one(self, stmt: str | Statement,
                      args: dict | None = None) -> ExecutionResult:
         """The one statement lifecycle of both wire protocols. Every step
         reads the statement's record (parsed here if given text), never
-        re-tokenizing: the failed-transaction guard, hooks, TVF rewrite,
-        RBAC, catalog refresh, EXPLAIN ANALYZE, Spark SQL, the tag.
-        ``args`` holds the decoded ``$n`` values of a parameterized
-        Execute; the hooks answer only unparameterized statements."""
+        re-tokenizing: the failed-transaction guard, hooks, EXPLAIN
+        ANALYZE, :meth:`_query`, the tag. ``args`` holds the decoded
+        ``$n`` values of a parameterized Execute; the hooks answer only
+        unparameterized statements."""
         stmt = self.transpiler.parse(stmt)
         if self.state.in_failed_transaction() and not stmt.props.txn:
             raise FailedTransactionError(
@@ -430,25 +478,12 @@ class SparkPgEngine:
             hooked = self.hooks.try_handle(stmt)
             if hooked is not None:
                 return hooked
-        stmt, pending_tvfs = self._maybe_rewrite_pipeline_tvfs(stmt)
-        self._check_permissions(
-            stmt, tvf_views={view for view, _, _ in pending_tvfs})
-        if pending_tvfs:
-            # Materialize TVF views only now — after BOTH the per-source
-            # check inside the rewrite and the statement-kind permission
-            # check above. Eager builders (trained_quality runs a full
-            # training job) must not execute for a denied statement.
-            from datafusion_postgres_spark.functions.pipeline_tvf import (
-                materialize_pipeline_tvfs,
-            )
-            materialize_pipeline_tvfs(self.spark, pending_tvfs)
-        self._maybe_refresh_catalog(stmt)
-        analyzed = self._maybe_explain_analyze(stmt, args)
-        if analyzed is not None:
-            return analyzed
         kind, props = stmt.kind, stmt.props
         try:
-            df = self._sql(stmt, args)
+            analyzed = self._maybe_explain_analyze(stmt, args)
+            if analyzed is not None:
+                return analyzed
+            df = self._query(stmt, args)
         except Exception:
             self.state.statement_failed()
             raise
@@ -527,28 +562,6 @@ class SparkPgEngine:
             self.spark.catalog.dropTempView(view)
         n = _dml_row_count(res)
         return n if n else len(rows)
-
-    def _maybe_rewrite_pipeline_tvfs(
-            self, stmt: Statement) -> tuple[Statement, list]:
-        """Expose the pipeline operator tier (dedup/similarity/text)
-        through SQL: `SELECT * FROM minhash_near_dups('documents', 0.5)`
-        — each registered pipeline-function call materializes as a lazy
-        temp view and the rewritten statement (a record of its own)
-        proceeds through the ordinary transpile path, so the full
-        relational surface composes over the operator output
-        (functions/pipeline_tvf.py)."""
-        if not stmt.props.tvf:
-            return stmt, []
-        from datafusion_postgres_spark.functions.pipeline_tvf import (
-            rewrite_pipeline_tvfs,
-        )
-
-        rewritten, pending = rewrite_pipeline_tvfs(
-            self.spark, stmt, check_table=lambda name: self.auth.check_table(
-                self.user, "SELECT", name))
-        if rewritten is None:
-            return stmt, []
-        return self.transpiler.parse(rewritten), pending
 
     def _check_permissions(self, stmt: str | Statement,
                            tvf_views: set[str] | None = None) -> None:

@@ -110,6 +110,55 @@ class TestEngineIntegration:
         finally:
             engine.user = "postgres"
 
+    @staticmethod
+    def _as(engine, user, sql):
+        """``sql``'s rows, or a FETCH ALL's after a DECLARE, as ``user``."""
+        engine.user = user
+        try:
+            res = engine.execute(sql)[0]
+            if sql.startswith("DECLARE"):
+                res = engine.execute("FETCH ALL FROM inner_c")[0]
+                engine.execute("CLOSE inner_c")
+            return list(res.rows())
+        finally:
+            engine.user = "postgres"
+
+    def test_inner_queries_are_checked(self, engine):
+        # a parenthesized statement and the queries inside COPY, DECLARE
+        # and EXPLAIN ANALYZE need the grant a plain SELECT needs
+        engine.auth.add_user(User("grantless"))
+        engine.auth.add_user(User("nation_reader", roles=["r_nation"]))
+        engine.auth.grant("r_nation", Permission.SELECT,
+                          Resource("table", "public.nation"))
+        for sql in ("(SELECT * FROM nation)",
+                    "COPY (SELECT * FROM nation) TO STDOUT",
+                    "COPY nation TO STDOUT",
+                    "DECLARE inner_c CURSOR FOR SELECT * FROM nation",
+                    "EXPLAIN ANALYZE SELECT * FROM nation"):
+            with pytest.raises(PermissionDenied):
+                self._as(engine, "grantless", sql)
+            rows = self._as(engine, "nation_reader", sql)
+            if sql.startswith("EXPLAIN"):
+                assert ("Actual Rows: 25",) in rows, sql
+            else:
+                assert len(rows) == 25, sql
+
+    def test_inner_queries_run_pipeline_tvfs(self, engine, tables):
+        engine.auth.add_user(User("grantless"))
+        engine.auth.add_user(User("docs_reader", roles=["r_docs"]))
+        engine.auth.grant("r_docs", Permission.SELECT,
+                          Resource("table", "public.documents"))
+        sql = "SELECT * FROM exact_dup_groups('documents')"
+        want = sorted(map(tuple, self._as(engine, "docs_reader", sql)),
+                      key=repr)
+        assert want
+        for inner in (f"COPY ({sql}) TO STDOUT",
+                      f"DECLARE inner_c CURSOR FOR {sql}"):
+            got = self._as(engine, "docs_reader", inner)
+            assert sorted(map(tuple, got), key=repr) == want, inner
+            with pytest.raises(PermissionDenied):
+                self._as(engine, "grantless", inner)
+
     def test_timeout_cancels(self, engine):
         from datafusion_postgres_spark.server.timeout import (
             QueryCanceled, run_with_timeout)

@@ -583,6 +583,27 @@ class TestCopyOut:
                 break
         assert lines == ["k\n", "0\n", "1\n"]
 
+    def test_copy_delimiter_and_null(self, client):
+        # PostgreSQL 15 sends these bytes: text escapes the delimiter and
+        # a tab, csv quotes what holds the delimiter or a quote
+        sql = ("SELECT 1 AS k, 'a|b' AS v, CAST(NULL AS STRING) AS n, "
+               "'q\"t' AS q, concat('tab', chr(9), 'x') AS t")
+        for opts, want in (
+                ("DELIMITER '|', NULL 'x'",
+                 ["1|a\\|b|x|q\"t|tab\\tx\n"]),
+                ("FORMAT csv, DELIMITER '|', NULL 'x', HEADER",
+                 ["k|v|n|q|t\n", '1|"a|b"|x|"q""t"|tab\tx\n'])):
+            body = f"COPY ({sql}) TO STDOUT WITH ({opts})".encode() + b"\x00"
+            client.sock.sendall(b"Q" + struct.pack("!I", len(body) + 4) + body)
+            lines = []
+            while True:
+                tag, payload = client.read_message()
+                if tag == b"d":
+                    lines.append(payload.decode())
+                elif tag == b"Z":
+                    break
+            assert lines == want, opts
+
     def test_copy_from_view_rejected(self, client):
         res = client.query("COPY wnation FROM STDIN")
         assert res["errors"] and res["errors"][0][b"C"] == "42809"

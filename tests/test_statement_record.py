@@ -102,6 +102,22 @@ class TestKindTable:
                 allowed = False
             assert allowed == exempt, kind
 
+    def test_parenthesized_statement_has_its_kind(self, engine):
+        from datafusion_postgres_spark.server.pgwire import _Conn
+        from datafusion_postgres_spark.server.prepared import (
+            PreparedStatementManager)
+
+        tp = PostgresTranspiler()
+        assert tp.statement_kind("( (SELECT 1))") == "SELECT"
+        assert tp.statement_kind("(VALUES (1)) UNION (VALUES (2))") == \
+            "VALUES"
+        assert "" not in KINDS  # a statement with no keyword is a read
+        mgr = PreparedStatementManager(engine)
+        mgr.parse("paren", "(SELECT 1 AS one)")
+        conn = SimpleNamespace(engine=engine)
+        assert _Conn._describe_rows(conn, mgr.describe("paren"), [])[:1] \
+            == b"T"  # RowDescription, not NoData
+
 
 class TestSettingsAreLazy:
     def test_set_reset_set_config_make_no_spark_sql_call(self, engine,
@@ -138,6 +154,13 @@ class TestSettingsAreLazy:
         finally:
             engine.execute("RESET application_name")
 
+    def test_backslash_value_reaches_current_setting(self, engine):
+        try:
+            engine.execute("SET application_name = 'a\\'")
+            assert self._agree(engine, "application_name") == "a\\"
+        finally:
+            engine.execute("RESET application_name")
+
 
 class TestOnlyDdlDirtiesTheCatalog:
     def test_writes_skip_the_refresh_and_ddl_runs_it(self, engine,
@@ -165,3 +188,22 @@ class TestOnlyDdlDirtiesTheCatalog:
         finally:
             engine.execute("DROP TABLE IF EXISTS zz_dirty_a")
             engine.execute("DROP TABLE IF EXISTS zz_dirty_b")
+
+    def test_copy_and_declare_see_a_new_temp_view(self, engine):
+        def pg_class(view):
+            return ("SELECT relname FROM pg_catalog.pg_class "
+                    f"WHERE relname = '{view}'")
+
+        try:
+            engine.execute("CREATE TEMP VIEW zz_copy_v AS SELECT 1 AS x")
+            res = engine.execute(f"COPY ({pg_class('zz_copy_v')}) TO STDOUT")
+            assert [r[0] for r in res[0].rows()] == ["zz_copy_v"]
+            engine.execute("CREATE TEMP VIEW zz_cursor_v AS SELECT 1 AS x")
+            engine.execute(
+                f"DECLARE zz_c CURSOR FOR {pg_class('zz_cursor_v')}")
+            res = engine.execute("FETCH ALL FROM zz_c")
+            assert [r[0] for r in res[0].rows()] == ["zz_cursor_v"]
+        finally:
+            engine.execute("CLOSE ALL")
+            engine.execute("DROP VIEW IF EXISTS zz_copy_v")
+            engine.execute("DROP VIEW IF EXISTS zz_cursor_v")
