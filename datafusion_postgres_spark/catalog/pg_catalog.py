@@ -554,6 +554,14 @@ def _proc_rows() -> list:
 
 
 def _static_views(spark: SparkSession) -> None:
+    """Build every view that no relation or setting changes; the rest of
+    the reference's catalog tables become typed empty shells."""
+    built: set[str] = set()
+
+    def build(name: str, schema: StructType, rows: list) -> None:
+        _view(spark, name, schema, rows)
+        built.add(name)
+
     # ---- pg_type ----
     type_schema = StructType([
         StructField("oid", IntegerType()), StructField("typname", StringType()),
@@ -578,7 +586,7 @@ def _static_views(spark: SparkSession) -> None:
              typlen in (1, 2, 4, 8), "b", cat, True, ",", 0, elem, arr, 0,
              -1, 1 if cat == "A" else 0, 0, False, None)
             for (name, oid, typlen, cat, elem, arr) in _PG_TYPES]
-    _view(spark, "pg_catalog_pg_type", type_schema, rows)
+    build("pg_catalog_pg_type", type_schema, rows)
 
     # ---- pg_proc (every registered engine function, real type OIDs,
     #      psql-\df metadata: signature/result text + prosrc) ----
@@ -596,14 +604,14 @@ def _static_views(spark: SparkSession) -> None:
         StructField("proresult_text", StringType()),
         StructField("prosrc", StringType())])
     proc_rows = _proc_rows()
-    _view(spark, "pg_catalog_pg_proc", proc_schema, proc_rows)
+    build("pg_catalog_pg_proc", proc_schema, proc_rows)
 
     # ---- pg_am ----
     am_schema = StructType([
         StructField("oid", IntegerType()), StructField("amname", StringType()),
         StructField("amhandler", IntegerType()),
         StructField("amtype", StringType())])
-    _view(spark, "pg_catalog_pg_am", am_schema,
+    build("pg_catalog_pg_am", am_schema,
           [(2, "heap", 0, "t"), (403, "btree", 0, "i"), (405, "hash", 0, "i")])
 
     # ---- operator classes/families + member operators (round 4) ----
@@ -611,13 +619,13 @@ def _static_views(spark: SparkSession) -> None:
     # pg_opclass ⋈ pg_am ⋈ pg_opfamily and pg_amop ⋈ pg_operator; the
     # reference ships real exported rows (pg_catalog.rs:121-194).
     from datafusion_postgres_spark.catalog import opclass_ref as OCR
-    _view(spark, "pg_catalog_pg_opfamily", StructType([
+    build("pg_catalog_pg_opfamily", StructType([
         StructField("oid", IntegerType()),
         StructField("opfmethod", IntegerType()),
         StructField("opfname", StringType()),
         StructField("opfnamespace", IntegerType()),
         StructField("opfowner", IntegerType())]), OCR.opfamily_rows())
-    _view(spark, "pg_catalog_pg_opclass", StructType([
+    build("pg_catalog_pg_opclass", StructType([
         StructField("oid", IntegerType()),
         StructField("opcmethod", IntegerType()),
         StructField("opcname", StringType()),
@@ -627,7 +635,7 @@ def _static_views(spark: SparkSession) -> None:
         StructField("opcintype", IntegerType()),
         StructField("opcdefault", BooleanType()),
         StructField("opckeytype", IntegerType())]), OCR.opclass_rows())
-    _view(spark, "pg_catalog_pg_amop", StructType([
+    build("pg_catalog_pg_amop", StructType([
         StructField("oid", IntegerType()),
         StructField("amopfamily", IntegerType()),
         StructField("amoplefttype", IntegerType()),
@@ -637,14 +645,14 @@ def _static_views(spark: SparkSession) -> None:
         StructField("amopopr", IntegerType()),
         StructField("amopmethod", IntegerType()),
         StructField("amopsortfamily", IntegerType())]), OCR.amop_rows())
-    _view(spark, "pg_catalog_pg_amproc", StructType([
+    build("pg_catalog_pg_amproc", StructType([
         StructField("oid", IntegerType()),
         StructField("amprocfamily", IntegerType()),
         StructField("amproclefttype", IntegerType()),
         StructField("amprocrighttype", IntegerType()),
         StructField("amprocnum", ShortType()),
         StructField("amproc", StringType())]), OCR.amproc_rows())
-    _view(spark, "pg_catalog_pg_operator", StructType([
+    build("pg_catalog_pg_operator", StructType([
         StructField("oid", IntegerType()),
         StructField("oprname", StringType()),
         StructField("oprnamespace", IntegerType()),
@@ -660,7 +668,7 @@ def _static_views(spark: SparkSession) -> None:
         StructField("oprcode", StringType())]), OCR.operator_rows())
 
     # ---- pg_namespace (pg_catalog/pg_namespace.rs) ----
-    _view(spark, "pg_catalog_pg_namespace", StructType([
+    build("pg_catalog_pg_namespace", StructType([
         StructField("oid", IntegerType()), StructField("nspname", StringType()),
         StructField("nspowner", IntegerType()),
         StructField("nspacl", StringType())]), [
@@ -669,7 +677,7 @@ def _static_views(spark: SparkSession) -> None:
         (13000, "information_schema", 10, None)])
 
     # ---- pg_database (pg_catalog/pg_database.rs) ----
-    _view(spark, "pg_catalog_pg_database", StructType([
+    build("pg_catalog_pg_database", StructType([
         StructField("oid", IntegerType()), StructField("datname", StringType()),
         StructField("datdba", IntegerType()),
         StructField("encoding", IntegerType()),
@@ -683,7 +691,7 @@ def _static_views(spark: SparkSession) -> None:
         [(1, "postgres", 10, 6, "c", False, True, -1, "C", "C", None)])
 
     # ---- pg_roles (pg_roles.rs) ----
-    _view(spark, "pg_catalog_pg_roles", StructType([
+    build("pg_catalog_pg_roles", StructType([
         StructField("oid", IntegerType()), StructField("rolname", StringType()),
         StructField("rolsuper", BooleanType()),
         StructField("rolinherit", BooleanType()),
@@ -700,12 +708,12 @@ def _static_views(spark: SparkSession) -> None:
           "********", None, True, None)])
 
     # ---- empty view-style tables (pg_views.rs, pg_replication_slot.rs) ----
-    _view(spark, "pg_catalog_pg_views", StructType([
+    build("pg_catalog_pg_views", StructType([
         StructField("schemaname", StringType()),
         StructField("viewname", StringType()),
         StructField("viewowner", StringType()),
         StructField("definition", StringType())]), [])
-    _view(spark, "pg_catalog_pg_matviews", StructType([
+    build("pg_catalog_pg_matviews", StructType([
         StructField("schemaname", StringType()),
         StructField("matviewname", StringType()),
         StructField("matviewowner", StringType()),
@@ -718,37 +726,37 @@ def _static_views(spark: SparkSession) -> None:
     # RESOLVE — schemata populated, routines derived from pg_proc, the
     # constraint family truthfully empty (parquet views have no
     # constraints) ----
-    _view(spark, "information_schema_schemata", StructType([
+    build("information_schema_schemata", StructType([
         StructField("catalog_name", StringType()),
         StructField("schema_name", StringType()),
         StructField("schema_owner", StringType())]), [
         ("postgres", "public", "postgres"),
         ("postgres", "pg_catalog", "postgres"),
         ("postgres", "information_schema", "postgres")])
-    _view(spark, "information_schema_views", StructType([
+    build("information_schema_views", StructType([
         StructField("table_catalog", StringType()),
         StructField("table_schema", StringType()),
         StructField("table_name", StringType()),
         StructField("view_definition", StringType())]), [])
-    _view(spark, "information_schema_table_constraints", StructType([
+    build("information_schema_table_constraints", StructType([
         StructField("constraint_catalog", StringType()),
         StructField("constraint_schema", StringType()),
         StructField("constraint_name", StringType()),
         StructField("table_schema", StringType()),
         StructField("table_name", StringType()),
         StructField("constraint_type", StringType())]), [])
-    _view(spark, "information_schema_key_column_usage", StructType([
+    build("information_schema_key_column_usage", StructType([
         StructField("constraint_name", StringType()),
         StructField("table_schema", StringType()),
         StructField("table_name", StringType()),
         StructField("column_name", StringType()),
         StructField("ordinal_position", IntegerType())]), [])
-    _view(spark, "information_schema_referential_constraints", StructType([
+    build("information_schema_referential_constraints", StructType([
         StructField("constraint_name", StringType()),
         StructField("unique_constraint_name", StringType()),
         StructField("update_rule", StringType()),
         StructField("delete_rule", StringType())]), [])
-    _view(spark, "information_schema_routines", StructType([
+    build("information_schema_routines", StructType([
         StructField("routine_catalog", StringType(), False),
         StructField("routine_schema", StringType(), False),
         StructField("routine_name", StringType()),
@@ -926,7 +934,7 @@ def _static_views(spark: SparkSession) -> None:
           ("is_dst", BooleanType())]),
     ]:
         schema = StructType([StructField(n, t) for n, t in fields])
-        _view(spark, name, schema, [])
+        build(name, schema, [])
 
     # ---- user views backed by the role model ----
     user_schema = StructType([
@@ -934,20 +942,20 @@ def _static_views(spark: SparkSession) -> None:
         StructField("usecreatedb", BooleanType()),
         StructField("usesuper", BooleanType()),
         StructField("passwd", StringType())])
-    _view(spark, "pg_catalog_pg_user", user_schema,
+    build("pg_catalog_pg_user", user_schema,
           [("postgres", 10, True, True, "********")])
-    _view(spark, "pg_catalog_pg_shadow", user_schema,
+    build("pg_catalog_pg_shadow", user_schema,
           [("postgres", 10, True, True, "********")])
     group_schema = StructType([
         StructField("groname", StringType()), StructField("grosysid", IntegerType()),
         StructField("grolist", StringType())])
-    _view(spark, "pg_catalog_pg_group", group_schema, [])
+    build("pg_catalog_pg_group", group_schema, [])
 
     tz_schema = StructType([
         StructField("name", StringType()), StructField("abbrev", StringType()),
         StructField("utc_offset", StringType()),
         StructField("is_dst", BooleanType())])
-    _view(spark, "pg_catalog_pg_timezone_names", tz_schema, [
+    build("pg_catalog_pg_timezone_names", tz_schema, [
         ("UTC", "UTC", "00:00:00", False),
         ("America/New_York", "EST", "-05:00:00", False),
         ("America/Chicago", "CST", "-06:00:00", False),
@@ -979,14 +987,15 @@ def _static_views(spark: SparkSession) -> None:
                 "similar", "some", "symmetric", "table", "then", "to",
                 "trailing", "true", "union", "unique", "user", "using",
                 "variadic", "verbose", "when", "where", "window", "with"]
-    _view(spark, "pg_catalog_pg_get_keywords", kw_schema,
+    build("pg_catalog_pg_get_keywords", kw_schema,
           [(w, "R", False, "reserved", None) for w in keywords])
 
     # ---- every remaining reference catalog table: typed empty shell ----
     # Long-tail catalogs no client ever writes (pg_amop, pg_shdepend, ...)
     # still need to RESOLVE with the stock column set for deep
-    # introspection; an empty result is the truthful content.
+    # introspection; an empty result is the truthful content. pg_class and
+    # pg_attribute are refresh's.
     for tbl in PG_CATALOG_REF_SCHEMAS:
         view = f"pg_catalog_{tbl}"
-        if not spark.catalog.tableExists(view):
-            _view(spark, view, StructType([]), [])
+        if view not in built and tbl not in ("pg_class", "pg_attribute"):
+            build(view, StructType([]), [])

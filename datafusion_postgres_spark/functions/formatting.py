@@ -63,24 +63,18 @@ def translate_datetime_pattern(pg_pattern: str) -> str:
     return "".join(out)
 
 
-def register_formatting(spark) -> None:
-    """SQL UDFs with literal-pattern translation handled by the dialect
-    rule (rewrite_to_char); these registrations cover the direct-call path
-    with already-translated patterns."""
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION pg_to_char_ts"
-        "(ts TIMESTAMP_NTZ, fmt STRING) RETURNS STRING "
-        "RETURN date_format(ts, fmt)")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION pg_to_char_num"
-        "(v DOUBLE, fmt STRING) RETURNS STRING "
-        # common numeric patterns: FM999.99 style -> format_number digits
-        "RETURN format_number(v, greatest(length(fmt) - length(replace(fmt, '9', '')) "
-        "- length(replace(fmt, '0', '')), 0))")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION pg_to_date"
-        "(s STRING, fmt STRING) RETURNS DATE RETURN to_date(s, fmt)")
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION pg_to_timestamp"
-        "(s STRING, fmt STRING) RETURNS TIMESTAMP_NTZ "
-        "RETURN to_timestamp_ntz(s, fmt)")
+# SQL UDFs for the direct-call path with already-translated patterns;
+# a literal pattern is translated at the call site by the dialect rule
+# (rewrite_to_char). Registered with the other SQL UDFs
+# (functions/registry.py).
+FORMATTING_SQL_UDFS: list[tuple[str, str, str, str]] = [
+    ("pg_to_char_ts", "ts TIMESTAMP_NTZ, fmt STRING", "STRING",
+     "date_format(ts, fmt)"),
+    ("pg_to_char_num", "v DOUBLE, fmt STRING", "STRING",
+     # common numeric patterns: FM999.99 style -> format_number digits
+     "format_number(v, greatest(length(fmt) - length(replace(fmt, '9', '')) "
+     "- length(replace(fmt, '0', '')), 0))"),
+    ("pg_to_date", "s STRING, fmt STRING", "DATE", "to_date(s, fmt)"),
+    ("pg_to_timestamp", "s STRING, fmt STRING", "TIMESTAMP_NTZ",
+     "to_timestamp_ntz(s, fmt)"),
+]

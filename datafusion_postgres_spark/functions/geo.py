@@ -81,12 +81,10 @@ def _parse_ewkb_point(raw) -> tuple[float, float] | None:
 
 
 def register_geo(spark: SparkSession) -> None:
-    """SQL-UDF point surface + the EWKB byte-packing Pandas UDFs."""
+    """The EWKB byte-packing Pandas UDFs. The SQL-UDF point surface
+    (:data:`GEO_SQL_UDFS`) is created with the other SQL UDFs
+    (functions/registry.py)."""
     from pyspark.sql.functions import pandas_udf
-
-    for name, args, ret, body in GEO_SQL_UDFS:
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-                  f"RETURNS {ret} RETURN {body}")
 
     @pandas_udf("binary")
     def st_asewkb(g: pd.Series, srid: pd.Series) -> pd.Series:

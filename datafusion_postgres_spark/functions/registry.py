@@ -19,7 +19,10 @@ exist in Spark 4 under the same names (math.slt parity via tests).
 from __future__ import annotations
 
 import math
+import os
+import re
 import unicodedata
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +30,10 @@ from pyspark.sql import SparkSession
 _UNICODE_VERSION_BODY = f"'{unicodedata.unidata_version}'"
 
 from datafusion_postgres_spark.functions import fts as _fts  # noqa: E402
+from datafusion_postgres_spark.functions.formatting import (  # noqa: E402
+    FORMATTING_SQL_UDFS)
+from datafusion_postgres_spark.functions.geo import (  # noqa: E402
+    GEO_SQL_UDFS, register_geo)
 
 # name -> (args, return type, body). Dispatched once per session.
 # a jsonpath needs the Python evaluator when it carries a filter step or
@@ -861,42 +868,110 @@ def _needs_catalog(body: str) -> bool:
     return "pg_catalog_pg_" in body
 
 
-# Each step below is done in a session (or a clone of one) when the last
-# function it registers exists there: the state lives in the session.
+_CALL = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(")
+
+
+def function_calls(specs: list[tuple[str, str, str, str]]
+                   ) -> dict[str, set[str]]:
+    """Name -> the other ``specs`` its argument defaults or body call.
+    CREATE analyzes a body, so every function it calls must exist first;
+    a word before ``(`` that names no spec (a builtin, a type) is no
+    edge."""
+    names = {name.lower() for name, _a, _r, _b in specs}
+    return {name.lower(): {c.lower() for c in _CALL.findall(f"{args} {body}")}
+            & names - {name.lower()}
+            for name, args, _r, body in specs}
+
+
+def dependency_levels(specs: list[tuple[str, str, str, str]]
+                      ) -> list[list[tuple[str, str, str, str]]]:
+    """``specs`` grouped into levels: a function sits one level above the
+    highest one it calls, so a level's CREATEs can run at once after the
+    levels before it. List order is kept inside a level."""
+    calls = function_calls(specs)
+    level: dict[str, int] = {}
+
+    def place(name: str, path: tuple = ()) -> int:
+        if name not in level:
+            if name in path:
+                raise ValueError("SQL functions call each other in a "
+                                 f"cycle: {' -> '.join(path + (name,))}")
+            level[name] = 1 + max((place(c, path + (name,))
+                                   for c in calls[name]), default=-1)
+        return level[name]
+
+    out: list[list] = [[] for _ in range(max(map(place, calls)) + 1)]
+    for spec in specs:
+        out[level[spec[0].lower()]].append(spec)
+    return out
+
+
+# Every CREATE TEMPORARY FUNCTION of the engine, in dependency levels: the
+# catalog-free ones, then those whose bodies query the pg_catalog views.
+_SQL_FUNCTIONS = SQL_UDFS + SQL_UDTFS + FORMATTING_SQL_UDFS + GEO_SQL_UDFS
+FREE_LEVELS = dependency_levels(
+    [s for s in _SQL_FUNCTIONS if not _needs_catalog(s[3])])
+CATALOG_LEVELS = dependency_levels(
+    [s for s in _SQL_FUNCTIONS if _needs_catalog(s[3])])
+
+# Each build below is done in a session (or a clone of one) when the
+# function it creates last exists there: the state lives in the session,
+# and a build that fails part-way leaves the marker out, so the next call
+# runs it whole.
 _FUNCTIONS_DONE = "st_geomfromewkb"  # register_geo's last registration
-_CATALOG_DONE = [n for n, _a, _r, b in SQL_UDFS if _needs_catalog(b)][-1]
+_CATALOG_MARKER = CATALOG_LEVELS[-1][-1]  # nothing calls the last level
+_CATALOG_DONE = _CATALOG_MARKER[0]
 
 
-def register_functions(spark: SparkSession) -> None:
-    """Register the catalog-FREE function surface (idempotent, cheap).
+def _create(spark: SparkSession, spec: tuple[str, str, str, str]) -> None:
+    """One CREATE; its error names the function."""
+    name, args, ret, body = spec
+    try:
+        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
+                  f"RETURNS {ret} RETURN {body}")
+    except Exception as exc:
+        raise RuntimeError(f"cannot create function {name}: {exc}") from exc
 
-    This is the driver/bench path: no pg_catalog bootstrap (which costs
-    ~20s of view materialization a query-only workload never touches).
-    Server sessions use :func:`register_all`, which adds the catalog views
-    and the catalog-querying UDFs (to_regclass & friends) on top.
-    """
-    if spark.catalog.functionExists(_FUNCTIONS_DONE):
-        return
-    # python-backed UDFs first: SQL UDF bodies that wrap them (normalize,
-    # pg_sleep_for/until) are analyzed at CREATE time
+
+def _create_levels(spark: SparkSession, pool: ThreadPoolExecutor,
+                   levels: list[list[tuple[str, str, str, str]]]) -> None:
+    """Create ``levels`` one after another, each level's functions at once
+    on ``pool``. The caller waits for the pool, so it must not be one of
+    the pool's own threads: with one worker that would deadlock."""
+    for level in levels:
+        for future in [pool.submit(_create, spark, s) for s in level]:
+            future.result()
+
+
+def _create_free(spark: SparkSession, pool: ThreadPoolExecutor) -> None:
+    """The python-backed UDFs first (SQL UDF bodies that wrap them, such
+    as normalize and pg_sleep_for, are analyzed at CREATE time), then the
+    catalog-free SQL levels; everything but the done-marker."""
     _register_special_math(spark)
     _register_text_py(spark)
     _register_jsonpath_py(spark)
-    for name, args, ret, body in SQL_UDFS:
-        if _needs_catalog(body):
-            continue
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-                  f"RETURNS {ret} RETURN {body}")
-    for name, args, ret, body in SQL_UDTFS:
-        try:
-            spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-                      f"RETURNS {ret} RETURN {body}")
-        except Exception:
-            pass  # SQL UDTF unsupported — explode(sequence()) covers SELECT pos
-    from datafusion_postgres_spark.functions.formatting import (
-        register_formatting)
-    register_formatting(spark)
-    from datafusion_postgres_spark.functions.geo import register_geo
+    _create_levels(spark, pool, FREE_LEVELS)
+
+
+def _pool_size(spark: SparkSession) -> int:
+    """Threads for the CREATEs: the session's parallelism, capped at the
+    CPUs this process may run on (each CREATE is JVM parse + analysis)."""
+    return max(1, min(spark.sparkContext.defaultParallelism,
+                      len(os.sched_getaffinity(0))))
+
+
+def register_functions(spark: SparkSession) -> None:
+    """Register the catalog-FREE function surface (idempotent).
+
+    This is the driver/bench path: no pg_catalog bootstrap, which a
+    query-only workload never touches. Server sessions use
+    :func:`register_all`, which adds the catalog views and the
+    catalog-querying UDFs (to_regclass & friends) on top.
+    """
+    if spark.catalog.functionExists(_FUNCTIONS_DONE):
+        return
+    with ThreadPoolExecutor(_pool_size(spark)) as pool:
+        _create_free(spark, pool)
     register_geo(spark)
 
 
@@ -905,16 +980,25 @@ def register_all(spark: SparkSession) -> None:
 
     Full surface = catalog-free functions + pg_catalog views + the UDFs
     whose bodies query those views (analyzed at CREATE time, so the views
-    must exist first)."""
+    must exist first). ``bootstrap`` runs on the calling thread while a
+    helper thread drives the catalog-free levels through the pool; the
+    catalog-querying levels follow both."""
     if spark.catalog.functionExists(_CATALOG_DONE):
         return
     from datafusion_postgres_spark.catalog.pg_catalog import bootstrap
-    bootstrap(spark)
-    register_functions(spark)
-    for name, args, ret, body in SQL_UDFS:
-        if _needs_catalog(body):
-            spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({args}) "
-                      f"RETURNS {ret} RETURN {body}")
+    free_done = spark.catalog.functionExists(_FUNCTIONS_DONE)
+    with ThreadPoolExecutor(_pool_size(spark)) as pool, \
+            ThreadPoolExecutor(1) as waves:
+        free = None if free_done else waves.submit(_create_free, spark, pool)
+        bootstrap(spark)
+        if free is not None:
+            free.result()
+        _create_levels(spark, pool, [
+            [s for s in level if s != _CATALOG_MARKER]
+            for level in CATALOG_LEVELS])
+    if not free_done:
+        register_geo(spark)
+    _create(spark, _CATALOG_MARKER)
 
 
 def refresh_current_setting(spark: SparkSession, session_vars: dict) -> None:

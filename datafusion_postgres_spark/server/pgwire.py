@@ -99,8 +99,8 @@ def _copy_field(opts):
     """(value text or None -> its COPY TO field, the delimiter), as
     PostgreSQL writes text and csv: text backslash-escapes the delimiter,
     backslash and control characters; csv quotes a value holding the
-    delimiter, a quote, CR or LF; NULL is the NULL option (text ``\\N``,
-    csv empty)."""
+    delimiter, a quote, CR or LF, or equal to the NULL string; NULL is
+    the NULL option (text ``\\N``, csv empty)."""
     if opts.format == "csv":
         delimiter = opts.delimiter or ","
         null = "" if opts.null is None else opts.null
@@ -108,7 +108,8 @@ def _copy_field(opts):
         def csv_field(v):
             if v is None:
                 return null
-            if '"' in v or delimiter in v or "\n" in v or "\r" in v:
+            if (v == null or '"' in v or delimiter in v or "\n" in v
+                    or "\r" in v):
                 return '"' + v.replace('"', '""') + '"'
             return v
         return csv_field, delimiter
@@ -753,6 +754,9 @@ class _Conn(socketserver.BaseRequestHandler):
         if not record.props.rows:
             return _msg(b"n", b"")  # NoData
         try:
+            # a denied statement answers NoData, as its Execute fails; the
+            # probe only plans, so no pipeline TVF builder runs here
+            self.engine._check_permissions(record)
             nulls = {f"p{i + 1}": None for i in range(stmt.num_params)}
             schema = self.engine._sql(record, nulls or None).schema
             return _row_description(

@@ -604,6 +604,23 @@ class TestCopyOut:
                     break
             assert lines == want, opts
 
+    def test_csv_quotes_a_value_equal_to_the_null_string(self, client):
+        # PostgreSQL's CopyAttributeOutCSV quotes a non-NULL value that
+        # reads like the NULL string, so COPY FROM can tell them apart
+        sql = "SELECT '' AS e, CAST(NULL AS STRING) AS n, 'x' AS x"
+        for opts, want in (("FORMAT csv", ['"",,x\n']),
+                           ("FORMAT csv, NULL 'x'", [',x,"x"\n'])):
+            body = f"COPY ({sql}) TO STDOUT WITH ({opts})".encode() + b"\x00"
+            client.sock.sendall(b"Q" + struct.pack("!I", len(body) + 4) + body)
+            lines = []
+            while True:
+                tag, payload = client.read_message()
+                if tag == b"d":
+                    lines.append(payload.decode())
+                elif tag == b"Z":
+                    break
+            assert lines == want, opts
+
     def test_copy_from_view_rejected(self, client):
         res = client.query("COPY wnation FROM STDIN")
         assert res["errors"] and res["errors"][0][b"C"] == "42809"
@@ -914,6 +931,43 @@ class TestProtocolsAgree:
         rows = [_text_cells(p) for t, p in msgs if t == b"D"]
         assert rows and all(len(r) == 1 for r in rows)
         assert _tags(msgs) == ["EXPLAIN"]
+
+    def test_describe_checks_permissions(self, spark, server):
+        """Describe answers NoData where Execute would be denied, so a
+        user without the grant never sees the table's columns."""
+        from datafusion_postgres_spark.server.auth import (
+            Permission, Resource, User)
+
+        spark.read.parquet("/root/testdata/sf0.001/nation.parquet") \
+            .createOrReplaceTempView("zz_desc_nation")  # in every clone
+        server.auth.add_user(User("zz_desc_none"))
+        server.auth.add_user(User("zz_desc_reader", roles=["zz_desc_r"]))
+        server.auth.grant("zz_desc_r", Permission.SELECT,
+                          Resource("table", "public.zz_desc_nation"))
+        sql = "SELECT * FROM zz_desc_nation"
+        try:
+            for user, allowed in (("zz_desc_none", False),
+                                  ("zz_desc_reader", True)):
+                c = MiniPgClient(server.host, server.port, user=user)
+                try:
+                    _frame(c, b"P", b"\x00" + sql.encode() + b"\x00\x00\x00")
+                    _frame(c, b"D", b"S\x00")
+                    _frame(c, b"S", b"")
+                    msgs = _until_ready(c)
+                    assert [t for t, _ in msgs] == [
+                        b"1", b"t", b"T" if allowed else b"n", b"Z"], user
+                    if allowed:
+                        (desc,) = [_row_desc(p) for t, p in msgs
+                                   if t == b"T"]
+                        assert [name for name, _, _ in desc][:2] == [
+                            "n_nationkey", "n_name"]
+                    errors = c.query(sql)["errors"]
+                    assert [e[b"C"] for e in errors] == (
+                        [] if allowed else ["42501"])
+                finally:
+                    c.close()
+        finally:
+            spark.catalog.dropTempView("zz_desc_nation")
 
     def test_describe_unknown_portal(self, client):
         _frame(client, b"D", b"Pno_such_portal\x00")
